@@ -2,17 +2,18 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The library's front door: a SparkSession builder with the engine's
-  * session defaults applied. All of these matter at cluster scale and are
-  * the same knobs a 1000-executor deployment would set:
+/** The library's one session factory. The builder sets only what must be
+  * fixed before the session exists or differs from Spark's defaults:
   *
+  *  - the master;
   *  - shuffle partitions sized to the parallelism at hand (not the 200
   *    default);
-  *  - AQE on, with coalescing and skew-join splitting (runtime re-plan);
-  *  - 128 MiB file split targets so scan tasks stay balanced;
-  *  - ANSI off + UTC to match the engine's null-on-failure parse semantics
-  *    and oracle formatting;
-  *  - the engine's extensions (native functions) injected.
+  *  - zstd as the parquet codec.
+  *
+  * Every other engine setting and every registration (functions, optimizer
+  * rules, the as-of strategy) is applied at runtime by [[Tables.configure]],
+  * so callers build here, add their deployment settings (UI, directories),
+  * then call `Tables.configure` once; [[get]] does both.
   */
 object GraftSession {
   def builder(master: String = "local[*]",
@@ -20,16 +21,8 @@ object GraftSession {
       : SparkSession.Builder =
     SparkSession.builder()
       .master(master)
-      .withExtensions(new graft.expressions.GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", s"${128 * 1024 * 1024}")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.compression.codec", "zstd")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 
   def get(master: String = "local[*]"): SparkSession = {
     val s = builder(master).getOrCreate()

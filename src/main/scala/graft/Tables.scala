@@ -2,12 +2,13 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Parquet table loaders over a scale-factor directory (TESTDATA.md) and the
-  * one place session confs every query relies on are pinned.
+/** Parquet table loaders over a scale-factor directory (TESTDATA.md) and
+  * the one place engine settings and registrations live.
   *
-  * Confs are set at runtime (all three are runtime-settable) so queries behave
-  * identically whether run through Verify, Bench, a test suite, or the
-  * driver's own session:
+  * [[configure]] is idempotent and works on any session — one built by
+  * [[GraftSession]] or one a host application built itself — so queries
+  * behave identically through Verify, Bench, a test suite or that
+  * session. It pins the runtime-settable confs every query relies on:
   *  - `ansi.enabled=false`: the reference tolerates malformed values by
   *    null-ing them (e.g. Polars `strptime(strict=False)`,
   *    reference `scripts/transform.py:47`), so casts/parses must be
@@ -16,6 +17,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    DuckDB oracle.
   *  - AQE on: runtime shuffle coalescing + skew-join handling — part of the
   *    100 TB posture.
+  * and registers, each exactly once, the native functions (`cosine_sim`,
+  * `int_gcd`), the optimizer rules (`ApproxDistinctRewrite`,
+  * `MaterializedAgg.Rewrite`) and the as-of join strategy.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -32,8 +36,6 @@ object Tables {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     graft.expressions.CosineSimilarity.register(spark)
     graft.expressions.Gcd.register(spark)
-    // runtime twin of GraftExtensions' injectOptimizerRule, for sessions
-    // not built via GraftSession (same pattern as AsofJoin.ensureStrategy)
     val rules = Seq(graft.plans.ApproxDistinctRewrite(),
       graft.plans.MaterializedAgg.Rewrite())
     rules.foreach { r =>
@@ -41,6 +43,7 @@ object Tables {
         spark.experimental.extraOptimizations =
           spark.experimental.extraOptimizations :+ r
     }
+    graft.plans.AsofJoinOps.registerStrategy(spark)
   }
 
   /** Load one table; column pruning + predicate pushdown reach the parquet

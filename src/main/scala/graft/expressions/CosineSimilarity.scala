@@ -1,7 +1,6 @@
 package graft.expressions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -96,9 +95,10 @@ object CosineSimilarity {
       GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
   }
 
-  /** Runtime registration (idempotent) so `expr("cosine_sim(a, b)")` and
-    * SQL work on any session — called from Tables.configure. Guarded on
-    * functionExists: createOrReplaceTempFunction emits a
+  /** Registration (idempotent) so `expr("cosine_sim(a, b)")` and SQL
+    * work on any session — the engine's only path, called from
+    * Tables.configure. Guarded on functionExists:
+    * createOrReplaceTempFunction emits a
     * SimpleFunctionRegistry "replaced a previously registered function"
     * WARN on every repeat call, and configure runs per table load — the
     * unguarded flood pushed the bench JSON line out of the driver's tail
@@ -109,26 +109,5 @@ object CosineSimilarity {
         org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim")))
       reg.createOrReplaceTempFunction(
         "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
-  }
-}
-
-/** Build-time registration for sessions created with
-  * `.withExtensions(new GraftExtensions)`: the native cosine_sim
-  * expression and the AsofJoin planner strategy. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[CosineSimilarity].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("int_gcd"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[Gcd].getName, "int_gcd"),
-      (exprs: Seq[Expression]) => Gcd(exprs(0), exprs(1))))
-    e.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
-    e.injectOptimizerRule(_ => graft.plans.ApproxDistinctRewrite())
-    e.injectOptimizerRule(_ => graft.plans.MaterializedAgg.Rewrite())
   }
 }

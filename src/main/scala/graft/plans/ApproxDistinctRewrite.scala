@@ -27,10 +27,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *    column names still read `count(DISTINCT x)`, which is the point:
   *    the CONSUMER opted into approximation, the query didn't.
   *
-  * Registered via [[graft.expressions.GraftExtensions]] — together with the
-  * `cosine_sim` expression (injectFunction, codegen) and the as-of join
-  * strategy (injectPlannerStrategy), this exercises the third Catalyst
-  * extension surface, injectOptimizerRule. User-provided rules run after
+  * Registered by [[graft.Tables.configure]] as a user-provided optimizer
+  * rule, next to the `cosine_sim` function and the as-of join strategy.
+  * User-provided rules run after
   * the main optimizer batches but BEFORE single-distinct aggregates are
   * planned physically (only multi-distinct is expanded earlier by
   * RewriteDistinctAggregates), so the `isDistinct` flag is still visible

@@ -209,8 +209,9 @@ object AsofJoinOps {
     org.apache.spark.sql.GraftSqlBridge.ofRows(spark, plan)
   }
 
-  /** Idempotent runtime registration (also injectable at build time via
-    * GraftExtensions for sessions constructed with `.withExtensions`). */
+  /** Idempotent registration of [[AsofJoinStrategy]] — called from
+    * Tables.configure, and from `asofLeft` so the operator also plans on
+    * a session that was never configured. */
   def registerStrategy(spark: SparkSession): Unit =
     if (!spark.experimental.extraStrategies.contains(AsofJoinStrategy))
       spark.experimental.extraStrategies =

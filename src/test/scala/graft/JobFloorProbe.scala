@@ -1,11 +1,10 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Dev probe (Test/runMain graft.JobFloorProbe <q1,q2,...> [sfDir] [cpus]):
-  * the multi-query, bench-config generalization of [[CcFloorProbe]] — for
+  * counts Spark jobs, stages, tasks and summed task run time — for
   * each named query, one warm-up run then one measured run under the SAME
   * session shape as graft.Bench (local[cpus], shuffle.partitions=cpus),
   * reporting wall seconds plus the load-independent structural counters
@@ -19,14 +18,10 @@ object JobFloorProbe {
     val qs = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val sf = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val cpus = if (args.length > 2) args(2) else "32"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    Tables.configure(spark)
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new AtomicInteger; val stages = new AtomicInteger
     val tasks = new AtomicInteger; val taskMs = new AtomicLong

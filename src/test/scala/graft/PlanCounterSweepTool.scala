@@ -9,7 +9,7 @@ import graft.operators.PlanAudit
   * nested_loop_joins, codegen_spans, nodes, unpartitioned_windows,
   * single_partition_exchanges, reused_exchanges, reused_subqueries.
   * Audit failures are loud (stderr + nonzero exit) — a silently-absent
-  * entry would under-pin (the WindowSweepTool lesson, ADVICE r15). */
+  * entry would under-pin (the window-sweep lesson, ADVICE r15). */
 object PlanCounterSweepTool {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty,

@@ -345,7 +345,7 @@ class PlanSpec extends SparkSuite {
     * ride PrefixScan). Every such site must be enrolled here with its
     * bounding set named — a NEW partition-less window fails the suite
     * until a human certifies its frame. Re-measure with
-    * `Test/runMain graft.WindowSweepTool`. */
+    * `Test/runMain graft.PlanCounterSweepTool unpartitioned_windows`. */
   test("no declared query grows an un-allowlisted partition-less window") {
     // query -> pinned count of partition-less WindowExec nodes, each over
     // a frame bounded by construction:
@@ -395,7 +395,8 @@ class PlanSpec extends SparkSuite {
         s"allowlist (over = a new un-certified one-task window — use " +
         s"GlobalRank/PrefixScan or certify the bound here; under = a " +
         s"stale entry whose leftover budget would hide the next new " +
-        s"one — re-measure with WindowSweepTool): $offenders")
+        s"one — re-measure with Test/runMain graft.PlanCounterSweepTool " +
+        s"unpartitioned_windows): $offenders")
   }
 
   /** Substrate sharing gated as data (round-15 verdict task 6): the memo
@@ -473,7 +474,7 @@ class PlanSpec extends SparkSuite {
     * sort or repartition(1), appearing where a bounded one used to be.
     * q332's 12 — the map's ceiling — is 6 column censuses × 2 global
     * scalar aggregates each, adjudicated r16. Re-measure with
-    * `Test/runMain graft.SpExchangeSweepTool`. */
+    * `Test/runMain graft.PlanCounterSweepTool single_partition_exchanges`. */
   test("single-partition exchange counts stay pinned per query") {
     val pinned: Map[String, Long] = Map(
       "q101_histogram" -> 1L,
@@ -604,7 +605,8 @@ class PlanSpec extends SparkSuite {
       s"single-partition exchange counts diverge from the pins (over = " +
         s"a global orderBy/coalesce(1)/repartition(1) crept in — " +
         s"restructure or adjudicate + re-pin; under = stale pin — " +
-        s"re-measure with SpExchangeSweepTool): $offenders")
+        s"re-measure with Test/runMain graft.PlanCounterSweepTool " +
+        s"single_partition_exchanges): $offenders")
   }
 
   /** The fourth blanket guard: every BroadcastNestedLoopJoin in the
