@@ -3,10 +3,11 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 
 /** The one place that knows how to find a checkpointed frame's cached
-  * blocks — shared by [[SessionDirMemoOf]]'s deferred eviction sweep and
-  * [[BpeTrainer]]'s per-round release (two hand-rolled copies of this
-  * collect had already diverged on error handling; a Spark upgrade that
-  * moves LogicalRDD must be absorbed exactly once, here). */
+  * blocks — used by the iterative loops' eager per-round release
+  * ([[BpeTrainer]], [[PrefixScan]]) and the plan gates' leaf checks; a
+  * Spark upgrade that moves LogicalRDD must be absorbed exactly once,
+  * here. Memo evictions do not come through here: Spark's ContextCleaner
+  * frees those blocks once nothing can reach them. */
 private[graft] object CheckpointBlocks {
 
   /** The LogicalRDD leaves of `df`'s analyzed plan — for an eagerly
@@ -22,7 +23,7 @@ private[graft] object CheckpointBlocks {
 
   /** Unpersist every checkpoint block behind `df`, non-blocking and
     * swallowing failures — callers use this only when nothing can read
-    * the frame again (a superseded iteration round, a swept eviction). */
+    * the frame again (a superseded iteration round). */
   def release(df: DataFrame): Unit =
     leaves(df).foreach { l =>
       try l.rdd.unpersist(blocking = false)

@@ -1,173 +1,37 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
-/** Two-slot LRU per-(session, dir) memo for an expensive shared stage,
-  * materialized behind an eager localCheckpoint — the build-once pattern
-  * the dedup pair graph, its CC closure, and the identity stitch all
-  * share (each feeds 3–7 standalone queries that would otherwise rebuild
-  * a bit-identical table).
+/** Two-slot LRU memo of an expensive shared stage, keyed by (session
+  * identity, dir). Two slots keep the correctness dir and the bench dir
+  * warm in one session; a third key drops the least-recently-used slot.
   *
-  * A FIXED slot count, deliberately: a cached DataFrame strongly
-  * references its SparkSession, so a weak-keyed map can never actually
-  * release entries (the classic WeakHashMap value-refers-to-key defect —
-  * the round-10 form of this memo documented weak keys that could not
-  * fire). A hard bound makes the retention EXPLICIT instead of
-  * aspirational: at most two (session, dir) builds are pinned, and the
-  * least-recently-used is dropped the moment a third key comes through —
-  * so a stopped session is held only until two newer builds, never for
-  * the JVM's life. An evicted checkpoint's blocks are released as soon
-  * as it is SAFE, not as soon as it is evicted: eager unpersist of a
-  * localCheckpoint'd frame that a caller still holds would hard-fail
-  * that reader (lineage is truncated — there is nothing to recompute;
-  * the old GC + ContextCleaner path only ever cleaned UNREACHABLE RDDs
-  * and could never do that, so eager eviction is NOT equivalent to it,
-  * ADVICE r13). Instead eviction parks the frames' cached RDDs behind a
-  * WeakReference to each checkpoint's LogicalRDD LEAF — the node every
-  * DERIVED plan retains (consumers call `.select`/`.groupBy` on the
-  * memoized frame and drop the Dataset wrapper immediately; a weak ref
-  * to the wrapper would clear while a derived reader is still pending
-  * and the sweep would break it). Each subsequent `get` sweeps the
-  * parking lot: once the leaf is weakly unreachable — no plan that can
-  * read those blocks exists anymore — they are unpersisted immediately.
-  * Live derived readers keep working. Sweeps are CROSS-INSTANCE (every
-  * `get` on any memo sweeps every registered memo's lot via the
-  * companion registry): a memo whose query family never runs again
-  * would otherwise pin its own last eviction for the JVM's life, since
-  * the strong RDD reference in its lot blocks the GC + ContextCleaner
-  * fallback. Residual bound, stated honestly: parked blocks free on the
-  * first UNCONTENDED memoized access ANYWHERE after their leaf becomes
-  * garbage — sweeps are tryLock-and-skip (see [[sweepNow]]), so an
-  * access that loses the lock race (another sweep, an eviction mid-cons)
-  * defers release to the next access. In the driver's workload (hundreds
-  * of memoized queries per run, contention windows of microseconds) that
-  * is effectively immediate; a JVM that stops using memos entirely keeps
-  * its final evictions until exit.
+  * Builds must be DETERMINISTIC and return an ALREADY-MATERIALIZED value
+  * (the call site does the eager localCheckpoint). Eviction only drops
+  * the slot and never unpersists (ADVICE r13: a reader may still hold a
+  * lineage-truncated frame). Spark's ContextCleaner frees the evicted
+  * build's checkpoint blocks once no plan or RDD can reach them.
   *
-  * Two slots, not one (round-11 verdict item 5): the driver's real
-  * access pattern interleaves TWO dirs in one session — the correctness
-  * run at sf0.01 and the bench at sf0.1 — and a single slot silently
-  * rebuilds the whole multi-consumer chain on every dir switch. Two
-  * keeps both warm; anything beyond two has no driver-shaped consumer
-  * and only raises the retention bound.
-  *
-  * `get` is synchronized: concurrent first callers (q299-style threaded
-  * arms) build once, not twice. Builds must be DETERMINISTIC — every
-  * consumer and the oracle see identical rows whether they hit a slot
-  * or a cold build — and must return an ALREADY-MATERIALIZED frame
-  * (eager localCheckpoint at the call site: some builds need to release
-  * intermediate caches only after materialization, so the memo cannot
-  * own the checkpoint ordering). */
-private[graft] object SessionDirMemoOf {
-  // every live memo, so any get() can sweep every parking lot; memos are
-  // module-level singletons (one per memoized stage), so the registry is
-  // small and append-only by construction
-  private val registry =
-    new java.util.concurrent.CopyOnWriteArrayList[SessionDirMemoOf[_]]()
-  private def register(m: SessionDirMemoOf[_]): Unit = registry.add(m)
-  private def sweepAll(): Unit = registry.forEach(_.sweepNow())
-}
-
-private[graft] class SessionDirMemoOf[V](frames: V => Seq[DataFrame]) {
+  * `get` is synchronized, so concurrent first callers build once. A build
+  * may `get` another memo; each `get` takes only its own monitor, so locks
+  * nest in build-dependency order, which has no cycle. */
+private[graft] final class SessionDirMemo[V] {
   private val capacity = 2
   // most-recently-used first; length ≤ capacity
   private var slots: List[(SparkSession, String, V)] = Nil
-  // Evicted-but-possibly-still-read builds: each checkpoint's
-  // LogicalRDD LEAF held weakly (any plan derived from the memoized
-  // frame — a .select, a .groupBy — embeds that leaf by reference, so
-  // the ref stays live exactly as long as something could still read
-  // the blocks; the Dataset wrapper itself is dropped by every consumer
-  // immediately and would clear too early), its cached RDD held
-  // strongly (so WE control when the blocks go, not GC timing). Swept
-  // on every get(); an entry whose leaf has cleared can have no reader
-  // left, so its blocks are unpersisted then and there.
-  // guarded by parkedLock, NOT the instance monitor: sweeps must be able
-  // to run without touching the lock a build holds (see sweepNow)
-  private val parkedLock = new java.util.concurrent.locks.ReentrantLock
-  private var parked: List[(
-    java.lang.ref.WeakReference[org.apache.spark.sql.execution.LogicalRDD],
-    org.apache.spark.rdd.RDD[_])] = Nil
 
-  // register only after every field above is initialized — the registry
-  // may sweep this instance from another memo's get() at any time
-  SessionDirMemoOf.register(this)
-
-  /** Requires parkedLock held. */
-  private def sweepParked(): Unit = {
-    val (dead, live) = parked.partition(_._1.get == null)
-    parked = live
-    dead.foreach { case (_, rdd) =>
-      try rdd.unpersist(blocking = false)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-  }
-
-  def get(s: SparkSession, dir: String)(build: => V): V = {
-    // Sweep every memo's lot before taking this instance's lock. Sweeps
-    // take ONLY parkedLock — never an instance monitor — and give up
-    // rather than wait (tryLock in sweepNow), so sweepAll is safe to call
-    // from ANY lock context. That matters because builds NEST: a build
-    // running under one memo's monitor can get() another memo
-    // (nbDocScores → nbModel), whose sweepAll touches every memo's lot —
-    // if sweeps blocked on locks a build can hold, two opposite-direction
-    // nested builds would be a lock-ordering deadlock (ADVICE r14). The
-    // only lock order that exists is instance-monitor → own parkedLock
-    // (the eviction below); parkedLock is always a leaf, so no cycle.
-    SessionDirMemoOf.sweepAll()
-    synchronized {
-      slots.find { case (ss, d, _) => (ss eq s) && d == dir } match {
-        case Some(hit @ (_, _, v)) =>
-          slots = hit :: slots.filterNot(_ eq hit)
-          v
-        case None =>
-          val built = build
-          val (kept, evicted) = ((s, dir, built) :: slots).splitAt(capacity)
-          slots = kept
-          // Park rather than unpersist (ADVICE r13): a reader that still
-          // holds a plan over the evicted frame would hard-fail on an
-          // eager unpersist of a lineage-truncated localCheckpoint. The
-          // sweep above frees each parked build's blocks on the first
-          // UNCONTENDED get() after its checkpoint leaf becomes
-          // unreachable (sweeps tryLock-and-skip, so a contended access
-          // defers to the next one) — bounded retention without ever
-          // breaking a live reader.
-          if (evicted.nonEmpty) {
-            parkedLock.lock()
-            try evicted.foreach { case (_, _, v) =>
-              frames(v).foreach { df =>
-                CheckpointBlocks.leaves(df).foreach { l =>
-                  parked ::= (new java.lang.ref.WeakReference(l), l.rdd)
-                }
-              }
-            } finally parkedLock.unlock()
-          }
-          built
-      }
+  def get(s: SparkSession, dir: String)(build: => V): V = synchronized {
+    slots.find { case (ss, d, _) => (ss eq s) && d == dir } match {
+      case Some(hit @ (_, _, v)) =>
+        slots = hit :: slots.filterNot(_ eq hit)
+        v
+      case None =>
+        val built = build
+        slots = ((s, dir, built) :: slots).take(capacity)
+        built
     }
   }
 
   /** Test hook: how many distinct builds are currently pinned. */
   private[graft] def pinned: Int = synchronized(slots.size)
-
-  /** Test hook: evicted builds awaiting release. */
-  private[graft] def parkedCount: Int = {
-    parkedLock.lock()
-    try parked.size finally parkedLock.unlock()
-  }
-
-  /** Sweep this memo's parking lot — NEVER blocks: losing the tryLock
-    * race (another sweep, or an eviction mid-cons) just skips; the next
-    * get() anywhere retries. Blocking here would recreate the nested-
-    * build deadlock documented in [[get]]. */
-  private[graft] def sweepNow(): Unit =
-    if (parkedLock.tryLock()) {
-      try sweepParked() finally parkedLock.unlock()
-    }
 }
-
-/** The common single-frame instance (most memoized stages are one
-  * checkpointed table); multi-frame stages (a k-means fit's centroids +
-  * assignment) instantiate [[SessionDirMemoOf]] with their own frame
-  * extractor so eviction unpersists every member. */
-private[graft] final class SessionDirMemo
-  extends SessionDirMemoOf[DataFrame](df => Seq(df))

@@ -798,7 +798,7 @@ object CorpusStatsQueries extends QueryPack {
     * the flag would have bought exists anyway: MemoNeutralitySpec
     * asserts a FRESH [[buildVocabCum]] rebuild equals the memoized
     * frame row-for-row, so a nondeterministic scan fails by name. */
-  private val vocabCumMemo = new graft.operators.SessionDirMemo
+  private val vocabCumMemo = new graft.operators.SessionDirMemo[DataFrame]
   private[graft] def vocabCum(s: SparkSession, dir: String): DataFrame =
     vocabCumMemo.get(s, dir)(buildVocabCum(s, dir))
 

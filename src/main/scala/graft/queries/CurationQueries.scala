@@ -866,7 +866,7 @@ object CurationQueries extends QueryPack {
     * stage) derives from it by the keeper rule `id == comp`, so
     * memoizing the map instead of the survivors serves BOTH consumers
     * with one CC run. */
-  private val corpusCompMemo = new graft.operators.SessionDirMemo
+  private val corpusCompMemo = new graft.operators.SessionDirMemo[DataFrame]
 
   /** Memoized (id, comp) map over the quality+exact survivors. */
   private def corpusComponents(s: SparkSession, dir: String,
@@ -884,7 +884,7 @@ object CurationQueries extends QueryPack {
     * memoized near survivors still cost ~1s per consumer, × four
     * consumers q353/q354/q355/q360). The near boundary stays memoized
     * separately because q354's funnel reads the intermediate stages. */
-  private val corpusMixMemo = new graft.operators.SessionDirMemo
+  private val corpusMixMemo = new graft.operators.SessionDirMemo[DataFrame]
 
   /** The composed pipeline's stage frames, lazily chained; `checkpoint =
     * true` memoizes the near-dedup survivors AND the mixed survivors.
@@ -1391,10 +1391,10 @@ object CurationQueries extends QueryPack {
   /** Per-(session, dir) memo of the 3-round trained tokenizer — the
     * training loop runs Spark jobs at query-construction time (the
     * KMeans/corpusComponents pattern), so without the memo every plan
-    * gate, verify and bench pass would retrain and strand the previous
-    * words checkpoint; the memo's multi-frame eviction releases it. */
-  private val bpeMemo = new graft.operators.SessionDirMemoOf[
-    (DataFrame, Seq[graft.operators.BpeTrainer.Merge])](p => Seq(p._1))
+    * gate, verify and bench pass would retrain; an evicted words
+    * checkpoint is freed by ContextCleaner once unreachable. */
+  private val bpeMemo = new graft.operators.SessionDirMemo[
+    (DataFrame, Seq[graft.operators.BpeTrainer.Merge])]
 
   private def q370(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.BpeTrainer

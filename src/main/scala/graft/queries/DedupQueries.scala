@@ -79,7 +79,7 @@ object DedupQueries extends QueryPack {
     * the q108Stages argument); the build is deterministic (sorted
     * collect_set expansion), so every consumer — and the oracle — sees
     * identical rows whether the slot hits or a cold call builds. */
-  private val jaccardMemo = new graft.operators.SessionDirMemo
+  private val jaccardMemo = new graft.operators.SessionDirMemo[DataFrame]
 
   private[graft] def jaccardPairs(s: SparkSession, dir: String): DataFrame =
     jaccardMemo.get(s, dir) {
@@ -99,7 +99,7 @@ object DedupQueries extends QueryPack {
     * bit-identical labels). One row per document — corpus-bounded; the
     * CC result's own iteration cache is released once the checkpoint
     * materializes. */
-  private val clusterMemo = new graft.operators.SessionDirMemo
+  private val clusterMemo = new graft.operators.SessionDirMemo[DataFrame]
 
   private def dedupClusters(s: SparkSession, dir: String): DataFrame =
     clusterMemo.get(s, dir) {
@@ -236,7 +236,7 @@ object DedupQueries extends QueryPack {
     * default-knob build (MinhashTuningSpec flips the conf mid-session
     * and expects the candidate set to move). Pair-bounded rows,
     * deterministic, checkpoint-safe. */
-  private val minhashPairsMemo = new graft.operators.SessionDirMemo
+  private val minhashPairsMemo = new graft.operators.SessionDirMemo[DataFrame]
   private def minhashPairs(s: SparkSession, dir: String): DataFrame = {
     val nb = minhashBands(s)
     minhashPairsMemo.get(s, s"$dir#bands=$nb") {
@@ -392,7 +392,7 @@ object DedupQueries extends QueryPack {
     * jaccardPairs precedent): both consumers re-ran the 64-column bit
     * vote over the exploded token set for a bit-identical signature
     * table. O(docs) rows, deterministic, checkpoint-safe. */
-  private val simhashMemo = new graft.operators.SessionDirMemo
+  private val simhashMemo = new graft.operators.SessionDirMemo[DataFrame]
   private def simhashBits(s: SparkSession, dir: String): DataFrame =
     simhashMemo.get(s, dir)(simhashBitsBuild(s, dir).localCheckpoint(true))
 
@@ -893,7 +893,7 @@ object DedupQueries extends QueryPack {
     * work, and both q270 and q382 (the index sizing plan) consume it.
     * `checkpoint = false` is the lazy twin; MemoNeutralitySpec pins
     * hash-neutrality. */
-  private val minhashTuningMemo = new graft.operators.SessionDirMemo
+  private val minhashTuningMemo = new graft.operators.SessionDirMemo[DataFrame]
 
   private[graft] def minhashTuningTable(s: SparkSession, dir: String,
       checkpoint: Boolean = true): DataFrame =

@@ -487,7 +487,7 @@ object EventOpsQueries extends QueryPack {
     * holds one row per user (user-scale, not event-scale). Each query
     * still stands alone for the oracle — a cold call builds
     * everything. */
-  private val identityMemo = new graft.operators.SessionDirMemo
+  private val identityMemo = new graft.operators.SessionDirMemo[DataFrame]
 
   private def identityClusters(s: SparkSession, dir: String): DataFrame =
     identityMemo.get(s, dir) {

@@ -99,7 +99,7 @@ object GraphQueries extends QueryPack {
     * Per-round localCheckpoint truncates lineage (the q108Stages
     * discipline) so round i replans one join over two materialized
     * tables, not i nested rounds. */
-  private val semiringMemo = new graft.operators.SessionDirMemo
+  private val semiringMemo = new graft.operators.SessionDirMemo[DataFrame]
 
   private[graft] def semiringStages(s: SparkSession, dir: String,
       checkpoint: Boolean = true): DataFrame = {
@@ -308,7 +308,7 @@ object GraphQueries extends QueryPack {
     * O(nodes) rows, deterministic (synchronous rounds + min tie-break),
     * and the build's own round checkpoints are what the memo retains —
     * already-materialized per the memo contract. */
-  private val lpMemo = new graft.operators.SessionDirMemo
+  private val lpMemo = new graft.operators.SessionDirMemo[DataFrame]
   private def lpLabels(s: SparkSession, dir: String): DataFrame =
     lpMemo.get(s, dir)(lpLabelsBuild(s, dir))
 

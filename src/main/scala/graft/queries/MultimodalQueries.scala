@@ -95,7 +95,7 @@ object MultimodalQueries extends QueryPack {
     * jaccardPairs precedent): each consumer re-ran the BMP synthesis +
     * decode + resample + banded self-join for a bit-identical pair
     * table. Band-bounded fan-out, deterministic, checkpoint-safe. */
-  private val ahashMemo = new graft.operators.SessionDirMemo
+  private val ahashMemo = new graft.operators.SessionDirMemo[DataFrame]
   private[graft] def imageAhashPairs(s: SparkSession,
       dir: String): DataFrame =
     ahashMemo.get(s, dir) {
@@ -233,7 +233,7 @@ object MultimodalQueries extends QueryPack {
     * doc), deterministic (fixture WAVs + md5), checkpoint-safe. The
     * DataFrame-parameterized [[audioLandmarks]] stays for the streaming
     * twins, which index arbitrary arrived prefixes. */
-  private val audioLmMemo = new graft.operators.SessionDirMemo
+  private val audioLmMemo = new graft.operators.SessionDirMemo[DataFrame]
   private[graft] def audioLandmarksDir(s: SparkSession,
       dir: String): DataFrame =
     audioLmMemo.get(s, dir) {
@@ -248,7 +248,7 @@ object MultimodalQueries extends QueryPack {
     * self-join, offset histogram, per-pair window — over the memoized
     * landmark table for a bit-identical pair set. Pair-bounded by the
     * df gate (2..1000), deterministic, checkpoint-safe. */
-  private val audioFpPairsMemo = new graft.operators.SessionDirMemo
+  private val audioFpPairsMemo = new graft.operators.SessionDirMemo[DataFrame]
   private[graft] def audioFpPairsDir(s: SparkSession,
       dir: String): DataFrame =
     audioFpPairsMemo.get(s, dir) {
@@ -333,7 +333,7 @@ object MultimodalQueries extends QueryPack {
     * q389's video arm) each re-ran the GIF synthesis + container walk +
     * block-sum chain for a bit-identical landmark table. Same bounds,
     * determinism and checkpoint-safety as the audio memo. */
-  private val videoLmMemo = new graft.operators.SessionDirMemo
+  private val videoLmMemo = new graft.operators.SessionDirMemo[DataFrame]
   private[graft] def videoLandmarksDir(s: SparkSession,
       dir: String): DataFrame =
     videoLmMemo.get(s, dir) {

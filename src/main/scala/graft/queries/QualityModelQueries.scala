@@ -67,10 +67,10 @@ object QualityModelQueries extends QueryPack {
     * corpus-scale token explode + vocab aggregation behind it is the
     * family's most expensive stage, and q369 needs the MODEL (to score
     * the build's survivors) rather than the held-out score table, so the
-    * memo boundary sits one level below [[nbDocScores]]. Multi-frame
-    * eviction releases both checkpoints (the k-means fit pattern). */
-  private val nbModelMemo = new graft.operators.SessionDirMemoOf[
-    (DataFrame, DataFrame)](p => Seq(p._1, p._2))
+    * memo boundary sits one level below [[nbDocScores]]. An evicted
+    * pair's checkpoints are freed by ContextCleaner once unreachable. */
+  private val nbModelMemo = new graft.operators.SessionDirMemo[
+    (DataFrame, DataFrame)]
   private[graft] def nbModel(s: SparkSession, dir: String,
       checkpoint: Boolean = true): (DataFrame, DataFrame) = {
     import graft.operators.QualityModels
@@ -87,7 +87,7 @@ object QualityModelQueries extends QueryPack {
     } else QualityModels.trainNb(train, "text", "y")
   }
 
-  private[graft] val nbScoresMemo = new graft.operators.SessionDirMemo
+  private[graft] val nbScoresMemo = new graft.operators.SessionDirMemo[DataFrame]
   private[graft] def nbDocScores(s: SparkSession, dir: String,
       checkpoint: Boolean = true): DataFrame = {
     import graft.operators.QualityModels
@@ -160,7 +160,7 @@ object QualityModelQueries extends QueryPack {
     * vocab fits); census keys are the bounded language set. */
   /** (doc_id, lang, ce_e6) for every multi-token doc; q364 + q366
     * consume, so the checkpointed path memoizes like [[nbDocScores]]. */
-  private[graft] val lmCeMemo = new graft.operators.SessionDirMemo
+  private[graft] val lmCeMemo = new graft.operators.SessionDirMemo[DataFrame]
   private[graft] def lmDocCe(s: SparkSession, dir: String,
       checkpoint: Boolean = true): DataFrame = {
     import graft.operators.QualityModels
@@ -720,7 +720,7 @@ object QualityModelQueries extends QueryPack {
     * construction, twice per bench pass-set. Source-grain rows,
     * deterministic, checkpoint-safe; `checkpoint = false` still returns
     * the raw unstubbed chain for the plan audits. */
-  private val policyQuotaMemo = new graft.operators.SessionDirMemo
+  private val policyQuotaMemo = new graft.operators.SessionDirMemo[DataFrame]
   private[graft] def policyQuotaFull(s: SparkSession, dir: String,
       checkpoint: Boolean = true): DataFrame = {
     def build: DataFrame = policyQuotaTable(

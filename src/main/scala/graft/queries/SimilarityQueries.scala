@@ -98,10 +98,10 @@ object SimilarityQueries extends QueryPack {
     * of q118 (inertia), q280 (purity), and q150 (SemDeDup) — each used
     * to rerun the whole fit plus the final broadcast-assign (r13 memo,
     * same rationale as the co-order graph's). Centroids AND assignment
-    * are materialized; eviction unpersists both (SessionDirMemoOf). */
+    * are materialized; an evicted pair's blocks are freed by Spark's
+    * ContextCleaner once unreachable. */
   private val fullFitMemo =
-    new graft.operators.SessionDirMemoOf[(DataFrame, DataFrame)](
-      p => Seq(p._1, p._2))
+    new graft.operators.SessionDirMemo[(DataFrame, DataFrame)]
 
   private def fullKmFit(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) =
@@ -121,7 +121,7 @@ object SimilarityQueries extends QueryPack {
     * (r13 memo, the fullFitMemo rationale). Downstream rounding
     * (roundf e4 / floor e6) applies to the SAME stored double, so both
     * derivations are bit-identical to the inline forms. */
-  private val lshPairsMemo = new graft.operators.SessionDirMemo
+  private val lshPairsMemo = new graft.operators.SessionDirMemo[DataFrame]
 
   private[graft] def lshScoredPairs(s: SparkSession, dir: String,
       checkpoint: Boolean = true): DataFrame = {
@@ -477,13 +477,13 @@ object SimilarityQueries extends QueryPack {
     * q149/q161 re-ran ~16 tiny jobs plus the per-query broadcast stages —
     * JobFloorProbe measured q161 at 71 single-task jobs / q149 at 62 on
     * a WARM pass, nearly all scheduler floor. Centroids are checkpointed
-    * by fit(); the lazy assignments are pinned here; eviction unpersists
-    * all 2m frames. Geometry (m, sub) is fixed by both consumers, so the
-    * (session, dir) key is complete. */
+    * by fit(); the lazy assignments are pinned here; an evicted build's
+    * 2m frames are freed by ContextCleaner once unreachable. Geometry
+    * (m, sub) is fixed by both consumers, so the (session, dir) key is
+    * complete. */
   private val PqM = 4
   private val pqFitsMemo =
-    new graft.operators.SessionDirMemoOf[List[(DataFrame, DataFrame)]](
-      l => l.flatMap(p => Seq(p._1, p._2)))
+    new graft.operators.SessionDirMemo[List[(DataFrame, DataFrame)]]
 
   private def pqFits(s: SparkSession, dir: String)
       : List[(DataFrame, DataFrame)] = pqFitsMemo.get(s, dir) {
@@ -1308,7 +1308,7 @@ object SimilarityQueries extends QueryPack {
     * verdict item 2: q382 re-ran every tuning chain it composes).
     * `checkpoint = false` is the lazy twin for plan audits;
     * MemoNeutralitySpec pins hash-neutrality. */
-  private val lshTuningMemo = new graft.operators.SessionDirMemo
+  private val lshTuningMemo = new graft.operators.SessionDirMemo[DataFrame]
 
   private[graft] def lshTuningTable(s: SparkSession, dir: String,
       checkpoint: Boolean = true): DataFrame =
@@ -1465,7 +1465,7 @@ object SimilarityQueries extends QueryPack {
     * Memoized per (session, dir) like [[lshTuningTable]] (r18 verdict
     * item 2) — q381 and q382 both consume the chain; `checkpoint =
     * false` is the lazy twin, MemoNeutralitySpec pins neutrality. */
-  private val ivfTuningMemo = new graft.operators.SessionDirMemo
+  private val ivfTuningMemo = new graft.operators.SessionDirMemo[DataFrame]
 
   private[graft] def ivfTuningTable(s: SparkSession, dir: String,
       checkpoint: Boolean = true): DataFrame =

@@ -145,7 +145,7 @@ object TemporalQueries extends QueryPack {
     * Same contract as the dedup memos — deterministic build, eager
     * checkpoint, two-slot LRU retention (see SessionDirMemo). Only the
     * `checkpoint = true` path memoizes; the lazy path stays per-call. */
-  private val coOrderMemo = new graft.operators.SessionDirMemo
+  private val coOrderMemo = new graft.operators.SessionDirMemo[DataFrame]
 
   private[graft] def q108Stages(s: SparkSession, dir: String,
       checkpoint: Boolean = false): (DataFrame, DataFrame, DataFrame) = {

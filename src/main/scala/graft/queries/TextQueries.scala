@@ -168,7 +168,7 @@ object TextQueries extends QueryPack {
     * precedent): THREE standalone queries (q129, q194, q333) each re-ran
     * the corpus token explode + the full Okapi chain for a bit-identical
     * doc-grain score table. O(docs) rows, deterministic, checkpoint-safe. */
-  private val bm25Memo = new graft.operators.SessionDirMemo
+  private val bm25Memo = new graft.operators.SessionDirMemo[DataFrame]
   private[queries] def bm25e6(s: SparkSession, dir: String): DataFrame =
     bm25Memo.get(s, dir)(bm25e6Build(s, dir).localCheckpoint(true))
 

@@ -240,7 +240,7 @@ object TpchQueries extends QueryPack {
     * bound, support ≥ 2) — q128's mining output IS q267's recommender
     * input, so the r13 memo builds it once per (session, dir); the raw
     * CoOccur chain stays gated in PlanGateSpec via checkpoint=false. */
-  private val basketPairsMemo = new graft.operators.SessionDirMemo
+  private val basketPairsMemo = new graft.operators.SessionDirMemo[DataFrame]
   private[graft] def basketPairs(s: SparkSession, dir: String,
       checkpoint: Boolean = true): DataFrame = {
     def build = graft.operators.CoOccur.pairs(

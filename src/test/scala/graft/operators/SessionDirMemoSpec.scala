@@ -1,14 +1,48 @@
 package graft.operators
 
 import graft.SparkSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerUnpersistRDD}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+import scala.jdk.CollectionConverters._
 
 /** Retention contract of the two-slot memo: the driver's real access
   * pattern (correctness dir and bench dir interleaved in ONE session)
   * must keep both warm, and a third key must evict exactly the LRU —
-  * the explicit bound that replaces the round-10 weak-key non-release. */
+  * the explicit bound that replaces the round-10 weak-key non-release.
+  * An evicted build's blocks are freed by Spark's ContextCleaner, never
+  * by the memo: the release tests watch public unpersist events. */
 class SessionDirMemoSpec extends SparkSuite {
 
+  // the single-frame form every memoized query stage uses
+  private type SessionDirMemo = graft.operators.SessionDirMemo[DataFrame]
+
   private def df(tag: Int) = spark.range(tag).toDF("id")
+  private def ckpt(tag: Int) = df(tag).localCheckpoint(true)
+  private def blocksOf(d: DataFrame): Set[Int] =
+    d.queryExecution.logical.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }.toSet
+
+  /** Runs `body` with a live view of the RDD ids unpersisted so far. */
+  private def withUnpersists[T](body: (() => Set[Int]) => T): T = {
+    val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val l = new SparkListener {
+      override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit =
+        ids.add(e.rddId)
+    }
+    spark.sparkContext.addSparkListener(l)
+    try body(() => ids.asScala.toSet)
+    finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** Up to `rounds` GC cycles until `done`; ContextCleaner needs a GC to
+    * see a build become unreachable, and its events arrive async. */
+  private def pollGc(rounds: Int)(done: => Boolean): Boolean = {
+    var i = 0
+    while (!done && i < rounds) { System.gc(); Thread.sleep(50); i += 1 }
+    done
+  }
 
   test("alternating two dirs never rebuilds — the driver's interleave " +
     "pattern stays warm") {
@@ -43,100 +77,89 @@ class SessionDirMemoSpec extends SparkSuite {
   test("an evicted build a caller still holds keeps its checkpoint " +
     "blocks and stays readable (ADVICE r13 — eager unpersist would " +
     "hard-fail a live reader of a lineage-truncated checkpoint)") {
-    val memo = new SessionDirMemo
-    def ckpt(tag: Int) = df(tag).localCheckpoint(true)
-    def blocksOf(d: org.apache.spark.sql.DataFrame) =
-      d.queryExecution.logical.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-      }.toSet
-    val a = memo.get(spark, "/a")(ckpt(10))
-    val b = memo.get(spark, "/b")(ckpt(11))
-    memo.get(spark, "/a")(fail("warm")) // /b becomes LRU
-    memo.get(spark, "/c")(ckpt(12))     // evicts /b — but we still hold b
-    assert(memo.parkedCount == 1)
-    val persisted = spark.sparkContext.getPersistentRDDs.keySet
-    assert(blocksOf(b).forall(persisted.contains),
-      "a still-held evicted frame lost its blocks — live reader broken")
-    assert(b.count() == 11, "the held evicted frame must remain readable")
-    assert(blocksOf(a).forall(persisted.contains),
-      "kept slot /a lost its blocks to the eviction")
+    withUnpersists { unpersisted =>
+      val memo = new SessionDirMemo
+      val a = memo.get(spark, "/a")(ckpt(10))
+      val b = memo.get(spark, "/b")(ckpt(11))
+      memo.get(spark, "/a")(fail("warm")) // /b becomes LRU
+      memo.get(spark, "/c")(ckpt(12))     // evicts /b — but we still hold b
+      pollGc(5)(false)
+      assert((blocksOf(b) & unpersisted()).isEmpty,
+        "a still-held evicted frame lost its blocks — live reader broken")
+      assert(b.count() == 11, "the held evicted frame must remain readable")
+      assert((blocksOf(a) & unpersisted()).isEmpty,
+        "kept slot /a lost its blocks to the eviction")
+    }
   }
 
   test("a DERIVED frame keeps an evicted build alive even after the " +
     "wrapper Dataset is dropped — the real consumer shape (every " +
     "caller .selects off the memoized frame immediately)") {
-    val memo = new SessionDirMemo
-    def ckpt(tag: Int) = df(tag).localCheckpoint(true)
-    // build, derive, and DROP the wrapper — only the derived plan lives
-    val derived = memo.get(spark, "/b")(ckpt(11))
-      .select((org.apache.spark.sql.functions.col("id") * 2).as("id2"))
-    memo.get(spark, "/a")(ckpt(10))
-    memo.get(spark, "/c")(ckpt(12)) // evicts /b; only `derived` refers
-    var tries = 0
-    while (tries < 5) { System.gc(); Thread.sleep(30)
-      memo.sweepNow(); tries += 1 }
-    assert(memo.parkedCount == 1,
-      "sweep released a build a derived reader still needs — the " +
-        "WeakReference must target the checkpoint leaf, not the wrapper")
-    assert(derived.count() == 11,
-      "the derived frame over the evicted build must remain readable")
+    withUnpersists { unpersisted =>
+      val memo = new SessionDirMemo
+      // build, derive, and DROP the wrapper — only the derived plan lives
+      var m = memo.get(spark, "/b")(ckpt(11))
+      val bBlocks = blocksOf(m)
+      val derived = m.select((col("id") * 2).as("id2"))
+      m = null
+      memo.get(spark, "/a")(ckpt(10))
+      memo.get(spark, "/c")(ckpt(12)) // evicts /b; only `derived` refers
+      pollGc(5)(false)
+      assert((bBlocks & unpersisted()).isEmpty,
+        "a build a derived reader still needs was unpersisted")
+      assert(derived.count() == 11,
+        "the derived frame over the evicted build must remain readable")
+    }
   }
 
-  test("once the evicted frame is unreachable, the next memo access " +
-    "sweeps its blocks — bounded retention without breaking readers") {
+  test("a reader that reaches an evicted build only through its RDD " +
+    "lineage stays readable (the ConnectedComponents.snap shape: " +
+    "createDataFrame(m.rdd, m.schema) holds the RDD, not the plan leaf)") {
     val memo = new SessionDirMemo
-    def ckpt(tag: Int) = df(tag).localCheckpoint(true)
-    var b: org.apache.spark.sql.DataFrame =
-      memo.get(spark, "/b")(ckpt(11))
-    val bBlocks = b.queryExecution.logical.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-    }.toSet
+    var m = memo.get(spark, "/b")(ckpt(11))
+    val reader = spark.createDataFrame(m.rdd, m.schema)
+      .select((col("id") * 2).as("id2"))
+    m = null
     memo.get(spark, "/a")(ckpt(10))
-    memo.get(spark, "/c")(ckpt(12)) // evicts /b into the parking lot
-    assert(memo.parkedCount == 1)
-    b = null // drop the last strong reference to the evicted frame
-    // WeakReference clearing needs a GC cycle; retry a few times — the
-    // reference is small and young, so one or two collections suffice.
-    var tries = 0
-    while (memo.parkedCount > 0 && tries < 20) {
-      System.gc(); Thread.sleep(50); memo.sweepNow(); tries += 1
-    }
-    assert(memo.parkedCount == 0,
-      "the unreachable evicted build was never swept")
-    val persisted = spark.sparkContext.getPersistentRDDs.keySet
-    assert(bBlocks.forall(!persisted.contains(_)),
-      "swept build's checkpoint blocks were not unpersisted")
+    memo.get(spark, "/c")(ckpt(12)) // evicts /b; only `reader` refers
+    // keep using the memo while GC runs, as a query suite would
+    pollGc(20) { memo.get(spark, "/a")(fail("warm")); false }
+    assert(reader.count() == 11,
+      "the lineage reader over the evicted build must remain readable")
   }
 
-  test("multi-frame values (SessionDirMemoOf) park EVERY member frame " +
-    "on eviction and sweep each once unreachable — a k-means fit's " +
-    "centroids AND assignment") {
-    val memo = new SessionDirMemoOf[
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)](
-      p => Seq(p._1, p._2))
-    def ckpt(tag: Int) = df(tag).localCheckpoint(true)
-    def blocksOf(d: org.apache.spark.sql.DataFrame) =
-      d.queryExecution.logical.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-      }.toSet
-    val a = memo.get(spark, "/a")((ckpt(10), ckpt(11)))
-    var b: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
-      memo.get(spark, "/b")((ckpt(12), ckpt(13)))
-    val bBlocks = blocksOf(b._1) ++ blocksOf(b._2)
-    memo.get(spark, "/a")(fail("warm")) // /b becomes LRU
-    memo.get(spark, "/c")((ckpt(14), ckpt(15))) // evicts /b
-    assert(memo.parkedCount == 2, "both member frames must be parked")
-    b = null
-    var tries = 0
-    while (memo.parkedCount > 0 && tries < 20) {
-      System.gc(); Thread.sleep(50); memo.sweepNow(); tries += 1
+  test("once the evicted frame is unreachable, ContextCleaner unpersists " +
+    "its blocks — bounded retention without breaking readers") {
+    withUnpersists { unpersisted =>
+      val memo = new SessionDirMemo
+      var b: DataFrame = memo.get(spark, "/b")(ckpt(11))
+      val bBlocks = blocksOf(b)
+      val a = memo.get(spark, "/a")(ckpt(10))
+      val c = memo.get(spark, "/c")(ckpt(12)) // evicts /b
+      b = null // drop the last strong reference to the evicted frame
+      assert(pollGc(20)(bBlocks.subsetOf(unpersisted())),
+        "the unreachable evicted build's blocks were never unpersisted")
+      assert(((blocksOf(a) ++ blocksOf(c)) & unpersisted()).isEmpty,
+        "a kept slot lost its blocks to the eviction")
     }
-    assert(memo.parkedCount == 0)
-    val persisted = spark.sparkContext.getPersistentRDDs.keySet
-    assert(bBlocks.forall(!persisted.contains(_)),
-      "a swept tuple member's checkpoint blocks were not unpersisted")
-    assert((blocksOf(a._1) ++ blocksOf(a._2)).forall(persisted.contains),
-      "a kept tuple slot lost blocks to the eviction")
+  }
+
+  test("tuple values release EVERY member frame once unreachable — a " +
+    "k-means fit's centroids AND assignment") {
+    withUnpersists { unpersisted =>
+      val memo = new graft.operators.SessionDirMemo[(DataFrame, DataFrame)]
+      val a = memo.get(spark, "/a")((ckpt(10), ckpt(11)))
+      var b: (DataFrame, DataFrame) =
+        memo.get(spark, "/b")((ckpt(12), ckpt(13)))
+      val bBlocks = blocksOf(b._1) ++ blocksOf(b._2)
+      memo.get(spark, "/a")(fail("warm")) // /b becomes LRU
+      memo.get(spark, "/c")((ckpt(14), ckpt(15))) // evicts /b
+      b = null
+      assert(pollGc(20)(bBlocks.subsetOf(unpersisted())),
+        "a released tuple member's blocks were not unpersisted")
+      assert(((blocksOf(a._1) ++ blocksOf(a._2)) & unpersisted()).isEmpty,
+        "a kept tuple slot lost blocks to the eviction")
+    }
   }
 
   test("hits return the identical materialized frame, misses are keyed " +
