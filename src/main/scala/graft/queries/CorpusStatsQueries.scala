@@ -784,31 +784,25 @@ object CorpusStatsQueries extends QueryPack {
     * prefix's exact e6 coverage per threshold. */
   /** Shared (tok, c, k, cum) vocabulary scan in (count desc, token)
     * order — the substrate both coverage curves (q337, q349) read, so
-    * the checkpointed path rides a per-(session, dir)
+    * it rides a per-(session, dir)
     * [[graft.operators.SessionDirMemo]] (at 100 TB a production run
     * materializes the ranked vocabulary once and every budget query
     * reads it). Built with `runningSumsMaterialized`, so the scan's
-    * range-sorted scratch checkpoint is released at build time. There is
-    * deliberately NO `checkpoint = false` twin returning the same rows:
-    * the scan is eager by construction, so a lazy (k, cum) chain cannot
-    * exist — the auditable raw chain is [[vocabCensus]] (what the scan
-    * consumes; the scan's own semantics are pinned by PrefixScanSpec),
-    * named differently so nobody mistakes it for the memo-off
-    * convention the lazy-chain builders follow. The memo-neutrality pin
-    * the flag would have bought exists anyway: MemoNeutralitySpec
-    * asserts a FRESH [[buildVocabCum]] rebuild equals the memoized
-    * frame row-for-row, so a nondeterministic scan fails by name. */
+    * range-sorted scratch checkpoint is released at build time. The
+    * scan is eager by construction, so even inside
+    * `SessionDirMemo.rawChain` this returns a materialized (k, cum)
+    * frame — a FRESH eager rebuild, which MemoNeutralitySpec compares
+    * row-for-row against the memoized slot, so a nondeterministic scan
+    * fails by name. The auditable lazy chain is [[vocabCensus]] (what
+    * the scan consumes; the scan's own semantics are pinned by
+    * PrefixScanSpec). */
   private val vocabCumMemo = new graft.operators.SessionDirMemo[DataFrame]
   private[graft] def vocabCum(s: SparkSession, dir: String): DataFrame =
-    vocabCumMemo.get(s, dir)(buildVocabCum(s, dir))
-
-  /** One fresh eager scan build — the memo body, callable directly so
-    * the neutrality spec can compare rebuild vs memoized slot. */
-  private[graft] def buildVocabCum(s: SparkSession, dir: String): DataFrame =
-    graft.operators.PrefixScan.runningSumsMaterialized(
-      vocabCensus(s, dir).withColumn("one", lit(1L)),
-      Seq("one" -> "k", "c" -> "cum"), col("c").desc, col("tok"))
-      .drop("one")
+    vocabCumMemo.get(s, dir)(
+      graft.operators.PrefixScan.runningSumsMaterialized(
+        vocabCensus(s, dir).withColumn("one", lit(1L)),
+        Seq("one" -> "k", "c" -> "cum"), col("c").desc, col("tok"))
+        .drop("one"))
 
   /** The lazy (tok, c) census [[vocabCum]] scans — the PlanGateSpec
     * builder gate audits this chain. */

@@ -886,32 +886,34 @@ object CurationQueries extends QueryPack {
     * separately because q354's funnel reads the intermediate stages. */
   private val corpusMixMemo = new graft.operators.SessionDirMemo[DataFrame]
 
-  /** The composed pipeline's stage frames, lazily chained; `checkpoint =
-    * true` memoizes the near-dedup survivors AND the mixed survivors.
+  /** The composed pipeline's stage frames, lazily chained over the
+    * memoized near-dedup component map and mixed survivors. Inside
+    * `SessionDirMemo.rawChain` every stage is the raw lazy chain instead
+    * (the reference the plan gates and the neutrality spec read).
     * Returns (input, quality, exact, near, clean, mixed) — clean and
     * mixed carry `n_tokens`. */
-  private[graft] def corpusStages(s: SparkSession, dir: String,
-      checkpoint: Boolean = true): (DataFrame, DataFrame, DataFrame,
-      DataFrame, DataFrame, DataFrame) = {
-    import graft.operators.DedupPipeline
+  private[graft] def corpusStages(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame,
+        DataFrame) = {
+    import graft.operators.{DedupPipeline, SessionDirMemo}
+    val raw = SessionDirMemo.inRawChain
     val docs = Tables.load(s, dir, "documents")
     // 1. quality gate
     val quality = docs.filter(length(col("text")) >= 100L &&
       col("lang").isin("en", "de", "fr", "es"))
-    // 2–3. exact + near dedup. Checkpointed path: min-id keepers derive
+    // 2–3. exact + near dedup. Memoized path: min-id keepers derive
     // from the memoized CC component map (keeper rule id == comp), so
     // the CC run is shared with q361's cluster-level policy query. The
     // raw path keeps DedupPipeline.near's own eager-keeper hygiene.
     val exact = DedupPipeline.exact(quality, "doc_id", "text")
     val near =
-      if (checkpoint)
-        exact.join(
-          corpusComponents(s, dir, exact)
-            .filter(col("id") === col("comp"))
-            .select(col("id").as("doc_id")),
-          Seq("doc_id"), "left_semi")
-      else DedupPipeline.near(exact, "doc_id", "text",
+      if (raw) DedupPipeline.near(exact, "doc_id", "text",
         n = 5, threshold = 0.5, maxDf = 1000L)
+      else exact.join(
+        corpusComponents(s, dir, exact)
+          .filter(col("id") === col("comp"))
+          .select(col("id").as("doc_id")),
+        Seq("doc_id"), "left_semi")
     // 4. decontaminate: bench grams come from the RAW corpus (benchmark
     // membership is external to the pipeline — q84's contract)
     val gram4 = near
@@ -937,7 +939,7 @@ object CurationQueries extends QueryPack {
     // drifted corpus that flips the q373 verdict re-tiers the quota and
     // re-mixes the build with no code change (MixPolicySpec pins the
     // flip changing composition). Fill order and salt discipline live in
-    // [[mixStage]]. Checkpointed path: the quota collapses to a
+    // [[mixStage]]. Memoized path: the quota collapses to a
     // collected MAP LITERAL (≤ |sources| rows, one bounded collect per
     // build — the bounded-dimension analogue of a broadcast) because
     // localCheckpoint PROPAGATES the origin plan's size estimate
@@ -951,17 +953,10 @@ object CurationQueries extends QueryPack {
     // codegen'd literal lookup. Raw path stays fully lazy so
     // PlanGateSpec audits the whole chain; MemoNeutralitySpec pins the
     // two forms row-identical.
-    def buildMixed =
-      if (checkpoint) {
-        val caps = QualityModelQueries.policyQuota(s, dir).collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        mixStage(clean, caps)
-      } else mixStage(clean,
-        QualityModelQueries.policyQuota(s, dir, checkpoint = false))
-    val mixed =
-      if (checkpoint)
-        corpusMixMemo.get(s, dir)(buildMixed.localCheckpoint(true))
-      else buildMixed
+    val mixed = corpusMixMemo.get(s, dir)(SessionDirMemo.pin(
+      if (raw) mixStage(clean, QualityModelQueries.policyQuota(s, dir))
+      else mixStage(clean, QualityModelQueries.policyQuota(s, dir).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap)))
     (docs, quality, exact, near, clean, mixed)
   }
 
@@ -990,10 +985,10 @@ object CurationQueries extends QueryPack {
 
   /** [[mixStage]]'s map-literal twin — identical arithmetic with the
     * bounded quota as a collected literal instead of a joined frame
-    * (the checkpointed build path: a quota JOIN in the checkpoint's
+    * (the memoized build path: a quota JOIN in the checkpoint's
     * origin plan product-inflates the leaf's size estimate and kills
     * downstream broadcasts — see corpusStages). MemoNeutralitySpec pins
-    * the two forms row-identical via the raw/memo twin. */
+    * the two forms row-identical via `SessionDirMemo.rawChain`. */
   private[graft] def mixStage(clean: DataFrame,
       quota: Map[String, Long]): DataFrame =
     mixFill(clean, _.withColumn("cap_quota",

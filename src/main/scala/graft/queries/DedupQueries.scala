@@ -7,6 +7,7 @@ import graft.{QueryPack, Tables}
 import graft.functions.Hashing
 import graft.functions.Rounding.roundf
 import graft.functions.TextAnalysis._
+import graft.operators.SessionDirMemo.pin
 
 /** Deduplication operators for training-data pipelines (BASELINE.json north
   * star): exact (hash-groupBy), n-gram Jaccard, MinHash+LSH banding, and
@@ -83,12 +84,11 @@ object DedupQueries extends QueryPack {
 
   private[graft] def jaccardPairs(s: SparkSession, dir: String): DataFrame =
     jaccardMemo.get(s, dir) {
-      graft.operators.DedupPipeline
+      pin(graft.operators.DedupPipeline
         .nearDupPairs(docs(s, dir), "doc_id", "text", n = 5,
           minJaccard = 0.1, maxDf = maxDf)
         .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
-          col("inter"), col("jaccard"))
-        .localCheckpoint(true)
+          col("inter"), col("jaccard")))
     }
 
   /** (doc_id, comp) cluster assignment over the q41 pair graph — the CC
@@ -240,7 +240,7 @@ object DedupQueries extends QueryPack {
   private def minhashPairs(s: SparkSession, dir: String): DataFrame = {
     val nb = minhashBands(s)
     minhashPairsMemo.get(s, s"$dir#bands=$nb") {
-      minhashPairsBuild(s, dir, nb).localCheckpoint(true)
+      pin(minhashPairsBuild(s, dir, nb))
     }
   }
 
@@ -394,7 +394,7 @@ object DedupQueries extends QueryPack {
     * table. O(docs) rows, deterministic, checkpoint-safe. */
   private val simhashMemo = new graft.operators.SessionDirMemo[DataFrame]
   private def simhashBits(s: SparkSession, dir: String): DataFrame =
-    simhashMemo.get(s, dir)(simhashBitsBuild(s, dir).localCheckpoint(true))
+    simhashMemo.get(s, dir)(pin(simhashBitsBuild(s, dir)))
 
   private def simhashBitsBuild(s: SparkSession, dir: String): DataFrame = {
     val toks = graft.operators.ReadParallelism
@@ -891,22 +891,16 @@ object DedupQueries extends QueryPack {
     * rows but the chain behind it (shingle → 16 minhashes → fused
     * 3-arm banding + the exact Jaccard truth mining) is whole-corpus
     * work, and both q270 and q382 (the index sizing plan) consume it.
-    * `checkpoint = false` is the lazy twin; MemoNeutralitySpec pins
-    * hash-neutrality. */
+    * `SessionDirMemo.rawChain` reaches the lazy chain; MemoNeutralitySpec
+    * pins hash-neutrality. */
   private val minhashTuningMemo = new graft.operators.SessionDirMemo[DataFrame]
 
-  private[graft] def minhashTuningTable(s: SparkSession, dir: String,
-      checkpoint: Boolean = true): DataFrame =
-    if (checkpoint)
-      minhashTuningMemo.get(s, dir)(
-        minhashTuningBuild(s, dir).localCheckpoint(true))
-    else minhashTuningBuild(s, dir)
+  private[graft] def minhashTuningTable(s: SparkSession, dir: String)
+      : DataFrame =
+    minhashTuningMemo.get(s, dir)(pin(minhashTuningOf(s, docs(s, dir))))
 
   private def q270(s: SparkSession, dir: String): DataFrame =
     minhashTuningTable(s, dir).orderBy("bands")
-
-  private def minhashTuningBuild(s: SparkSession, dir: String): DataFrame =
-    minhashTuningOf(s, docs(s, dir))
 
   /** The q270 chain over a GIVEN documents frame — the form the
     * streaming sizing twin (q382's drift twin, StreamingSpec)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.{QueryPack, Tables}
 import graft.functions.Rounding.intDivSql
 import graft.operators.PageRank
+import graft.operators.SessionDirMemo.pin
 
 /** Graph analytics over relational edge lists — the iterative-join family
   * ([[graft.operators.ConnectedComponents]] is the other member). The
@@ -101,9 +102,9 @@ object GraphQueries extends QueryPack {
     * tables, not i nested rounds. */
   private val semiringMemo = new graft.operators.SessionDirMemo[DataFrame]
 
-  private[graft] def semiringStages(s: SparkSession, dir: String,
-      checkpoint: Boolean = true): DataFrame = {
-    def build: DataFrame = {
+  private[graft] def semiringStages(s: SparkSession, dir: String)
+      : DataFrame =
+    semiringMemo.get(s, dir) {
       val li = Tables.load(s, dir, "lineitem")
       val o = Tables.load(s, dir, "orders")
       val lat0 = datediff(col("l_shipdate"), col("o_orderdate"))
@@ -113,25 +114,21 @@ object GraphQueries extends QueryPack {
           (col("l_suppkey") * 10L + 1L).as("p"))
         .agg(min(when(lat0 >= 0L, lat0)).as("lat"),
           count(lit(1)).as("cap"))
-      val edges0 = pairW.select(col("c").as("src"), col("p").as("dst"),
+      val edges = pin(pairW.select(col("c").as("src"), col("p").as("dst"),
           col("lat"), col("cap"))
         .unionAll(pairW.select(col("p").as("src"), col("c").as("dst"),
-          col("lat"), col("cap")))
-      val edges = if (checkpoint) edges0.localCheckpoint(true) else edges0
+          col("lat"), col("cap"))))
       var state = s.range(1).select(lit(11L).as("node"),
         lit(0L).as("d"), lit(Long.MaxValue).as("wd"))
       for (_ <- 1 to 4) {
         val relaxed = edges.join(state, edges("src") === state("node"))
           .select(col("dst").as("node"), (col("d") + col("lat")).as("d"),
             least(col("wd"), col("cap")).as("wd"))
-        state = state.unionAll(relaxed)
-          .groupBy("node").agg(min("d").as("d"), max("wd").as("wd"))
-        if (checkpoint) state = state.localCheckpoint(true)
+        state = pin(state.unionAll(relaxed)
+          .groupBy("node").agg(min("d").as("d"), max("wd").as("wd")))
       }
       state
     }
-    if (checkpoint) semiringMemo.get(s, dir)(build) else build
-  }
 
   /** Weighted single-source shortest paths (4 Bellman–Ford relaxation
     * rounds) — the min-plus sibling of q113's hop-count BFS: edges are
@@ -173,7 +170,7 @@ object GraphQueries extends QueryPack {
     * identical integers — output is e6-scaled BIGINT. Graph build is
     * shared with q108/q113 ([[TemporalQueries.q108Stages]]). */
   private def q119(s: SparkSession, dir: String): DataFrame = {
-    val (edges, deg, _) = TemporalQueries.q108Stages(s, dir, checkpoint = true)
+    val (edges, deg, _) = TemporalQueries.q108Stages(s, dir)
     val sym = edges.select(col("u"), col("v"))
       .unionAll(edges.select(col("v").as("u"), col("u").as("v")))
     sym
@@ -210,7 +207,7 @@ object GraphQueries extends QueryPack {
   private def q134(s: SparkSession, dir: String): DataFrame = {
     val k = 3
     val rounds = 4
-    val (edges0, _, _) = TemporalQueries.q108Stages(s, dir, checkpoint = true)
+    val (edges0, _, _) = TemporalQueries.q108Stages(s, dir)
     var edges = edges0
     val stats = Seq.newBuilder[(Long, Long, Long)]
     for (r <- 1 to rounds) {
@@ -260,8 +257,7 @@ object GraphQueries extends QueryPack {
     * num·1e6 div den is a portable integer. */
   private def q140(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Rounding.intDiv
-    val (_, deg, arcs0) = TemporalQueries.q108Stages(s, dir,
-      checkpoint = true)
+    val (_, deg, arcs0) = TemporalQueries.q108Stages(s, dir)
     val arcs = arcs0.localCheckpoint(true)
     val adj = arcs.groupBy("a")
       .agg(sort_array(collect_list("b")).as("nbrs"))
@@ -313,8 +309,7 @@ object GraphQueries extends QueryPack {
     lpMemo.get(s, dir)(lpLabelsBuild(s, dir))
 
   private def lpLabelsBuild(s: SparkSession, dir: String): DataFrame = {
-    val (edges, _, _) = TemporalQueries.q108Stages(s, dir,
-      checkpoint = true)
+    val (edges, _, _) = TemporalQueries.q108Stages(s, dir)
     val sym = edges.select(col("u"), col("v"))
       .unionAll(edges.select(col("v").as("u"), col("u").as("v")))
       .localCheckpoint(true)
@@ -354,8 +349,7 @@ object GraphQueries extends QueryPack {
     * multiply discipline, no driver-side arithmetic. */
   private def q215(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Rounding.intDivExact
-    val (edges, deg, _) = TemporalQueries.q108Stages(s, dir,
-      checkpoint = true)
+    val (edges, deg, _) = TemporalQueries.q108Stages(s, dir)
     val lbl = lpLabels(s, dir)
     val mDf = edges.agg(count(lit(1)).as("m"))
     val intra = edges
@@ -412,8 +406,7 @@ object GraphQueries extends QueryPack {
     * arbitrary external ids must check before encoding. */
   private def q299(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Rounding.intDivExact
-    val (edges, deg, _) = TemporalQueries.q108Stages(s, dir,
-      checkpoint = true)
+    val (edges, deg, _) = TemporalQueries.q108Stages(s, dir)
     val hubs = deg.orderBy(col("deg").desc, col("n"))
       .limit(10).select(col("n").as("hub"))
       .localCheckpoint(true)
@@ -471,8 +464,7 @@ object GraphQueries extends QueryPack {
     * construction — the output is a RELATIVE centrality order, which is
     * all a landmark estimate promises. */
   private def q309(s: SparkSession, dir: String): DataFrame = {
-    val (edges, deg, _) = TemporalQueries.q108Stages(s, dir,
-      checkpoint = true)
+    val (edges, deg, _) = TemporalQueries.q108Stages(s, dir)
     val sym = edges.select(col("u"), col("v"))
       .unionAll(edges.select(col("v").as("u"), col("u").as("v")))
       .localCheckpoint(true)
@@ -525,7 +517,7 @@ object GraphQueries extends QueryPack {
     * table scales with the node count). */
   private def q173(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Rounding.intDivExact
-    val (edges, deg, _) = TemporalQueries.q108Stages(s, dir, checkpoint = true)
+    val (edges, deg, _) = TemporalQueries.q108Stages(s, dir)
     val sym = edges.select(col("u"), col("v"))
       .unionAll(edges.select(col("v").as("u"), col("u").as("v")))
     val centers = deg.filter(col("deg") <= 30).select(col("n").as("c"))

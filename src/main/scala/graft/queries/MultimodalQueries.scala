@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryPack, Tables}
 import graft.multimodal.MultimodalOps
+import graft.operators.SessionDirMemo.pin
 
 /** Multimodal metadata + REAL image-header decode: the metadata half is
   * the SQL-expressible binary-column plumbing; the decode half round-trips
@@ -98,9 +99,7 @@ object MultimodalQueries extends QueryPack {
   private val ahashMemo = new graft.operators.SessionDirMemo[DataFrame]
   private[graft] def imageAhashPairs(s: SparkSession,
       dir: String): DataFrame =
-    ahashMemo.get(s, dir) {
-      imageAhashPairsBuild(s, dir).localCheckpoint(true)
-    }
+    ahashMemo.get(s, dir)(pin(imageAhashPairsBuild(s, dir)))
 
   private def imageAhashPairsBuild(s: SparkSession,
       dir: String): DataFrame = {
@@ -236,10 +235,8 @@ object MultimodalQueries extends QueryPack {
   private val audioLmMemo = new graft.operators.SessionDirMemo[DataFrame]
   private[graft] def audioLandmarksDir(s: SparkSession,
       dir: String): DataFrame =
-    audioLmMemo.get(s, dir) {
-      audioLandmarks(s, Tables.load(s, dir, "documents"))
-        .localCheckpoint(true)
-    }
+    audioLmMemo.get(s, dir)(
+      pin(audioLandmarks(s, Tables.load(s, dir, "documents"))))
 
   /** Memoized per (session, dir) audio fingerprint PAIR table (r21 —
     * the same precedent one level up the chain): THREE standalone
@@ -251,10 +248,8 @@ object MultimodalQueries extends QueryPack {
   private val audioFpPairsMemo = new graft.operators.SessionDirMemo[DataFrame]
   private[graft] def audioFpPairsDir(s: SparkSession,
       dir: String): DataFrame =
-    audioFpPairsMemo.get(s, dir) {
-      fingerprintMatches(audioLandmarksDir(s, dir))
-        .localCheckpoint(true)
-    }
+    audioFpPairsMemo.get(s, dir)(
+      pin(fingerprintMatches(audioLandmarksDir(s, dir))))
 
   /** The Shazam match tail shared by q383 (audio) and q386 (video):
     * df-gated (2..1000) posting self-join on the landmark key — NEVER
@@ -336,10 +331,8 @@ object MultimodalQueries extends QueryPack {
   private val videoLmMemo = new graft.operators.SessionDirMemo[DataFrame]
   private[graft] def videoLandmarksDir(s: SparkSession,
       dir: String): DataFrame =
-    videoLmMemo.get(s, dir) {
-      videoLandmarks(s, Tables.load(s, dir, "documents"))
-        .localCheckpoint(true)
-    }
+    videoLmMemo.get(s, dir)(
+      pin(videoLandmarks(s, Tables.load(s, dir, "documents"))))
 
   /** Audio snippet lookup — the RETRIEVAL face of q383's fingerprint
     * index (query-by-example: "which recording does this 5-frame

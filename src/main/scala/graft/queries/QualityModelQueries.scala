@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryPack, Tables}
 import graft.functions.{Rounding, TextAnalysis}
+import graft.operators.SessionDirMemo.pin
 
 /** TRAINED-model quality filters — the two standard learned gates a
   * 100 TB pretraining pipeline runs after the rule-based screens
@@ -55,10 +56,10 @@ object QualityModelQueries extends QueryPack {
     * held-out 20%: (doc_id, y, source, score_e6). Consumers: q363's
     * confusion census, q365's threshold sweep, q366's gate-agreement
     * census, q367's budget table, q368's review sample — FIVE standalone
-    * queries over one bit-identical table, so the checkpointed path rides
-    * a per-(session, dir) [[graft.operators.SessionDirMemo]] (the
+    * queries over one bit-identical table, so it rides a per-(session,
+    * dir) [[graft.operators.SessionDirMemo]] (the
     * co-order-graph/basket-pair playbook: build once, stubs thereafter).
-    * The raw chain stays reachable via `checkpoint = false` for the
+    * The raw chain stays reachable via `SessionDirMemo.rawChain` for the
     * PlanGateSpec builder gate — memoized consumers plan as checkpoint
     * stubs, so the gate audits the chain, not the stub. At 100 TB a
     * production run materializes the per-doc score table once anyway;
@@ -71,36 +72,33 @@ object QualityModelQueries extends QueryPack {
     * pair's checkpoints are freed by ContextCleaner once unreachable. */
   private val nbModelMemo = new graft.operators.SessionDirMemo[
     (DataFrame, DataFrame)]
-  private[graft] def nbModel(s: SparkSession, dir: String,
-      checkpoint: Boolean = true): (DataFrame, DataFrame) = {
+  private[graft] def nbModel(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
     import graft.operators.QualityModels
     val train = docs(s, dir).filter(isTrain(col("doc_id")))
       .select(col("text"), (col("lang") === "en").cast("long").as("y"))
-    if (checkpoint) nbModelMemo.get(s, dir) {
-      // checkpoint the MODEL first and derive the counts half of totals
-      // from the materialized frame: checkpointing totals off the lazy
-      // model plan would run the corpus-scale token explode — the
-      // family's most expensive stage — a second time (ADVICE r14)
-      val m = QualityModels.trainNb(train, "text", "y")._1
-        .localCheckpoint(true)
-      (m, QualityModels.nbTotals(m, train, "y").localCheckpoint(true))
-    } else QualityModels.trainNb(train, "text", "y")
+    nbModelMemo.get(s, dir) {
+      // pin the MODEL first and derive the counts half of totals from
+      // the materialized frame: pinning totals off the lazy model plan
+      // would run the corpus-scale token explode — the family's most
+      // expensive stage — a second time (ADVICE r14). Unpinned, this is
+      // exactly trainNb's own (model, totals) pair.
+      val m = pin(QualityModels.trainNb(train, "text", "y")._1)
+      (m, pin(QualityModels.nbTotals(m, train, "y")))
+    }
   }
 
   private[graft] val nbScoresMemo = new graft.operators.SessionDirMemo[DataFrame]
-  private[graft] def nbDocScores(s: SparkSession, dir: String,
-      checkpoint: Boolean = true): DataFrame = {
+  private[graft] def nbDocScores(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.QualityModels
-    def build = {
-      val (model, totals) = nbModel(s, dir, checkpoint)
-      QualityModels.scoreNb(
+    nbScoresMemo.get(s, dir) {
+      val (model, totals) = nbModel(s, dir)
+      pin(QualityModels.scoreNb(
         docs(s, dir).filter(!isTrain(col("doc_id")))
           .select(col("doc_id"), col("text"), col("source"),
             (col("lang") === "en").cast("long").as("y")),
-        Seq("doc_id", "y", "source"), "text", model, totals)
+        Seq("doc_id", "y", "source"), "text", model, totals))
     }
-    if (checkpoint) nbScoresMemo.get(s, dir)(build.localCheckpoint(true))
-    else build
   }
 
   /** Naive-Bayes reference-vs-rest quality classifier, trained AND
@@ -159,21 +157,18 @@ object QualityModelQueries extends QueryPack {
     * never global); model joins are key-partitioned (broadcast when the
     * vocab fits); census keys are the bounded language set. */
   /** (doc_id, lang, ce_e6) for every multi-token doc; q364 + q366
-    * consume, so the checkpointed path memoizes like [[nbDocScores]]. */
+    * consume, so it memoizes like [[nbDocScores]]. */
   private[graft] val lmCeMemo = new graft.operators.SessionDirMemo[DataFrame]
-  private[graft] def lmDocCe(s: SparkSession, dir: String,
-      checkpoint: Boolean = true): DataFrame = {
+  private[graft] def lmDocCe(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.QualityModels
-    def build = {
+    lmCeMemo.get(s, dir) {
       val base = docs(s, dir)
       val (big, ctx, vocab) = QualityModels.trainLm(
         base.filter(col("lang") === "en" && isTrain(col("doc_id"))),
         "doc_id", "text")
-      QualityModels.scoreLm(base, Seq("doc_id", "lang"), "text",
-        big, ctx, vocab)
+      pin(QualityModels.scoreLm(base, Seq("doc_id", "lang"), "text",
+        big, ctx, vocab))
     }
-    if (checkpoint) lmCeMemo.get(s, dir)(build.localCheckpoint(true))
-    else build
   }
 
   /** Per-language census over [[lmDocCe]] — see the chain doc above for
@@ -584,12 +579,12 @@ object QualityModelQueries extends QueryPack {
   private def q373(s: SparkSession, dir: String): DataFrame =
     nbVerdict(s, dir)
 
-  /** q373 with the memo flag threaded — the corpus build's raw
-    * (checkpoint = false) path must audit the UNSTUBBED verdict chain. */
-  private[graft] def nbVerdict(s: SparkSession, dir: String,
-      checkpoint: Boolean = true): DataFrame =
+  /** q373's verdict over [[nbDocScores]] — shared by the query and the
+    * policy quota; inside `SessionDirMemo.rawChain` it audits the
+    * UNSTUBBED verdict chain. */
+  private[graft] def nbVerdict(s: SparkSession, dir: String): DataFrame =
     nbGateVerdict(calibrationTable(
-      nbDocScores(s, dir, checkpoint)
+      nbDocScores(s, dir)
         .select(calBucket(col("score_e6")).as("bucket"), col("y"))
         .groupBy("bucket")
         .agg(count(lit(1)).as("n_docs"), sum("y").as("n_pos"))))
@@ -709,33 +704,30 @@ object QualityModelQueries extends QueryPack {
   private def q375(s: SparkSession, dir: String): DataFrame =
     policyQuotaFull(s, dir)
 
-  /** q375 with the memo flag threaded — shared by the query and the
-    * corpus build's mix stage ([[policyQuota]]).
+  /** q375's table — shared by the query and the corpus build's mix
+    * stage ([[policyQuota]]).
     *
-    * Memoized per (session, dir) on the checkpoint path (r21, the
+    * Memoized per (session, dir) (r21, the
     * nbScoresMemo precedent one stage later): THREE consumers (q375,
     * q377's audit, the mix stage's [[policyQuota]]) each re-derived the
     * bit-identical bounded source-grain table — and the chain's
     * per-source token sum re-TOKENIZED the whole documents table per
     * construction, twice per bench pass-set. Source-grain rows,
-    * deterministic, checkpoint-safe; `checkpoint = false` still returns
-    * the raw unstubbed chain for the plan audits. */
+    * deterministic, checkpoint-safe; `SessionDirMemo.rawChain` still
+    * returns the raw unstubbed chain for the plan audits. */
   private val policyQuotaMemo = new graft.operators.SessionDirMemo[DataFrame]
-  private[graft] def policyQuotaFull(s: SparkSession, dir: String,
-      checkpoint: Boolean = true): DataFrame = {
-    def build: DataFrame = policyQuotaTable(
-      nbDocScores(s, dir, checkpoint)
+  private[graft] def policyQuotaFull(s: SparkSession, dir: String)
+      : DataFrame =
+    policyQuotaMemo.get(s, dir)(pin(policyQuotaTable(
+      nbDocScores(s, dir)
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs_scored"),
           sum(col("score_e6").cast("decimal(38,0)")).as("sum_score_e6"),
           sum("y").as("n_pos")),
       docs(s, dir).groupBy("source")
         .agg(sum(TextAnalysis.tokenCount(col("text"))).as("n_tokens")),
-      nbVerdict(s, dir, checkpoint)
-        .select(col("calibrated"), col("policy")))
-    if (checkpoint) policyQuotaMemo.get(s, dir)(build.localCheckpoint(true))
-    else build
-  }
+      nbVerdict(s, dir)
+        .select(col("calibrated"), col("policy")))))
 
   /** The build-facing face of the certified allocation: q375's
     * policy-applied quota table projected to `(source, quota_tokens)`,
@@ -744,9 +736,8 @@ object QualityModelQueries extends QueryPack {
     * Named consumer: [[CurationQueries.corpusStages]]'s mix stage, which
     * water-fills each source to `⌊t_total · quota_s / 10⁸⌋` — the r16
     * verdict's "wire the certified policy into the flagship build". */
-  private[queries] def policyQuota(s: SparkSession, dir: String,
-      checkpoint: Boolean = true): DataFrame =
-    policyQuotaFull(s, dir, checkpoint)
+  private[queries] def policyQuota(s: SparkSession, dir: String): DataFrame =
+    policyQuotaFull(s, dir)
       .select(col("source"),
         coalesce(col("quota_tokens"), lit(0L)).as("quota_tokens"))
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryPack, Tables}
 import graft.operators.{Ivf, Lsh}
+import graft.operators.SessionDirMemo.pin
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (BASELINE.json north star).
@@ -123,8 +124,8 @@ object SimilarityQueries extends QueryPack {
     * derivations are bit-identical to the inline forms. */
   private val lshPairsMemo = new graft.operators.SessionDirMemo[DataFrame]
 
-  private[graft] def lshScoredPairs(s: SparkSession, dir: String,
-      checkpoint: Boolean = true): DataFrame = {
+  private[graft] def lshScoredPairs(s: SparkSession, dir: String)
+      : DataFrame = {
     val (nBands, nRows) = lshGeometry(s)
     def build: DataFrame = {
       val e = emb(s, dir)
@@ -151,8 +152,7 @@ object SimilarityQueries extends QueryPack {
     // vice versa
     val key = if (nBands == Bands && nRows == Rows) dir
       else s"$dir#lsh=${nBands}x$nRows"
-    if (checkpoint) lshPairsMemo.get(s, key)(build.localCheckpoint(true))
-    else build
+    lshPairsMemo.get(s, key)(pin(build))
   }
 
   /** Per-dimension whitening pre-flight — the census a feature
@@ -1306,21 +1306,17 @@ object SimilarityQueries extends QueryPack {
     * behind it (fused 3-arm explode, banded self-join, anchored truth)
     * is whole-corpus work, and BOTH q380 and q382 consume it (r18
     * verdict item 2: q382 re-ran every tuning chain it composes).
-    * `checkpoint = false` is the lazy twin for plan audits;
+    * `SessionDirMemo.rawChain` reaches the lazy chain for plan audits;
     * MemoNeutralitySpec pins hash-neutrality. */
   private val lshTuningMemo = new graft.operators.SessionDirMemo[DataFrame]
 
-  private[graft] def lshTuningTable(s: SparkSession, dir: String,
-      checkpoint: Boolean = true): DataFrame =
-    if (checkpoint)
-      lshTuningMemo.get(s, dir)(lshTuningBuild(s, dir).localCheckpoint(true))
-    else lshTuningBuild(s, dir)
+  private[graft] def lshTuningTable(s: SparkSession, dir: String)
+      : DataFrame =
+    lshTuningMemo.get(s, dir)(
+      pin(lshTuningOf(s, Tables.load(s, dir, "embeddings"))))
 
   private def q380(s: SparkSession, dir: String): DataFrame =
     lshTuningTable(s, dir).orderBy("rows_per_band")
-
-  private def lshTuningBuild(s: SparkSession, dir: String): DataFrame =
-    lshTuningOf(s, Tables.load(s, dir, "embeddings"))
 
   /** The q380 chain over a GIVEN embeddings frame — the form the
     * streaming sizing twin re-derives per micro-batch (the corpus it
@@ -1463,21 +1459,17 @@ object SimilarityQueries extends QueryPack {
     * is ≤ 3 rows.
     *
     * Memoized per (session, dir) like [[lshTuningTable]] (r18 verdict
-    * item 2) — q381 and q382 both consume the chain; `checkpoint =
-    * false` is the lazy twin, MemoNeutralitySpec pins neutrality. */
+    * item 2) — q381 and q382 both consume the chain; `rawChain` reaches
+    * the lazy chain, MemoNeutralitySpec pins neutrality. */
   private val ivfTuningMemo = new graft.operators.SessionDirMemo[DataFrame]
 
-  private[graft] def ivfTuningTable(s: SparkSession, dir: String,
-      checkpoint: Boolean = true): DataFrame =
-    if (checkpoint)
-      ivfTuningMemo.get(s, dir)(ivfTuningBuild(s, dir).localCheckpoint(true))
-    else ivfTuningBuild(s, dir)
+  private[graft] def ivfTuningTable(s: SparkSession, dir: String)
+      : DataFrame =
+    ivfTuningMemo.get(s, dir)(
+      pin(ivfTuningOf(s, Tables.load(s, dir, "embeddings"))))
 
   private def q381(s: SparkSession, dir: String): DataFrame =
     ivfTuningTable(s, dir).orderBy("nprobe")
-
-  private def ivfTuningBuild(s: SparkSession, dir: String): DataFrame =
-    ivfTuningOf(s, Tables.load(s, dir, "embeddings"))
 
   /** The q381 chain over a GIVEN embeddings frame (streaming sizing
     * twin form — see [[lshTuningOf]]). */

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryPack, Tables}
 import graft.functions.Rounding
+import graft.operators.SessionDirMemo.pin
 
 /** Time-series completion and reshaping operators the reference's
   * stock-bars domain implies but never implements (the pandas twin would be
@@ -126,8 +127,8 @@ object TemporalQueries extends QueryPack {
     * the closure's join shapes (q108 itself computes its three counts
     * eagerly, so its returned plan is just the result row).
     *
-    * `checkpoint = true` materializes the edge list once via an eager
-    * `localCheckpoint` and derives deg/arcs from the MATERIALIZED frame.
+    * The edge list is materialized once via an eager `localCheckpoint`
+    * and deg/arcs derive from the MATERIALIZED frame.
     * This is the iterative-consumer contract: every downstream job reads
     * a 25k-row cached table behind a one-node plan, instead of each
     * consumer re-carrying (and Catalyst re-optimizing) the whole
@@ -137,18 +138,18 @@ object TemporalQueries extends QueryPack {
     * which q113's rounds measured as per-round planning time: 0.9 s →
     * 1.5 s → 2.2 s before, flat ~0.3 s after.) Checkpoint blocks are
     * released by the ContextCleaner when the frames are collected; on a
-    * cluster, executor loss costs a recompute of this one bounded stage. */
+    * cluster, executor loss costs a recompute of this one bounded stage.
+    * Inside `SessionDirMemo.rawChain` the edges stay the lazy build. */
   /** Memo for the checkpointed co-order edge set (the expensive stage:
     * lineitem scan → per-order pair explode → distinct): SEVEN
     * standalone consumers (q108/q113/q119/q201/q215/q299/q309) each
     * rebuilt a bit-identical graph behind their own localCheckpoint.
     * Same contract as the dedup memos — deterministic build, eager
-    * checkpoint, two-slot LRU retention (see SessionDirMemo). Only the
-    * `checkpoint = true` path memoizes; the lazy path stays per-call. */
+    * checkpoint, two-slot LRU retention (see SessionDirMemo). */
   private val coOrderMemo = new graft.operators.SessionDirMemo[DataFrame]
 
-  private[graft] def q108Stages(s: SparkSession, dir: String,
-      checkpoint: Boolean = false): (DataFrame, DataFrame, DataFrame) = {
+  private[graft] def q108Stages(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame, DataFrame) = {
     // One ship-year of co-orders: the graph stays non-trivially dense at
     // every SF while the edge volume scales linearly, not with the whole
     // history — the partition-pruning shape a real deployment would use
@@ -165,9 +166,7 @@ object TemporalQueries extends QueryPack {
       .filter(col("pt") < col("pt2"))
       .select(col("pt").as("u"), col("pt2").as("v"))
       .distinct()
-    val edges =
-      if (checkpoint) coOrderMemo.get(s, dir)(edges0.localCheckpoint(true))
-      else edges0
+    val edges = coOrderMemo.get(s, dir)(pin(edges0))
     val deg = edges.select(col("u").as("n"))
       .unionAll(edges.select(col("v").as("n")))
       .groupBy("n").agg(count(lit(1)).as("deg"))
@@ -205,7 +204,7 @@ object TemporalQueries extends QueryPack {
     // build, and its own count) — q108Stages materializes it once behind
     // a truncated plan; arcs feeds two (the closure joins it against its
     // own adjacency aggregation) and is truncated the same way.
-    val (edges, deg, arcs0) = q108Stages(s, dir, checkpoint = true)
+    val (edges, deg, arcs0) = q108Stages(s, dir)
     val spark = s
     import spark.implicits._
     val arcs = arcs0.localCheckpoint(true)
@@ -347,7 +346,7 @@ object TemporalQueries extends QueryPack {
     * bench number needs explaining. (Round-9 baseline, sf0.1 regen'd data:
     * 25 715 edges / 17 019 nodes / 181 seeds — see ANALYSIS_r09_q113.md.) */
   private[graft] def q113Stats(s: SparkSession, dir: String): DataFrame = {
-    val (edges, _, _) = q108Stages(s, dir, checkpoint = true)
+    val (edges, _, _) = q108Stages(s, dir)
     val nEdges = edges.count()
     val sym = edges.select(col("u"), col("v"))
       .unionAll(edges.select(col("v").as("u"), col("u").as("v")))
@@ -372,7 +371,7 @@ object TemporalQueries extends QueryPack {
   }
 
   private def q113(s: SparkSession, dir: String): DataFrame = {
-    val (edges, _, _) = q108Stages(s, dir, checkpoint = true)
+    val (edges, _, _) = q108Stages(s, dir)
     val sym = edges.select(col("u"), col("v"))
       .unionAll(edges.select(col("v").as("u"), col("u").as("v")))
       .localCheckpoint(true)

@@ -6,6 +6,7 @@ import graft.{QueryPack, Tables}
 import graft.functions.Hashing
 import graft.functions.Rounding.roundf
 import graft.functions.TextAnalysis._
+import graft.operators.SessionDirMemo.pin
 
 /** Text-analysis extension queries over `documents` (BASELINE.json north
   * star: token counting, quality scoring, language ID, fingerprinting).
@@ -170,7 +171,7 @@ object TextQueries extends QueryPack {
     * doc-grain score table. O(docs) rows, deterministic, checkpoint-safe. */
   private val bm25Memo = new graft.operators.SessionDirMemo[DataFrame]
   private[queries] def bm25e6(s: SparkSession, dir: String): DataFrame =
-    bm25Memo.get(s, dir)(bm25e6Build(s, dir).localCheckpoint(true))
+    bm25Memo.get(s, dir)(pin(bm25e6Build(s, dir)))
 
   private def bm25e6Build(s: SparkSession, dir: String): DataFrame = {
     val terms = Seq("hash", "join", "spark")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryPack, Tables}
 import graft.functions.Rounding.{cents, roundf, sumCents, sumExact}
+import graft.operators.SessionDirMemo.pin
 
 /** Classic multi-join analytical shapes (TPC-H Q7/Q8/Q2 style) over the
   * testdata star schema — the join-heavy breadth the reference itself never
@@ -239,16 +240,12 @@ object TpchQueries extends QueryPack {
   /** The capped basket-pair table (orders × parts, C(8,2) fan-out
     * bound, support ≥ 2) — q128's mining output IS q267's recommender
     * input, so the r13 memo builds it once per (session, dir); the raw
-    * CoOccur chain stays gated in PlanGateSpec via checkpoint=false. */
+    * CoOccur chain stays gated in PlanGateSpec via `rawChain`. */
   private val basketPairsMemo = new graft.operators.SessionDirMemo[DataFrame]
-  private[graft] def basketPairs(s: SparkSession, dir: String,
-      checkpoint: Boolean = true): DataFrame = {
-    def build = graft.operators.CoOccur.pairs(
+  private[graft] def basketPairs(s: SparkSession, dir: String): DataFrame =
+    basketPairsMemo.get(s, dir)(pin(graft.operators.CoOccur.pairs(
       Tables.load(s, dir, "lineitem"), "l_orderkey", "l_partkey",
-      maxBasket = 8, minSupport = 2)
-    if (checkpoint) basketPairsMemo.get(s, dir)(build.localCheckpoint(true))
-    else build
-  }
+      maxBasket = 8, minSupport = 2)))
 
   /** Order-to-ship latency census per ship month — the fulfillment-SLA
     * dashboard (TPC-H Q12's domain, adapted to the synthetic schema's

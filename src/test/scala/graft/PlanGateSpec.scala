@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.PlanAudit
+import graft.operators.SessionDirMemo.rawChain
 
 /** Plan-shape GATE for the suite's most expensive queries (round-10
   * verdict task 5): PLANS.json makes plan regressions diffable, but
@@ -166,8 +167,7 @@ class PlanGateSpec extends SparkSuite {
 
   test("memoized-stage builder: lshScoredPairs chain keeps its shape") {
     val a = operators.PlanAudit.of(
-      queries.SimilarityQueries.lshScoredPairs(spark, sf,
-        checkpoint = false))
+      rawChain(queries.SimilarityQueries.lshScoredPairs(spark, sf)))
     assert(a.cartesians == 0, s"cartesian in the LSH pair chain: $a")
     assert(a.nestedLoopJoins == 0, s"BNLJ in the LSH pair chain: $a")
     assert(a.shuffles <= 3L + 2L,
@@ -177,7 +177,7 @@ class PlanGateSpec extends SparkSuite {
   test("memoized-stage builder: basket-pair (CoOccur) chain keeps its " +
     "shape") {
     val a = operators.PlanAudit.of(
-      queries.TpchQueries.basketPairs(spark, sf, checkpoint = false))
+      rawChain(queries.TpchQueries.basketPairs(spark, sf)))
     assert(a.cartesians == 0, s"cartesian in the basket-pair chain: $a")
     assert(a.shuffles <= 2L + 2L,
       s"basketPairs shuffles ${a.shuffles} > pinned 2+2: $a")
@@ -185,7 +185,7 @@ class PlanGateSpec extends SparkSuite {
 
   test("memoized-stage builder: fused semiring chain keeps its shape") {
     val a = operators.PlanAudit.of(
-      queries.GraphQueries.semiringStages(spark, sf, checkpoint = false))
+      rawChain(queries.GraphQueries.semiringStages(spark, sf)))
     assert(a.cartesians == 0, s"cartesian in the semiring chain: $a")
     assert(a.shuffles <= 53L + 2L,
       s"fused semiring chain shuffles ${a.shuffles} > pinned 53+2: $a")
@@ -193,7 +193,7 @@ class PlanGateSpec extends SparkSuite {
 
   test("memoized-stage builder: composed corpus chain keeps its shape") {
     val (_, _, _, _, _, mixed) =
-      queries.CurationQueries.corpusStages(spark, sf, checkpoint = false)
+      rawChain(queries.CurationQueries.corpusStages(spark, sf))
     val a = operators.PlanAudit.of(mixed)
     assert(a.cartesians == 0, s"cartesian in the corpus chain: $a")
     // 43 since r17: the raw mix stage inlines the policy-quota chain
@@ -208,8 +208,7 @@ class PlanGateSpec extends SparkSuite {
 
   test("memoized-stage builder: NB train+score chain keeps its shape") {
     val a = operators.PlanAudit.of(
-      queries.QualityModelQueries.nbDocScores(spark, sf,
-        checkpoint = false))
+      rawChain(queries.QualityModelQueries.nbDocScores(spark, sf)))
     assert(a.cartesians == 0, s"cartesian in the NB chain: $a")
     assert(a.shuffles <= 7L + 2L,
       s"NB chain shuffles ${a.shuffles} > pinned 7+2: $a")
@@ -230,7 +229,7 @@ class PlanGateSpec extends SparkSuite {
 
   test("memoized-stage builder: LM train+score chain keeps its shape") {
     val a = operators.PlanAudit.of(
-      queries.QualityModelQueries.lmDocCe(spark, sf, checkpoint = false))
+      rawChain(queries.QualityModelQueries.lmDocCe(spark, sf)))
     assert(a.cartesians == 0, s"cartesian in the LM chain: $a")
     assert(a.shuffles <= 9L + 2L,
       s"LM chain shuffles ${a.shuffles} > pinned 9+2: $a")

@@ -1,5 +1,7 @@
 package graft
 
+import graft.operators.SessionDirMemo.rawChain
+
 /** Physical-plan regression guards: the scale properties the engine's
   * 100 TB posture rests on, pinned as assertions so a plan regression
   * surfaces as a red test, not a bench mystery. Checked on sf0.001 — plan
@@ -171,7 +173,7 @@ class PlanSpec extends SparkSuite {
   test("q108: triangle closure is keyed joins, never a cross product") {
     // q108 itself returns an eagerly-computed count row, so inspect the
     // lazy stage plans it is built from
-    val (_, _, arcs) = queries.TemporalQueries.q108Stages(spark, sf)
+    val (_, _, arcs) = rawChain(queries.TemporalQueries.q108Stages(spark, sf))
     val p = queries.TemporalQueries.q108Closure(arcs)
       .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"), "triangle join degenerated")
@@ -190,7 +192,7 @@ class PlanSpec extends SparkSuite {
   test("q128: pair mining is one scan with array expansion, no self-join") {
     // the r13 memo makes q128's own plan a checkpoint stub — gate the
     // raw basket-pair BUILDER, the same chain the memo materializes
-    val p = queries.TpchQueries.basketPairs(spark, sf, checkpoint = false)
+    val p = rawChain(queries.TpchQueries.basketPairs(spark, sf))
       .queryExecution.executedPlan.toString
     assert(!p.contains("Join"), "pair generation regressed to a self-join")
     // exactly one data scan: the basket array expands in-place
@@ -201,7 +203,7 @@ class PlanSpec extends SparkSuite {
     "their adjudicated shapes (q270/q380/q381 — r18 verdict item 2)") {
     // declared q270/q380/q381/q382 plan as checkpoint stubs (the q128
     // pattern), so the cartesian/BNLJ/single-partition pins for the
-    // corpus-scale work move to the checkpoint = false twins. The pins
+    // corpus-scale work move to the rawChain builds. The pins
     // carry the pre-memo adjudications verbatim:
     //  - q380: 2 sp-exchanges (the n_vectors/n_truth 1-row scalars);
     //    4 BNLJs (the anchored-truth crossJoin listed twice — hit join
@@ -216,12 +218,12 @@ class PlanSpec extends SparkSuite {
     //  - q270: 1 sp-exchange (the n_truth scalar); 1 BNLJ (its 1-row
     //    broadcast crossJoin)
     val pins = Seq(
-      ("lshTuningTable", () => queries.SimilarityQueries
-        .lshTuningTable(spark, sf, checkpoint = false), 2L, 4L),
-      ("ivfTuningTable", () => queries.SimilarityQueries
-        .ivfTuningTable(spark, sf, checkpoint = false), 5L, 18L),
-      ("minhashTuningTable", () => queries.DedupQueries
-        .minhashTuningTable(spark, sf, checkpoint = false), 1L, 1L))
+      ("lshTuningTable", () => rawChain(queries.SimilarityQueries
+        .lshTuningTable(spark, sf)), 2L, 4L),
+      ("ivfTuningTable", () => rawChain(queries.SimilarityQueries
+        .ivfTuningTable(spark, sf)), 5L, 18L),
+      ("minhashTuningTable", () => rawChain(queries.DedupQueries
+        .minhashTuningTable(spark, sf)), 1L, 1L))
     val bad = pins.flatMap { case (n, mk, spEx, bnlj) =>
       val a = operators.PlanAudit.of(mk())
       Seq(

@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.SparkSuite
+import graft.operators.SessionDirMemo.{inRawChain, pin, rawChain}
+import java.nio.file.{Files, Paths}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerUnpersistRDD}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
@@ -172,5 +174,72 @@ class SessionDirMemoSpec extends SparkSuite {
     val b = memo.get(s2, "/x")(df(9))
     assert(b ne a)
     assert(memo.get(spark, "/x")(fail("still warm")) eq a)
+  }
+
+  test("inside rawChain, get runs the build on every call even when the " +
+    "slot is warm, and never touches a slot") {
+    val memo = new SessionDirMemo
+    var builds = 0
+    def get() = memo.get(spark, "/x") { builds += 1; df(builds) }
+    val warm = get()
+    assert(builds == 1 && memo.pinned == 1)
+    val raw = rawChain { get(); get() }
+    assert(builds == 3, s"rawChain served a slot: $builds builds")
+    assert(raw ne warm)
+    assert(memo.pinned == 1, "rawChain wrote a slot")
+    assert(get() eq warm, "the warm slot changed under rawChain")
+    assert(builds == 3)
+  }
+
+  test("pin adds no LogicalRDD leaf inside rawChain and exactly one " +
+    "outside it") {
+    val base = df(5)
+    val before = CheckpointBlocks.leaves(base).size
+    assert(CheckpointBlocks.leaves(rawChain(pin(base))).size == before)
+    assert(rawChain(pin(base)) eq base)
+    assert(CheckpointBlocks.leaves(pin(base)).size == before + 1)
+  }
+
+  test("the raw mode is off again after the body throws and after " +
+    "nested scopes exit") {
+    assert(!inRawChain)
+    intercept[IllegalStateException] {
+      rawChain[Unit](throw new IllegalStateException("boom"))
+    }
+    assert(!inRawChain, "a throwing body left the raw mode on")
+    rawChain {
+      rawChain(assert(inRawChain))
+      assert(inRawChain, "an inner scope's exit ended the outer scope")
+    }
+    assert(!inRawChain, "nested scopes left the raw mode on")
+  }
+
+  test("a thread started inside rawChain sees the raw mode off") {
+    @volatile var seen = true
+    rawChain {
+      val t = new Thread(() => seen = inRawChain)
+      t.start(); t.join()
+    }
+    assert(!seen, "the raw mode leaked into a thread started in its scope")
+  }
+
+  test("src/main has no Boolean checkpoint flag and no rawChain call — " +
+    "rawChain is the only way to reach a raw build") {
+    val param = "checkpoint" + ": Boolean"
+    val call = """\brawChain\s*[\[(]""".r
+    val files = Files.walk(Paths.get("src/main"))
+    val sites =
+      try files.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .flatMap { p =>
+          Files.readAllLines(p).asScala.zipWithIndex.collect {
+            case (l, i) if l.contains(param) ||
+              (call.findFirstIn(l).nonEmpty && !l.contains("def rawChain")) =>
+              s"$p:${i + 1}"
+          }
+        }.toList.sorted
+      finally files.close()
+    assert(sites.isEmpty, "builders take no materialization flag and " +
+      s"only tests enter SessionDirMemo.rawChain: $sites")
   }
 }

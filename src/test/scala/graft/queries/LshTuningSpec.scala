@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{SparkEntry, SparkSuite}
 import graft.operators.Lsh
+import graft.operators.SessionDirMemo.rawChain
 
 /** The band-geometry tuning MECHANISM (r17 verdict item 2): q378's
   * measured sf~1 occupancy tail (1.46 at fixed 32×4) was adjudicated as
@@ -84,12 +85,12 @@ class LshTuningSpec extends SparkSuite {
     spark.conf.set("spark.graft.lsh.bands", "16")
     spark.conf.set("spark.graft.lsh.rowsPerBand", "8")
     try {
-      // checkpoint = false: lazy build, no memo entry — the conf knob is
+      // rawChain: lazy build, no memo entry — the conf knob is
       // a deployment-scoped setting (one geometry per session, like the
       // sweep's tuned run); the memo key carries the geometry so even a
       // mixed-session consumer can never be served the wrong build
-      val got = SimilarityQueries
-        .lshScoredPairs(spark, sf, checkpoint = false).count()
+      val got = rawChain(SimilarityQueries
+        .lshScoredPairs(spark, sf)).count()
       assert(got == want,
         s"tuned lshScoredPairs built $got pairs; q380's 16×8 arm " +
           s"measured $want")
@@ -107,7 +108,7 @@ class LshTuningSpec extends SparkSuite {
       spark.conf.set("spark.graft.lsh.bands", b)
       spark.conf.set("spark.graft.lsh.rowsPerBand", r)
       try intercept[IllegalArgumentException] {
-        SimilarityQueries.lshScoredPairs(spark, sf, checkpoint = false)
+        rawChain(SimilarityQueries.lshScoredPairs(spark, sf))
       } finally {
         spark.conf.unset("spark.graft.lsh.bands")
         spark.conf.unset("spark.graft.lsh.rowsPerBand")

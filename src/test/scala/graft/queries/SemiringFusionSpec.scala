@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.{SparkSuite, SparkEntry, Tables}
+import graft.operators.SessionDirMemo.rawChain
 
 /** Pins the q264/q265 two-semiring fusion contract (round-12 verdict
   * item 2, mirroring ConnectedComponentsSpec's arm-fusion test): the ONE
@@ -94,7 +95,7 @@ class SemiringFusionSpec extends SparkSuite {
 
   test("fused state: wd never NULL; NULL d only where latency arm " +
       "never reached (capacity reach is a superset)") {
-    val st = GraphQueries.semiringStages(spark, sf, checkpoint = false)
+    val st = rawChain(GraphQueries.semiringStages(spark, sf))
     assert(st.filter(col("wd").isNull).count() == 0L,
       "capacity arm produced a NULL width — reach-superset argument broken")
     // on TPC-H-shaped data every latency is >= 0, so the two reached

@@ -653,8 +653,8 @@ class StreamingSpec extends SparkSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.functions.TextAnalysis.fingerprint
     val (_, _, exactBatch, _, _, _) =
-      graft.queries.CurationQueries.corpusStages(spark, sf,
-        checkpoint = false)
+      graft.operators.SessionDirMemo.rawChain(
+        graft.queries.CurationQueries.corpusStages(spark, sf))
     val want = exactBatch.select("doc_id").collect()
       .map(_.getLong(0)).toSet
     assert(want.nonEmpty, "empty exact stage — vacuous fixture")
