@@ -5,9 +5,14 @@ object Bench {
     * plan shape cannot see (r16 verdict item 5) — task spill bytes
     * (memory + disk), max per-task peak execution memory, and the
     * largest materialized broadcast. ArtifactGateSpec gates the
-    * committed BENCH_FULL.json on zero spill / bounded broadcasts. */
+    * committed BENCH_FULL.json on zero spill / bounded broadcasts.
+    * The structural counters — jobs started, stages completed, tasks
+    * ended and their summed run time — are load-independent: per-stage
+    * scheduler floor dominates the sf0.1 suite, so `stages` is the
+    * number a plan change moves and `taskMs` is the real work. */
   private final case class Run(sec: Double, spillBytes: Long,
-    peakMem: Long, broadcastBytes: Long)
+    peakMem: Long, broadcastBytes: Long,
+    jobs: Long, stages: Long, tasks: Long, taskMs: Long)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -51,106 +56,12 @@ object Bench {
       spark.conf.set("spark.graft.ivf.nprobe", p.toString)
     for (nb <- minhashBandsEnv)
       spark.conf.set("spark.graft.minhash.bands", nb.toString)
-    // JVM/codegen/session warmup: exercise the machinery the timed queries
-    // use (hash agg, collect_set, window, shuffle join, explode, regex
-    // split, md5, parquet reader) on synthetic data so the first heavy
-    // query isn't charged for one-time JIT/codegen initialization. Every
-    // query is still measured in full afterwards.
-    locally {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.expressions.Window
-      val w = spark.range(200000).selectExpr(
-        "id", "cast(id % 997 as string) as k", "cast(id % 31 as double) as v")
-      w.groupBy("k").agg(count(lit(1)), sum("v"), collect_set("id")).count()
-      w.withColumn("rn",
-          row_number().over(Window.partitionBy("k").orderBy(col("v"), col("id"))))
-        .filter(col("rn") === 1).count()
-      w.join(w.groupBy("k").count(), "k").count()
-      spark.range(2000)
-        .selectExpr("explode(split(repeat('a b c d e ', 40), ' ')) as t")
-        .select(md5(col("t"))).distinct().count()
-      // native LSH banding codegen (the ANN/near-dup family's hot path)
-      val planes = graft.operators.Lsh.hyperplanes(128, 64)
-      spark.range(500)
-        .selectExpr("id as vec_id",
-          "transform(sequence(1, 64), i -> cast(i * (id % 7 + 1) as double)) as v")
-        .select(col("vec_id"),
-          posexplode(graft.operators.Lsh.bandKeysCol(col("v"), planes, 32, 4)))
-        .toDF("vec_id", "band", "bkey")
-        .groupBy("band", "bkey").count().count()
-      // fixed-point KMeans loop (q118/q149/q150/q161's hot machinery):
-      // first execution pays codegen of the 16-column decimal(38,0) sum
-      // aggregate + broadcast-assign crossJoin — several hundred ms of
-      // one-time JIT that otherwise lands on pass 1 of the first PQ
-      // query and shows up as a 1.5×+ inter-pass spread (round 8's
-      // q149 2.80/4.25 raw readings)
-      locally {
-        val vecs = spark.range(200).selectExpr("id as vid",
-          "transform(sequence(1, 16), i -> cast((id * i) % 13 as double) / 7.0) as v")
-        val (_, asg) = graft.operators.KMeans.fit(
-          vecs, "vid", "v", dim = 16, k = 4, iters = 2)
-        asg.count()
-        // the dim=64 shape is a DIFFERENT codegen unit (the centroid agg
-        // has one decimal(38,0) sum column per dimension, so its generated
-        // class is dim-specific): unwarmed, the first 64-dim consumer ate
-        // the JIT — q118's round-9 pass-1 read 17.2s vs 2.1s on pass 2
-        val vecs64 = spark.range(100).selectExpr("id as vid",
-          "transform(sequence(1, 64), i -> cast((id * i) % 13 as double) / 7.0) as v")
-        val (_, asg64) = graft.operators.KMeans.fit(
-          vecs64, "vid", "v", dim = 64, k = 4, iters = 1)
-        asg64.count()
-        // the iterative-CC machinery is another dim-independent codegen
-        // family of its own (label joins + min-agg rounds + the star
-        // fallback checks): unwarmed, the alphabetically-first consumer
-        // absorbs it — q219's round-10 pass 1 read 19.0s vs 4.1s pass 2,
-        // and even WITH the round-10 64-node chain warmup q244 (identity
-        // stitch, the first CC consumer in sorted order) still read 34.6s
-        // on pass 1. The chain exercised only the star-fallback path
-        // (diameter 63 forces it); q244's graph is the OPPOSITE shape —
-        // hundreds of 2–3-node components that converge in the plain
-        // min-label rounds — and its candidate generation runs the
-        // collect_set → sort_array → transform-pairs explode that no other
-        // warmup touched. Warm both shapes: ~500 nodes of small components
-        // through the pair-explode front end, plus the chain for fallback.
-        val uk = spark.range(1500).selectExpr(
-          "id % 500 as k", "id as user_id")
-        val pairs = uk.groupBy("k")
-          .agg(sort_array(collect_set(col("user_id"))).as("us"))
-          .select(explode(expr(
-            "flatten(transform(us, x -> transform(filter(us, y -> y > x), " +
-              "y -> named_struct('a', x, 'b', y))))")).as("p"))
-          .select(col("p.a"), col("p.b")).distinct()
-        // components() returns a persisted frame whose release is the
-        // caller's contract — unpersist both warmup results so they
-        // don't pin executor storage for the whole suite
-        val warmCc = graft.operators.ConnectedComponents
-          .components(uk.select(col("user_id")).distinct(), pairs,
-            "user_id", "a", "b")
-        warmCc.count()
-        warmCc.unpersist()
-        val nodes = spark.range(64).selectExpr("id as n")
-        val cedges = spark.range(63)
-          .selectExpr("id as a", "id + 1 as b")
-        val warmChain = graft.operators.ConnectedComponents
-          .components(nodes, cedges, "n", "a", "b")
-        warmChain.count()
-        warmChain.unpersist()
-        // the fixed-point PageRank rounds (intDiv chains + per-round
-        // decimal contribution sums + left joins) are yet another
-        // codegen family; q231 (alphabetically before q97) absorbed it
-        // in round 10's first full run — 4.4s bench vs 2.1s warm-JVM
-        val prEdges = spark.range(63)
-          .selectExpr("id as src", "(id + 1) % 63 as dst")
-        graft.operators.PageRank.ranks(prEdges, iters = 2).count()
-        graft.operators.PageRank.personalizedRanks(prEdges,
-          spark.range(3).selectExpr("id as node"), iters = 2).count()
-      }
-      try spark.read.parquet(s"$sfDir/region.parquet").count()
-      catch { case _: Throwable => () }
-    }
     // sorted execution order: Map iteration order shifts as queries are
-    // added, which moves which query absorbs residual warmup and makes
-    // per-query numbers incomparable across rounds.
+    // added, which moves which query absorbs one-time JIT/codegen in
+    // pass 1 and makes per-query numbers incomparable across rounds.
+    // That pass-1 cost lands on the first consumer of each codegen
+    // family, whose passes then disagree by >1.5× and earn the targeted
+    // third sample below; set-up cost is perfbench's cold_s.
     // best-of-2 per query, INTERLEAVED (A…Z then A…Z, min per query):
     // a single pass cannot distinguish a code regression from transient
     // machine contention (round 4's numbers swung >20x both ways on
@@ -175,22 +86,27 @@ object Bench {
     // listener scoped by reset/drain around each timed run (the bus is
     // async — without the drain a query's tail events would land in the
     // next query's window); the drains sit OUTSIDE the timed section
-    val spillAcc = new java.util.concurrent.atomic.AtomicLong
-    val peakAcc = new java.util.concurrent.atomic.AtomicLong
-    val bcastAcc = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = t.taskMetrics
-          if (m != null) {
-            spillAcc.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-            peakAcc.accumulateAndGet(m.peakExecutionMemory, math.max(_, _))
-          }
+    import java.util.concurrent.atomic.AtomicLong
+    import org.apache.spark.scheduler._
+    val spillAcc, peakAcc, bcastAcc = new AtomicLong
+    val jobsAcc, stagesAcc, tasksAcc, taskMsAcc = new AtomicLong
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobsAcc.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        stagesAcc.incrementAndGet()
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+        tasksAcc.incrementAndGet()
+        if (t.taskInfo != null) taskMsAcc.addAndGet(t.taskInfo.duration)
+        val m = t.taskMetrics
+        if (m != null) {
+          spillAcc.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
+          peakAcc.accumulateAndGet(m.peakExecutionMemory, math.max(_, _))
         }
-      })
+      }
+    })
     // broadcast sizes ride a QueryExecutionListener because the timed
-    // action (`df.count()`) compiles its OWN QueryExecution — the
+    // action (a noop write) compiles its OWN QueryExecution — the
     // constructed df's plan never executes, so only the listener sees
     // the plan whose dataSize metrics are populated
     spark.listenerManager.register(
@@ -204,19 +120,28 @@ object Bench {
             qe: org.apache.spark.sql.execution.QueryExecution,
             exception: Exception): Unit = ()
       })
+    // the timed action is a noop write: it computes every column, where
+    // `count()` lets Catalyst prune joins and projections away. A failed
+    // run keeps its cause (class and first message line) for the
+    // artifact's `errors` map.
     def timeOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Option[Run] = {
+        : Either[String, Run] = {
       org.apache.spark.graftbench.ListenerFlush.drain(spark.sparkContext)
-      spillAcc.set(0L); peakAcc.set(0L); bcastAcc.set(0L)
+      for (a <- Seq(spillAcc, peakAcc, bcastAcc, jobsAcc, stagesAcc,
+          tasksAcc, taskMsAcc)) a.set(0L)
       val t0 = System.nanoTime()
       try {
-        val df = fn(spark, sfDir)
-        df.count()
+        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
         val sec = (System.nanoTime() - t0) / 1e9
         org.apache.spark.graftbench.ListenerFlush.drain(spark.sparkContext)
-        Some(Run(sec, spillAcc.get, peakAcc.get, bcastAcc.get))
+        Right(Run(sec, spillAcc.get, peakAcc.get, bcastAcc.get,
+          jobsAcc.get, stagesAcc.get, tasksAcc.get, taskMsAcc.get))
       }
-      catch { case _: Throwable => None }
+      catch { case e: Throwable =>
+        Left(e.getClass.getName + ": " +
+          String.valueOf(e.getMessage).linesIterator.nextOption()
+            .getOrElse("").take(300))
+      }
     }
     // per-pass contention telemetry (r19 verdict item 1): the min-of-
     // passes peak map is robust to a spike that hits ONE pass, but when
@@ -239,7 +164,7 @@ object Bench {
     // which is the only artifact it ever gates
     val startLoad = nowLoad
     val passLoads = scala.collection.mutable.ArrayBuffer[Double]()
-    val samples: Seq[Seq[Option[Run]]] = (1 to passes).map { _ =>
+    val samples: Seq[Seq[Either[String, Run]]] = (1 to passes).map { _ =>
       val r = ordered.map { case (_, fn) => timeOne(fn) }
       passLoads += nowLoad
       r
@@ -260,11 +185,11 @@ object Bench {
     val spreadThreshold = 1.5
     val heavyFloor = 3.0
     val needThird: Set[Int] = ordered.indices.filter { i =>
-      val good = samples.map(_(i)).flatten.map(_.sec)
+      val good = samples.flatMap(_(i).toOption).map(_.sec)
       good.size >= 2 &&
         (good.max / good.min > spreadThreshold || good.min > heavyFloor)
     }.toSet
-    val third: Map[Int, Option[Run]] =
+    val third: Map[Int, Either[String, Run]] =
       ordered.zipWithIndex.collect {
         case ((_, fn), i) if needThird(i) => i -> timeOne(fn)
       }.toMap
@@ -276,7 +201,7 @@ object Bench {
       if (third.nonEmpty) Some(nowLoad) else None
     val results = ordered.zipWithIndex.map { case ((name, _), i) =>
       val runs = samples.map(_(i)) ++ third.get(i).toSeq
-      (name, runs.flatten, runs)
+      (name, runs.flatMap(_.toOption), runs)
     }
     val failed = results.collect { case (k, good, _) if good.isEmpty => k }
     val flaky = results.collect {
@@ -293,7 +218,7 @@ object Bench {
     }.mkString("{", ",", "}")
     val qsRaw = results.map { case (k, _, ts) =>
       s"\"" + k + "\":" +
-        ts.map(_.map(r => r6(r.sec)).getOrElse("null"))
+        ts.map(_.fold(_ => "null", r => r6(r.sec)))
           .mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     // memory telemetry maps (r16 verdict item 5): MAX across the runs —
@@ -315,12 +240,30 @@ object Bench {
     // box noise can inflate one pass, not all of them — so the 1 GiB
     // working-set gate reads this map and a loaded re-run cannot 4× the
     // gated number
-    def longMapMin(f: Run => Long): String = results.map {
-      case (k, good, _) =>
-        val cell = if (good.isEmpty) "null" else good.map(f).min.toString
-        s"\"" + k + "\":" + cell
+    def longMapMin(f: Run => Long, show: Long => String = _.toString)
+        : String = results.map { case (k, good, _) =>
+      val cell = if (good.isEmpty) "null" else show(good.map(f).min)
+      s"\"" + k + "\":" + cell
     }.mkString("{", ",", "}")
     val qsPeakMin = longMapMin(_.peakMem)
+    // structural counters, MIN over clean runs: the warm reading, once
+    // pass 1 has paid any memo build and schema inference
+    val qsJobs = longMapMin(_.jobs)
+    val qsStages = longMapMin(_.stages)
+    val qsTasks = longMapMin(_.tasks)
+    val qsTaskSec = longMapMin(_.taskMs, ms => r6(ms / 1e3))
+    // the cause of every failed run, in run order, for each query with
+    // one (failed or flaky); empty on a clean suite
+    def jsonStr(x: String): String = "\"" + x.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+    val qsErrors = results.collect { case (k, _, ts) if ts.exists(_.isLeft) =>
+      s"\"" + k + "\":" + ts.collect { case Left(e) => jsonStr(e) }
+        .mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
     // …and the RAW per-run peak map (r19 verdict item 1): aligned with
     // queries_raw (index 0/1 = interleaved passes, 2 = targeted third
     // pass), so the gate can select the runs whose pass load is
@@ -328,7 +271,7 @@ object Bench {
     // pass inflated together
     val qsPeakRaw = results.map { case (k, _, ts) =>
       s"\"" + k + "\":" +
-        ts.map(_.map(_.peakMem.toString).getOrElse("null"))
+        ts.map(_.fold(_ => "null", _.peakMem.toString))
           .mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     // ONE aggregation convention (ADVICE r17): the head total is the sum
@@ -413,7 +356,7 @@ object Bench {
       if (only.isDefined) "PLANS_SUBSET.json" else "PLANS.json")
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(benchOut),
-      s"""{$head,"queries":$qs,"queries_raw":$qsRaw,"spill_bytes":$qsSpill,"peak_exec_mem":$qsPeak,"peak_exec_mem_min":$qsPeakMin,"peak_exec_mem_raw":$qsPeakRaw,"max_broadcast_bytes":$qsBcast}""")
+      s"""{$head,"queries":$qs,"queries_raw":$qsRaw,"spill_bytes":$qsSpill,"peak_exec_mem":$qsPeak,"peak_exec_mem_min":$qsPeakMin,"peak_exec_mem_raw":$qsPeakRaw,"max_broadcast_bytes":$qsBcast,"jobs":$qsJobs,"stages":$qsStages,"tasks":$qsTasks,"task_sec":$qsTaskSec,"errors":$qsErrors}""")
     catch { case _: Throwable => () } // file write is best-effort telemetry
     // plan-shape snapshot (round artifact): PlanAudit over every declared
     // query, so a plan regression (new shuffle, lost broadcast, a

@@ -122,23 +122,22 @@ object PlanAudit {
     * bench records this runtime number per query and ArtifactGateSpec
     * bounds it (r16 verdict item 5). Takes the plan that actually RAN —
     * obtain it from a QueryExecutionListener's onSuccess (an action like
-    * `df.count()` compiles its OWN QueryExecution; the constructed df's
+    * a noop write compiles its OWN QueryExecution; the constructed df's
     * plan never executes, so its metrics stay zero). Descends into AQE
-    * final stages (QueryStageExec wraps its materialized plan as a LEAF —
-    * plain foreach never reaches it), reused exchanges, and subqueries.
+    * nodes at any depth (a V2 write exec holds its query as an AQE
+    * child), their final stages (QueryStageExec wraps its materialized
+    * plan as a LEAF — plain foreach never reaches it), reused exchanges,
+    * and subqueries.
     * A never-executed branch's metric reads 0 — this is a max over what
     * RAN, which is exactly the memory claim being bounded. */
   def maxBroadcastBytes(executed: SparkPlan): Long = {
     import org.apache.spark.sql.execution.adaptive.QueryStageExec
     import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
     var mx = 0L
-    def walk(p: SparkPlan): Unit = {
-      val u = p match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case o => o
-      }
-      u.foreach { n =>
+    def walk(p: SparkPlan): Unit =
+      p.foreach { n =>
         n match {
+          case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
           case qs: QueryStageExec => walk(qs.plan)
           case r: ReusedExchangeExec => walk(r.child)
           case b: BroadcastExchangeLike =>
@@ -148,7 +147,6 @@ object PlanAudit {
         }
         n.subqueries.foreach(walk)
       }
-    }
     walk(executed)
     mx
   }

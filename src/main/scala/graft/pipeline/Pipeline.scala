@@ -135,7 +135,7 @@ object Pipeline {
     * unionByName(allowMissingColumns)); single combined output file. */
   object Combine {
     def run(spark: SparkSession, processedDir: String, combinedDir: String)
-        : Long = {
+        : Unit = {
       // explicit driver-side listing (mirrors the reference's
       // list_objects_v2 at combine_processed.py:13-19) — also avoids the
       // analyzer's noisy glob-path fallback logging
@@ -151,7 +151,6 @@ object Pipeline {
       // reference writes ONE combined object — coalesce(1) is parity at this
       // scale and deliberately NOT what the 100 TB extension ops do.
       out.coalesce(1).write.mode(SaveMode.Overwrite).parquet(combinedDir)
-      spark.read.parquet(combinedDir).count()
     }
   }
 

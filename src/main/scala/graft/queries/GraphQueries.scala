@@ -223,7 +223,7 @@ object GraphQueries extends QueryPack {
       // reduce partitions — AQE cannot re-coalesce a cached plan's
       // output partitioning by default — so every downstream stage paid
       // 32 tasks where the checkpoint's AQE-coalesced leaf paid 1:
-      // JobFloorProbe 41 jobs/48 tasks/1.16s before, 25/404/1.68s
+      // noop-write job probe 41 jobs/48 tasks/1.16s before, 25/404/1.68s
       // after. The checkpoint + count form is the cheaper shape here;
       // the observe-fold only wins where rounds are persist-based with
       // session-parallelism partitioning by design, i.e. the CC loops.)
@@ -425,9 +425,14 @@ object GraphQueries extends QueryPack {
     // min-label would pace 15 guaranteed-wasted rounds before falling
     // back (r11 measured 31.7s → 12.9s for threaded per-arm runs; the
     // fused single run removes the second arm's round-trips too)
-    val comp = graft.operators.ConnectedComponents.components(
+    val cc = graft.operators.ConnectedComponents.components(
       tagN(nodes, 0).unionAll(tagN(dehubNodes, 1)), taggedEdges,
       "n", "u", "v", starFirst = true)
+    // components() hands back a persisted frame whose release is the
+    // caller's: checkpoint the labels this query reads, then unpersist
+    // (as dedupClusters does) so no cache entry outlives the call
+    val comp = cc.select("id", "comp").localCheckpoint(true)
+    cc.unpersist()
     def armOf(c: org.apache.spark.sql.Column) =
       when(c % 2L === 0L, "full").otherwise("dehubbed")
     val sizes = comp.groupBy(armOf(col("id")).as("arm"), col("comp"))

@@ -615,10 +615,14 @@ object ScaleQueries extends QueryPack {
     // the 17-stage gap at the measured ~0.1s/stage scheduler floor IS
     // the wall gap. Labels identical either way (spec-pinned; both
     // converge to min-id components).
-    val comp = graft.operators.ConnectedComponents
+    val cc = graft.operators.ConnectedComponents
       .components(core.select(col("id")), coreEdges, "id", "a", "b",
         starFirst = true)
-      .select(col("id").as("cid"), col("comp").as("cluster_id"))
+    // release the persisted CC result once its labels are checkpointed
+    // (the caller's contract, as in dedupClusters)
+    val comp = cc.select(col("id").as("cid"), col("comp").as("cluster_id"))
+      .localCheckpoint(true)
+    cc.unpersist()
     val coreLab = core.join(comp, core("id") === comp("cid"))
       .select(col("id"), col("cluster_id"), lit("core").as("role"))
     val border = sym

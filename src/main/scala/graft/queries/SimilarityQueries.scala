@@ -475,12 +475,12 @@ object SimilarityQueries extends QueryPack {
     * Memoized per (session, dir) (r21, the fullFitMemo rationale): each
     * fit's seed/checkpoint chain is EAGER, so every CONSTRUCTION of
     * q149/q161 re-ran ~16 tiny jobs plus the per-query broadcast stages —
-    * JobFloorProbe measured q161 at 71 single-task jobs / q149 at 62 on
-    * a WARM pass, nearly all scheduler floor. Centroids are checkpointed
-    * by fit(); the lazy assignments are pinned here; an evicted build's
-    * 2m frames are freed by ContextCleaner once unreachable. Geometry
-    * (m, sub) is fixed by both consumers, so the (session, dir) key is
-    * complete. */
+    * a noop-write job probe measured q161 at 71 single-task jobs / q149
+    * at 62 on a WARM pass, nearly all scheduler floor. Centroids are
+    * checkpointed by fit(); the lazy assignments are pinned here; an
+    * evicted build's 2m frames are freed by ContextCleaner once
+    * unreachable. Geometry (m, sub) is fixed by both consumers, so the
+    * (session, dir) key is complete. */
   private val PqM = 4
   private val pqFitsMemo =
     new graft.operators.SessionDirMemo[List[(DataFrame, DataFrame)]]

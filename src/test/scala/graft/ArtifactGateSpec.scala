@@ -154,9 +154,11 @@ class ArtifactGateSpec extends AnyFunSuite {
       "BENCH_FULL.json predates the memory telemetry — re-run " +
         "sbt 'runMain graft.Bench' (full suite) to regenerate")
     // coverage pin (r17 verdict item 3): every declared query must have
-    // a telemetry cell — a stale or subset artifact exempts queries
+    // a telemetry cell — a stale or subset artifact exempts queries; the
+    // structural counter maps (jobs/stages/tasks/task_sec) are pinned too
     for (m <- Seq("spill_bytes", "peak_exec_mem", "peak_exec_mem_min",
-        "peak_exec_mem_raw", "max_broadcast_bytes"))
+        "peak_exec_mem_raw", "max_broadcast_bytes",
+        "jobs", "stages", "tasks", "task_sec"))
       assert(n.get(m) != null && n.get(m).size == SparkEntry.queries.size,
         s"$m covers ${if (n.get(m) == null) 0 else n.get(m).size} " +
           s"queries, declared ${SparkEntry.queries.size} — stale artifact")

@@ -9,14 +9,17 @@ import graft.operators.SessionDirMemo.rawChain
   * join or a rewrite introduced a cartesian — the artifact records the
   * regression, this spec rejects it. Each pin is the static pre-AQE
   * shuffle count ([[PlanAudit.of]]) measured at sf0.001 via
-  * [[PlanPinTool]], +2 slack so a stats-driven join-strategy wobble
-  * doesn't flap the suite while a real lost broadcast (typically +2
-  * shuffles per join side) still trips it. Cartesians pin at exactly
+  * `Test/runMain graft.PlanCounterSweepTool shuffles` (read off this
+  * map's keys; a key the sweep omits pins 0), +2 slack so a
+  * stats-driven join-strategy wobble doesn't flap the suite while a
+  * real lost broadcast (typically +2 shuffles per join side) still
+  * trips it. Cartesians pin at exactly
   * zero — no slack, no legitimate reason for one to appear in these
   * query shapes at any scale. */
 object PlanGateSpec {
   private val slack = 2L
-  /** query → measured static shuffle count at sf0.001 (PlanPinTool). */
+  /** query → measured static shuffle count at sf0.001
+    * (PlanCounterSweepTool shuffles). */
   val measured: Map[String, Long] = Map(
     "q263_dbscan" -> 12L,
     "q275_stitched_sessions" -> 4L,
@@ -243,7 +246,8 @@ class PlanGateSpec extends SparkSuite {
       assert(a.shuffles <= PlanGateSpec.maxShuffles(name),
         s"$name shuffles ${a.shuffles} > pinned $pinned+2 — a broadcast " +
           s"likely degraded to a shuffle join (re-measure with " +
-          s"PlanPinTool if the new shape is intentional): $a")
+          s"PlanCounterSweepTool shuffles if the new shape is " +
+          s"intentional): $a")
     }
   }
 }

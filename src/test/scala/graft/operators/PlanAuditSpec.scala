@@ -23,6 +23,29 @@ class PlanAuditSpec extends SparkSuite {
     assert(a.broadcasts == 1 && a.shuffles == 0, a)
   }
 
+  test("maxBroadcastBytes reads the broadcast under a noop write's plan") {
+    // the write exec holds the query as a NESTED AQE child, which a walk
+    // that only unwraps an AQE root never reaches
+    val seen = new java.util.concurrent.atomic.AtomicLong
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        seen.accumulateAndGet(PlanAudit.maxBroadcastBytes(qe.executedPlan),
+          math.max(_, _))
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      val dim = Seq((0L, "x"), (1L, "y")).toDF("k", "name")
+      big.join(broadcast(dim), "k")
+        .write.mode("overwrite").format("noop").save()
+      org.apache.spark.graftbench.ListenerFlush.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(l)
+    assert(seen.get > 0L, "no materialized broadcast seen under the write")
+  }
+
   test("a crossJoin of non-broadcast sides is flagged") {
     val a = PlanAudit.of(big.crossJoin(big.select(col("id").as("id2"))))
     assert(a.cartesians + a.nestedLoopJoins >= 1, a)

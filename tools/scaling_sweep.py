@@ -130,6 +130,7 @@ SFS = ["0.001", "0.01", "0.1"]
 # the wrong scaling signal. The build cost rides the FIRST raw sample of
 # the memo's first consumer in suite order — use that for the builder,
 # and mark pure-stub siblings instead of fitting a meaningless slope.
+# Bench has no JIT warmup, so a pass-1 sample also carries one-time JIT.
 COLD_FIRST_SAMPLE = {
     "q264_sssp": "fused semiring loop builds here (pass-1 raw sample)",
     "q118_kmeans": "k-means fit memo builds here (pass-1 raw sample)",
