@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TextAnalysis
+import graft.operators.CheckpointBlocks.checkpoint
 
 /** Distributed BPE tokenizer training — the iterative half of the
   * tokenizer-prep surface (q359 censuses merge candidates for ONE
@@ -127,7 +128,7 @@ object BpeTrainer {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     require(batch >= 1, s"batch must be >= 1, got $batch")
     var round = 0
-    var words = seedWords(docsDf, textCol).localCheckpoint(true)
+    var words = checkpoint(seedWords(docsDf, textCol))
     val merges = scala.collection.mutable.ListBuffer[Merge]()
     var done = false
     while (merges.length < rounds && !done) {
@@ -193,7 +194,7 @@ object BpeTrainer {
           .select(col("word"),
             when(hit, folded).otherwise(col("symbols")).as("symbols"),
             col("freq"))
-          .localCheckpoint(true)
+          .transform(checkpoint)
         // release the superseded round's blocks — the new checkpoint is
         // already materialized, nothing reads the old one again
         CheckpointBlocks.release(prev)

@@ -2,13 +2,20 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
-/** The one place that knows how to find a checkpointed frame's cached
-  * blocks — used by the iterative loops' eager per-round release
-  * ([[BpeTrainer]], [[PrefixScan]]) and the plan gates' leaf checks; a
-  * Spark upgrade that moves LogicalRDD must be absorbed exactly once,
-  * here. Memo evictions do not come through here: Spark's ContextCleaner
-  * frees those blocks once nothing can reach them. */
+/** The one owner of materialization in `graft`: it makes a checkpoint
+  * ([[checkpoint]]), finds its blocks ([[leaves]], also the plan gates'
+  * leaf check) and releases them ([[release]], the iterative loops'
+  * eager per-round free in [[BpeTrainer]] and [[PrefixScan]]). A frame
+  * it returns needs no release by its caller: Spark's ContextCleaner
+  * frees the blocks once no plan or RDD reaches them. A change of
+  * checkpoint kind, or a Spark upgrade that moves LogicalRDD, is
+  * absorbed here once. */
 private[graft] object CheckpointBlocks {
+
+  /** Materialize `df` eagerly and return it re-anchored on a LogicalRDD
+    * leaf over the computed blocks (a local checkpoint: executor block
+    * storage, no reliable copy). */
+  def checkpoint(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
   /** The LogicalRDD leaves of `df`'s analyzed plan — for an eagerly
     * localCheckpoint'd frame, the node holding its cached blocks (and

@@ -38,7 +38,9 @@ import org.apache.spark.storage.StorageLevel
   * Iteration hygiene at scale: each round's labels are persisted and the
   * previous round's are unpersisted, so lineage does not grow with the
   * iteration count (re-execution of round k reads round k-1's cached
-  * labels, not the whole chain).
+  * labels, not the whole chain). A run releases every cache it made
+  * before it returns or throws; the result is a checkpoint, so callers
+  * release nothing.
   */
 object ConnectedComponents {
 
@@ -95,16 +97,20 @@ object ConnectedComponents {
   private def snap(df: DataFrame): DataFrame =
     df.sparkSession.createDataFrame(df.rdd, df.schema)
 
-  /** `edges`: two integral id columns (undirected; either orientation).
+  /** Connected components of `edges` over the vertex set `nodes`.
+    * `edges`: two integral id columns (undirected; either orientation).
     * `nodes`: one id column — declares the vertex set, so isolated nodes
     * come back as their own singleton components; edge endpoints absent
     * from `nodes` join the vertex set implicitly.
-    * Returns (id, component) with component = min node id reachable, one
-    * row per distinct id. The result is persisted (MEMORY_AND_DISK) and
-    * already materialized — the iteration's intermediate caches are
-    * released before returning — so `.unpersist()` on the returned
-    * DataFrame releases everything once the caller is done. */
-  /** `starFirst = true` skips the min-label propagation phase and goes
+    *
+    * Returns (id, comp) with comp = min node id reachable, one row per
+    * distinct id, as an already-materialized
+    * [[CheckpointBlocks.checkpoint]]. Every cache the run makes (edge
+    * set, rounds, result) is released before it returns or throws, so
+    * the caller has nothing to release; a projection of the result is
+    * already materialized too.
+    *
+    * `starFirst = true` skips the min-label propagation phase and goes
     * straight to alternating-star. Labels are IDENTICAL either way (both
     * converge to min-id components — the choice is pure cost); use it
     * when the caller KNOWS the graph is high-diameter (a giant sparse
@@ -117,127 +123,124 @@ object ConnectedComponents {
       idCol: String, srcCol: String, dstCol: String,
       maxIter: Int = 50, starFirst: Boolean = false,
       starFallbackAt: Int = StarFallbackDefault): DataFrame = {
-    // persist the symmetric edge set: it seeds the labels and is read once
-    // per round, and its lineage may be an arbitrarily expensive upstream
-    // pipeline (q67's is the whole shingle→jaccard candidate chain —
-    // recomputing it per round cost 4×).
-    // PRE-PARTITIONED on the join key (r20, guide §2.4 — partition once,
-    // iterate many): every propagation round joins sym on `src`, and an
-    // unpartitioned cache re-shuffled the O(E) edge set EVERY round while
-    // the labels side is only O(V). One explicit hash repartition before
-    // the persist makes the cached InMemoryRelation carry
-    // hashpartitioning(src, n) — each round's join then exchanges only
-    // the label table. At 100 TB the edge set is the corpus-scale side;
-    // this moves the per-round shuffle from O(E) to O(V).
-    val np = math.max(1,
-      edges.sparkSession.sessionState.conf.numShufflePartitions)
-    val sym = edges
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .union(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
-      .repartition(np, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // materialize NOW: the seed below and round 1 both read sym, and two
-    // reads racing inside one first job can each recompute the (expensive)
-    // edge lineage before the cache is fully populated
-    sym.count()
-    var cached = sym.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("comp"), col("id").as("prev"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = cached.select("id", "comp")
-    var iter = 0
-    var changed = 1L
-    val propCap = if (starFirst) 0 else math.min(maxIter, starFallbackAt)
-    // One propagation step per materialization barrier — measured, not
-    // assumed (ANALYSIS_r12_q263.md): at small frontier sizes the round
-    // cost is per-STAGE scheduler floor, and both attempted accelerations
-    // lost or tied on q263's 12-round percolation core — a label-of-label
-    // pointer-jump never shortcuts through regional minima (label sinks:
-    // 12 rounds stayed 12, join cost added), and chaining two steps per
-    // barrier just serializes the same shuffle stages inside one job
-    // (5.9–6.3 s either way). The plain loop is the simplest shape with
-    // the same measured cost.
-    while (changed > 0 && iter < propCap) {
-      // neighbor labels flow along edges; min over {self} ∪ neighbors.
-      // The self rows are tagged so the round's OLD label rides through the
-      // same aggregation as `prev` — change detection costs no extra
-      // join/shuffle, just a filter over the (cached) round output.
-      val msgs = sym.join(labels.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), col("comp"), lit(false).as("self"))
-      val next = labels.withColumn("self", lit(true)).unionByName(msgs)
-        .groupBy("id")
-        .agg(min("comp").as("comp"),
-          min(when(col("self"), col("comp"))).as("prev"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // null prev would mean a vertex with no self row — impossible now
-      // that labels seed from the endpoint set itself, but kept as a
-      // change signal so a future seeding change cannot fake convergence.
-      // The changed-row count rides an observe() metric on the noop write
-      // that materializes the cache — NOT a separate .count() action: the
-      // count's single-partition final reduce was one extra stage of
-      // scheduler floor per round (round-12 verdict item 5; A/B numbers
-      // in ANALYSIS_r13_ccfloor.md). The observe node sits ABOVE the
-      // persist, so the metric fires off the rows streaming out of the
-      // cache-building scan and later cache hits never re-fire it.
-      changed = materializeCounting(next,
-        sum(when(col("prev").isNull || col("comp") =!= col("prev"), 1L)
-          .otherwise(0L)))
-      cached.unpersist()
-      cached = next
-      // snap: next round's plan must reference THIS round as a leaf, not as
-      // a subtree, or plan size doubles per round (see [[snap]])
-      labels = snap(next).select("id", "comp")
-      iter += 1
+    // every cache this run makes, alternating-star's included; the one
+    // finally below releases them all — after the result is checkpointed,
+    // on non-convergence and on a failed job alike
+    val caches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def persisted(df: DataFrame): DataFrame = {
+      caches += df
+      df.persist(StorageLevel.MEMORY_AND_DISK)
     }
-    lastPropRounds = iter
-    if (changed != 0 && maxIter > propCap) {
-      // high-diameter graph: min-label is pacing at one hop per round —
-      // hand the (still-cached) edge set to alternating-star, which owns
-      // its own iteration caches and returns persisted+materialized labels
-      val starLabels =
-        try alternatingStar(sym, maxIter)
-        catch { case e: Throwable =>
-          cached.unpersist(); sym.unpersist(); throw e
-        }
-      cached.unpersist()
-      cached = starLabels
-      // star labels cover the final star forest's endpoints; any endpoint
-      // whose component IS itself may have contracted away, so re-anchor on
-      // the full endpoint set (computed from the still-persisted sym)
-      labels = sym.select(col("src").as("id")).distinct()
-        .join(starLabels.select(col("id"), col("comp")), Seq("id"), "left")
-        .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
-      changed = 0
-    }
-    // release the iteration caches BEFORE the convergence check throws:
-    // on the non-convergence path nothing caller-visible references them, so
-    // leaving them persisted would leak executor memory for the JVM's life.
-    // (On success sym must stay cached until the result materializes — the
-    // star path's labels re-anchor on sym's endpoint set.)
-    if (changed != 0) { sym.unpersist(); cached.unpersist() }
-    require(changed == 0,
-      s"connected components did not converge in $maxIter rounds")
-    // Singletons (declared nodes with no edges) never entered the loop: a
-    // full-outer join stitches them back as their own components while
-    // keeping undeclared endpoints from the label side; distinct() keeps
-    // the one-row-per-id contract if `nodes` carries duplicates. The
-    // result is persisted and MATERIALIZED here so the final round's
-    // intermediate cache can be released — otherwise it would leak with no
-    // caller-visible handle (unpersist on a derived plan is a no-op).
-    val result = nodes.select(col(idCol).as("id")).distinct()
-      .join(labels, Seq("id"), "full_outer")
-      .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    result.count()
-    sym.unpersist()
-    cached.unpersist()
-    result
+    try {
+      // persist the symmetric edge set: it seeds the labels and is read
+      // once per round, and its lineage may be an arbitrarily expensive
+      // upstream pipeline (q67's is the whole shingle→jaccard candidate
+      // chain — recomputing it per round cost 4×).
+      // PRE-PARTITIONED on the join key (r20, guide §2.4 — partition
+      // once, iterate many): every propagation round joins sym on `src`,
+      // and an unpartitioned cache re-shuffled the O(E) edge set EVERY
+      // round while the labels side is only O(V). One explicit hash
+      // repartition before the persist makes the cached InMemoryRelation
+      // carry hashpartitioning(src, n) — each round's join then exchanges
+      // only the label table. At 100 TB the edge set is the corpus-scale
+      // side; this moves the per-round shuffle from O(E) to O(V).
+      val np = math.max(1,
+        edges.sparkSession.sessionState.conf.numShufflePartitions)
+      val sym = persisted(edges
+        .select(col(srcCol).as("src"), col(dstCol).as("dst"))
+        .union(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
+        .repartition(np, col("src")))
+      // materialize NOW: the seed below and round 1 both read sym, and two
+      // reads racing inside one first job can each recompute the
+      // (expensive) edge lineage before the cache is fully populated
+      sym.count()
+      var cached = persisted(sym.select(col("src").as("id")).distinct()
+        .select(col("id"), col("id").as("comp"), col("id").as("prev")))
+      var labels = cached.select("id", "comp")
+      var iter = 0
+      var changed = 1L
+      val propCap = if (starFirst) 0 else math.min(maxIter, starFallbackAt)
+      // One propagation step per materialization barrier — measured, not
+      // assumed (ANALYSIS_r12_q263.md): at small frontier sizes the round
+      // cost is per-STAGE scheduler floor, and both attempted
+      // accelerations lost or tied on q263's 12-round percolation core —
+      // a label-of-label pointer-jump never shortcuts through regional
+      // minima (label sinks: 12 rounds stayed 12, join cost added), and
+      // chaining two steps per barrier just serializes the same shuffle
+      // stages inside one job (5.9–6.3 s either way). The plain loop is
+      // the simplest shape with the same measured cost.
+      while (changed > 0 && iter < propCap) {
+        // neighbor labels flow along edges; min over {self} ∪ neighbors.
+        // The self rows are tagged so the round's OLD label rides through
+        // the same aggregation as `prev` — change detection costs no extra
+        // join/shuffle, just a filter over the (cached) round output.
+        val msgs = sym.join(labels.withColumnRenamed("id", "src"), "src")
+          .select(col("dst").as("id"), col("comp"), lit(false).as("self"))
+        val next = persisted(labels.withColumn("self", lit(true))
+          .unionByName(msgs)
+          .groupBy("id")
+          .agg(min("comp").as("comp"),
+            min(when(col("self"), col("comp"))).as("prev")))
+        // null prev would mean a vertex with no self row — impossible now
+        // that labels seed from the endpoint set itself, but kept as a
+        // change signal so a future seeding change cannot fake
+        // convergence. The changed-row count rides an observe() metric on
+        // the noop write that materializes the cache — NOT a separate
+        // .count() action: the count's single-partition final reduce was
+        // one extra stage of scheduler floor per round (round-12 verdict
+        // item 5; A/B numbers in ANALYSIS_r13_ccfloor.md). The observe
+        // node sits ABOVE the persist, so the metric fires off the rows
+        // streaming out of the cache-building scan and later cache hits
+        // never re-fire it.
+        changed = materializeCounting(next,
+          sum(when(col("prev").isNull || col("comp") =!= col("prev"), 1L)
+            .otherwise(0L)))
+        cached.unpersist()
+        cached = next
+        // snap: next round's plan must reference THIS round as a leaf, not
+        // as a subtree, or plan size doubles per round (see [[snap]])
+        labels = snap(next).select("id", "comp")
+        iter += 1
+      }
+      lastPropRounds = iter
+      if (changed != 0 && maxIter > propCap) {
+        // high-diameter graph: min-label is pacing at one hop per round —
+        // hand the (still-cached) edge set to alternating-star, which
+        // returns materialized labels. Star labels cover the final star
+        // forest's endpoints; any endpoint whose component IS itself may
+        // have contracted away, so re-anchor on the full endpoint set
+        // (computed from the still-persisted sym)
+        val starLabels = alternatingStar(sym, maxIter, persisted)
+        labels = sym.select(col("src").as("id")).distinct()
+          .join(starLabels.select(col("id"), col("comp")), Seq("id"), "left")
+          .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
+        changed = 0
+      }
+      require(changed == 0,
+        s"connected components did not converge in $maxIter rounds")
+      // Singletons (declared nodes with no edges) never entered the loop:
+      // a full-outer join stitches them back as their own components
+      // while keeping undeclared endpoints from the label side; distinct()
+      // keeps the one-row-per-id contract if `nodes` carries duplicates.
+      // Persisted and counted BEFORE the checkpoint: the checkpoint leaf
+      // takes its size statistics from the materialized cache, and those
+      // are what the callers' broadcast choices read (a checkpoint of the
+      // raw join would estimate as huge — the snap leaves carry none).
+      val result = persisted(nodes.select(col(idCol).as("id")).distinct()
+        .join(labels, Seq("id"), "full_outer")
+        .select(col("id"), coalesce(col("comp"), col("id")).as("comp")))
+      result.count()
+      CheckpointBlocks.checkpoint(result)
+    } finally caches.foreach(_.unpersist())
   }
 
   /** Alternating large-star/small-star (Kiveris et al. 2014): contracts
     * every component to a star rooted at its minimum id in O(log n) rounds.
     * Works on the CANONICAL edge set — (u, v) with u > v, distinct, no
-    * self-loops — and returns a persisted, materialized (id, comp) frame
-    * over the final forest's endpoints.
+    * self-loops — and returns a materialized (id, comp) frame over the
+    * final forest's endpoints. Every cache it makes goes through
+    * `persisted`, the caller's release list, so [[components]]' one
+    * `finally` frees them on every exit path.
     *
     * Large-star: every node u computes m = min(N(u) ∪ {u}) and rewires each
     * LARGER neighbor v > u to m (edge (v, m)). Small-star: every node u
@@ -263,12 +266,12 @@ object ConnectedComponents {
     * a star forest, which is exactly the first round the old test found
     * next == edges — so round counts and labels are bit-identical
     * (ConnectedComponentsSpec pins both, plus the forced-star paths). */
-  private def alternatingStar(sym: DataFrame, maxRounds: Int): DataFrame = {
-    var cache = sym.filter(col("src") =!= col("dst"))
+  private def alternatingStar(sym: DataFrame, maxRounds: Int,
+      persisted: DataFrame => DataFrame): DataFrame = {
+    var cache = persisted(sym.filter(col("src") =!= col("dst"))
       .select(greatest(col("src"), col("dst")).as("u"),
         least(col("src"), col("dst")).as("v"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     var edges = snap(cache) // leaf plan — same round-over-round rule as the
     // min-label loop: each round must reference the last as a leaf
     // (count() both materializes the canonical-set cache fully and
@@ -321,12 +324,11 @@ object ConnectedComponents {
       // v ≥ m by minimality, v = m is the tautological self-loop.
       val sWithMin = large
         .withColumn("m", min(col("v")).over(Window.partitionBy("u")))
-      val next = sWithMin.select(col("v").as("n"), col("m"))
+      val next = persisted(sWithMin.select(col("v").as("n"), col("m"))
         .union(sWithMin.select(col("u").as("n"), col("m")))
         .filter(col("n") =!= col("m"))
         .select(col("n").as("u"), col("m").as("v"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .distinct())
       // one noop write materializes the round's cache AND fires the
       // upstream violation metric (same fold as the min-label loop)
       next.write.mode("overwrite").format("noop").save()
@@ -337,20 +339,17 @@ object ConnectedComponents {
       round += 1
     }
     lastStarRounds = round
-    if (!converged) cache.unpersist()
     require(converged,
       s"connected components (alternating star) did not converge in " +
         s"$maxRounds rounds")
     // the fixed point is a forest of min-rooted stars: every leaf's sole
     // neighbor is its root, every root's neighbors are all larger
-    val labels = edges
+    val labels = persisted(edges
       .select(col("u").as("id"), col("v").as("nb"))
       .union(edges.select(col("v").as("id"), col("u").as("nb")))
       .groupBy("id").agg(min("nb").as("mv"))
-      .select(col("id"), least(col("mv"), col("id")).as("comp"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .select(col("id"), least(col("mv"), col("id")).as("comp")))
     labels.count()
-    cache.unpersist()
     labels
   }
 }

@@ -178,14 +178,9 @@ object DedupPipeline {
   def near(df: DataFrame, idCol: String, textCol: String,
       n: Int = 5, threshold: Double = 0.5,
       maxDf: Long = 1000): DataFrame = {
-    val comp = nearComponents(df, idCol, textCol, n, threshold, maxDf)
-    // keeper ids are tiny — materialize them eagerly so the components
-    // cache (and the whole candidate-pair lineage behind it) can be
-    // released before the caller ever evaluates the result
-    val keepers = comp.filter(col("id") === col("comp"))
+    val keepers = nearComponents(df, idCol, textCol, n, threshold, maxDf)
+      .filter(col("id") === col("comp"))
       .select(col("id").as(idCol))
-      .localCheckpoint(true)
-    comp.unpersist()
     df.join(keepers, Seq(idCol), "left_semi")
   }
 
@@ -195,8 +190,8 @@ object DedupPipeline {
     * set AND cluster-level decisions (keeper-policy comparison,
     * attrition forensics) runs the expensive CC exactly once —
     * [[near]]'s keeper rule is `id == comp` over this frame. Returned
-    * persisted (ConnectedComponents' contract); callers that
-    * checkpoint it should unpersist the original. */
+    * as ConnectedComponents' checkpoint: already materialized, with
+    * nothing for the caller to release. */
   def nearComponents(df: DataFrame, idCol: String, textCol: String,
       n: Int = 5, threshold: Double = 0.5,
       maxDf: Long = 1000): DataFrame = {

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.Hashing
+import graft.operators.CheckpointBlocks.checkpoint
 
 /** Deterministic distributed k-means (Lloyd's algorithm) over an embedding
   * column, in integer fixed-point — every centroid, assignment, and
@@ -66,12 +67,12 @@ object KMeans {
     val vq = vectors
       .select(col(idCol).cast("long").as("vid"),
         quantize(col(vecCol), scale).as("vq"))
-      .localCheckpoint(true)
+      .transform(checkpoint)
     var cents = vq
       .orderBy(Hashing.md5U32(col("vid").cast("string")).asc, col("vid").asc)
       .limit(k)
       .select(col("vid").as("cid"), col("vq").as("cq"))
-      .localCheckpoint(true)
+      .transform(checkpoint)
     for (_ <- 1 to iters) {
       val assigned = assign(vq, cents)
       // decimal(38,0) accumulator: with 1e6-scale quantization a cluster's
@@ -97,7 +98,7 @@ object KMeans {
         .groupBy("cid")
         .agg(count(lit(1)).as("__n"), sums: _*)
         .select(col("cid"), centroid.as("cq"))
-        .localCheckpoint(true)
+        .transform(checkpoint)
     }
     (cents, assign(vq, cents))
   }

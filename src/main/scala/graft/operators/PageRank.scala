@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.Rounding.intDiv
+import graft.operators.CheckpointBlocks.checkpoint
 
 /** Fixed-iteration PageRank over an edge list, in pure int64 fixed-point.
   *
@@ -95,7 +96,7 @@ object PageRank {
     // the checkpoint that build re-executes inside every round's ranks
     // assembly (plan audit: 60 scans → 44, within 10% of ranks()'s 40;
     // warm-JVM wall time at sf0.1 is parity with ranks(), 2.13 vs 2.17s).
-    val seedFlag = s.withColumn("is_seed", lit(1L)).localCheckpoint(true)
+    val seedFlag = checkpoint(s.withColumn("is_seed", lit(1L)))
     val nSeeds = seedFlag.count() // tiny action, |S| needed as a literal
     require(nSeeds > 0, "personalizedRanks: no seed is present in the graph")
     val outdeg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))

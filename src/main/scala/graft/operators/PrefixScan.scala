@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.graftexec.InternalScan
 import org.apache.spark.sql.graftexec.InternalScan.FoldCol
+import graft.operators.CheckpointBlocks.checkpoint
 
 /** Distributed running aggregates over a TOTAL order — the scale-safe twin
   * of `sum(x)/min(x) OVER (ORDER BY … ROWS UNBOUNDED PRECEDING)`, which,
@@ -80,7 +81,7 @@ object PrefixScan {
     val (out, _, scratch) = InternalScan.scan(df,
       cols.map { case (v, o) => FoldCol(v, o, 0L, _ + _) },
       None, sortExprs)
-    val mat = out.localCheckpoint(true)
+    val mat = checkpoint(out)
     // the materialized copy no longer reads the sorted scratch — free
     // its blocks now instead of pinning them for the session's life
     CheckpointBlocks.release(scratch)

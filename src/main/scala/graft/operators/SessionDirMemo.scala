@@ -7,11 +7,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * warm in one session; a third key drops the least-recently-used slot.
   *
   * Builds must be DETERMINISTIC and return an ALREADY-MATERIALIZED value
-  * (the call site materializes through [[SessionDirMemo.pin]]). Eviction
-  * only drops the slot and never unpersists (ADVICE r13: a reader may
-  * still hold a lineage-truncated frame). Spark's ContextCleaner frees
-  * the evicted build's checkpoint blocks once no plan or RDD can reach
-  * them.
+  * (the call site materializes through [[SessionDirMemo.pin]], or returns
+  * a projection of a [[ConnectedComponents]] result, which is already a
+  * checkpoint). Eviction only drops the slot and never unpersists
+  * (ADVICE r13: a reader may still hold a lineage-truncated frame).
+  * Spark's ContextCleaner frees the evicted build's checkpoint blocks
+  * once no plan or RDD can reach them.
   *
   * Inside [[SessionDirMemo.rawChain]] `get` runs `build` without reading
   * or writing a slot, and `pin` is the identity, so every memoized
@@ -52,10 +53,11 @@ private[graft] object SessionDirMemo {
   /** Whether the calling thread is inside [[rawChain]]. */
   private[graft] def inRawChain: Boolean = raw.get
 
-  /** The one materialization of a memo build: an eager localCheckpoint,
-    * or the input itself inside [[rawChain]]. */
+  /** The one materialization of a memo build: a
+    * [[CheckpointBlocks.checkpoint]], or the input itself inside
+    * [[rawChain]]. */
   def pin(df: DataFrame): DataFrame =
-    if (inRawChain) df else df.localCheckpoint(true)
+    if (inRawChain) df else CheckpointBlocks.checkpoint(df)
 
   /** Test hook: evaluates `body` with every memo bypassed and every
     * [[pin]] a no-op, on this thread only. Scopes nest, and the previous

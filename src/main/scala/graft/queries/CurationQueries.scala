@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryPack, Tables}
 import graft.functions.{HeavyHitters, Rounding, TextAnalysis}
+import graft.operators.CheckpointBlocks.checkpoint
 
 /** Training-data curation operators — the screens and statistics a corpus
   * pipeline runs between raw crawl and tokenizer: n-gram language-model
@@ -610,7 +611,7 @@ object CurationQueries extends QueryPack {
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("source"),
         length(col("text")).cast("long").as("n_chars"))
-      .localCheckpoint(true)
+      .transform(checkpoint)
     val wSrc = Window.partitionBy("source")
       .orderBy(col("n_chars"), col("doc_id"))
     val ranked = d
@@ -872,11 +873,8 @@ object CurationQueries extends QueryPack {
   private def corpusComponents(s: SparkSession, dir: String,
       exact: DataFrame): DataFrame =
     corpusCompMemo.get(s, dir) {
-      val comp = graft.operators.DedupPipeline.nearComponents(
+      graft.operators.DedupPipeline.nearComponents(
         exact, "doc_id", "text", n = 5, threshold = 0.5, maxDf = 1000L)
-      val pinned = comp.localCheckpoint(true)
-      comp.unpersist()
-      pinned
     }
 
   /** Second memo boundary, at the MIX stage (r13 bench: the
@@ -1350,7 +1348,7 @@ object CurationQueries extends QueryPack {
         Rounding.intDiv(
           floor(col("jaccard") * lit(10000.0) + lit(0.5)).cast("long"),
           lit(500L)).as("bucket"))
-      .localCheckpoint(true)
+      .transform(checkpoint)
     val pairBuckets = pb.groupBy("bucket").agg(count(lit(1)).as("n_pairs"))
     val docMax = pb.select(col("id_a").as("doc_id"), col("bucket"))
       .unionAll(pb.select(col("id_b").as("doc_id"), col("bucket")))

@@ -8,6 +8,7 @@ import graft.functions.Hashing
 import graft.functions.Rounding.roundf
 import graft.functions.TextAnalysis._
 import graft.operators.SessionDirMemo.pin
+import graft.operators.CheckpointBlocks.checkpoint
 
 /** Deduplication operators for training-data pipelines (BASELINE.json north
   * star): exact (hash-groupBy), n-gram Jaccard, MinHash+LSH banding, and
@@ -97,23 +98,17 @@ object DedupQueries extends QueryPack {
     * pattern one stage further down the funnel: three standalone
     * queries each re-ran the O(edges)-per-round closure for
     * bit-identical labels). One row per document — corpus-bounded; the
-    * CC result's own iteration cache is released once the checkpoint
-    * materializes. */
+    * memo holds a projection of the CC result, which is already a
+    * checkpoint. */
   private val clusterMemo = new graft.operators.SessionDirMemo[DataFrame]
 
   private def dedupClusters(s: SparkSession, dir: String): DataFrame =
     clusterMemo.get(s, dir) {
-      val cc = graft.operators.ConnectedComponents
+      graft.operators.ConnectedComponents
         .components(docs(s, dir).select("doc_id"),
           jaccardPairs(s, dir).select("doc_a", "doc_b"),
           "doc_id", "doc_a", "doc_b")
-      // the memo checkpoints the projection; release the CC result's own
-      // persisted cache once the checkpoint has materialized — returning
-      // it un-released would pin a second copy for the session's life
-      val projected = cc.select(col("id").as("doc_id"), col("comp"))
-        .localCheckpoint(true)
-      cc.unpersist()
-      projected
+        .select(col("id").as("doc_id"), col("comp"))
     }
 
   /** Dedup clustering: connected components over the near-dup pair graph
@@ -670,7 +665,7 @@ object DedupQueries extends QueryPack {
       .withColumn("df", count(lit(1)).over(Window.partitionBy("g")))
       .filter(col("df") <= MaxDf)
       .select("doc_id", "pos", "g")
-      .localCheckpoint(true)
+      .transform(checkpoint)
     val m = gf.select(col("doc_id").as("doc_a"), col("pos").as("pa"),
         col("g"))
       .join(gf.select(col("doc_id").as("doc_b"), col("pos").as("pb"),

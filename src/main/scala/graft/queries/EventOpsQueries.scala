@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryPack, Tables}
 import graft.functions.{Hashing, Rounding}
+import graft.operators.CheckpointBlocks.checkpoint
 
 /** Event-stream operations every large-scale pipeline needs: deterministic
   * stratified sampling and gap-based sessionization. Both are pure
@@ -491,7 +492,7 @@ object EventOpsQueries extends QueryPack {
 
   private def identityClusters(s: SparkSession, dir: String): DataFrame =
     identityMemo.get(s, dir) {
-      identityClustersBuild(s, dir) // checkpoints + releases internally
+      identityClustersBuild(s, dir) // a projection of CC's checkpoint
     }
 
   private def identityClustersBuild(s: SparkSession, dir: String): DataFrame = {
@@ -512,16 +513,9 @@ object EventOpsQueries extends QueryPack {
           "y -> named_struct('a', x, 'b', y))))")).as("p"))
       .select(col("p.a"), col("p.b")).distinct()
     val nodes = ev(s, dir).select(col("user_id")).distinct()
-    val cc = graft.operators.ConnectedComponents
+    graft.operators.ConnectedComponents
       .components(nodes, pairs, "user_id", "a", "b")
-    // release the CC result's own cache once the memo's checkpoint of
-    // the projection materializes — the dedupClusters discipline;
-    // leaving it persisted would pin a duplicate user-scale copy
-    val projected = cc
       .select(col("id").as("user_id"), col("comp").as("identity_id"))
-      .localCheckpoint(true)
-    cc.unpersist()
-    projected
   }
 
   private def q244(s: SparkSession, dir: String): DataFrame =
@@ -679,7 +673,7 @@ object EventOpsQueries extends QueryPack {
     // (each round references the previous π once, not twice) and holds
     // one row per STATE (event types, ~5) — four materialization
     // barriers would buy nothing and cost 4 scheduler round-trips.
-    val e = trans.join(rows, "src").localCheckpoint(true)
+    val e = checkpoint(trans.join(rows, "src"))
     val states = e.select(col("src").as("state"))
       .union(e.select(col("dst"))).distinct()
     val total = 1000000000000L
@@ -1314,7 +1308,7 @@ object EventOpsQueries extends QueryPack {
           .as("freq"),
         sum(when(col("event_type") === "purchase", col("cents"))
           .otherwise(0L).cast("decimal(38,0)")).cast("long").as("monetary"))
-      .localCheckpoint(true)
+      .transform(checkpoint)
     // withRankN (r21, guide §1.2): the quintile split needs n alongside
     // the rank, and the rank pass has already collected it — the former
     // count() aggregate + broadcast cross join per scorer (three of

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.{QueryPack, Tables}
 import graft.functions.Rounding.{cents, roundf, sumExact}
 import graft.functions.WeightedAvg
+import graft.operators.CheckpointBlocks.checkpoint
 
 /** Second breadth wave: as-of join, exact distinct counts, typed
   * Aggregator, pivot, exact percentiles, statistical aggregates, date
@@ -436,7 +437,7 @@ object ExtraQueries extends QueryPack {
       .groupBy(col("o_custkey").as("custkey"),
         year(col("o_orderdate")).as("yr"))
       .agg(sumCents(c(col("o_totalprice"))).as("spend_cents"))
-      .localCheckpoint(true)
+      .transform(checkpoint)
     // withRankN (r21, guide §1.2): the decile split needs n alongside
     // the rank, and the rank pass has already collected it — each arm's
     // count() aggregate + broadcast cross join went with it.

@@ -6,6 +6,7 @@ import graft.{QueryPack, Tables}
 import graft.functions.Rounding.intDivSql
 import graft.operators.PageRank
 import graft.operators.SessionDirMemo.pin
+import graft.operators.CheckpointBlocks.checkpoint
 
 /** Graph analytics over relational edge lists — the iterative-join family
   * ([[graft.operators.ConnectedComponents]] is the other member). The
@@ -218,22 +219,23 @@ object GraphQueries extends QueryPack {
       // and its own count — without this the degree aggregation re-runs
       // three times per round.
       // (r21, measured and REVERTED: folding the two count() jobs into
-      // persist + Materialize.counting saved 8 scheduler-floor jobs but
-      // a PERSISTED round frame materializes with the plan's full 32
-      // reduce partitions — AQE cannot re-coalesce a cached plan's
-      // output partitioning by default — so every downstream stage paid
-      // 32 tasks where the checkpoint's AQE-coalesced leaf paid 1:
+      // persist + ConnectedComponents.materializeCounting saved 8
+      // scheduler-floor jobs but a PERSISTED round frame materializes
+      // with the plan's full 32 reduce partitions — AQE cannot
+      // re-coalesce a cached plan's output partitioning by default — so
+      // every downstream stage paid 32 tasks where the checkpoint's
+      // AQE-coalesced leaf paid 1:
       // noop-write job probe 41 jobs/48 tasks/1.16s before, 25/404/1.68s
       // after. The checkpoint + count form is the cheaper shape here;
       // the observe-fold only wins where rounds are persist-based with
       // session-parallelism partitioning by design, i.e. the CC loops.)
       val keep = deg.filter(col("deg") >= k).select("n")
-        .localCheckpoint(true)
+        .transform(checkpoint)
       val next = edges
         .join(keep.select(col("n").as("u")), Seq("u"), "left_semi")
         .join(keep.select(col("n").as("v")), Seq("v"), "left_semi")
         .select("u", "v")
-        .localCheckpoint(true)
+        .transform(checkpoint)
       stats += ((r.toLong, keep.count(), next.count()))
       edges = next
     }
@@ -258,7 +260,7 @@ object GraphQueries extends QueryPack {
   private def q140(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Rounding.intDiv
     val (_, deg, arcs0) = TemporalQueries.q108Stages(s, dir)
-    val arcs = arcs0.localCheckpoint(true)
+    val arcs = checkpoint(arcs0)
     val adj = arcs.groupBy("a")
       .agg(sort_array(collect_list("b")).as("nbrs"))
     val tris = arcs
@@ -312,10 +314,10 @@ object GraphQueries extends QueryPack {
     val (edges, _, _) = TemporalQueries.q108Stages(s, dir)
     val sym = edges.select(col("u"), col("v"))
       .unionAll(edges.select(col("v").as("u"), col("u").as("v")))
-      .localCheckpoint(true)
+      .transform(checkpoint)
     var labels = sym.select(col("u").as("n")).distinct()
       .withColumn("lbl", col("n"))
-      .localCheckpoint(true)
+      .transform(checkpoint)
     for (_ <- 1 to 3) {
       val cnt = sym
         .join(labels.select(col("n").as("v"), col("lbl")), "v")
@@ -323,7 +325,7 @@ object GraphQueries extends QueryPack {
       labels = cnt.groupBy("u")
         .agg(min(struct((-col("c")).as("nc"), col("lbl").as("l"))).as("m"))
         .select(col("u").as("n"), col("m.l").as("lbl"))
-        .localCheckpoint(true)
+        .transform(checkpoint)
     }
     labels
   }
@@ -409,7 +411,7 @@ object GraphQueries extends QueryPack {
     val (edges, deg, _) = TemporalQueries.q108Stages(s, dir)
     val hubs = deg.orderBy(col("deg").desc, col("n"))
       .limit(10).select(col("n").as("hub"))
-      .localCheckpoint(true)
+      .transform(checkpoint)
     val nodes = deg.select("n")
     val dehubNodes = nodes.join(hubs, col("n") === col("hub"), "left_anti")
     val dehubEdges = edges
@@ -425,14 +427,9 @@ object GraphQueries extends QueryPack {
     // min-label would pace 15 guaranteed-wasted rounds before falling
     // back (r11 measured 31.7s → 12.9s for threaded per-arm runs; the
     // fused single run removes the second arm's round-trips too)
-    val cc = graft.operators.ConnectedComponents.components(
+    val comp = graft.operators.ConnectedComponents.components(
       tagN(nodes, 0).unionAll(tagN(dehubNodes, 1)), taggedEdges,
       "n", "u", "v", starFirst = true)
-    // components() hands back a persisted frame whose release is the
-    // caller's: checkpoint the labels this query reads, then unpersist
-    // (as dedupClusters does) so no cache entry outlives the call
-    val comp = cc.select("id", "comp").localCheckpoint(true)
-    cc.unpersist()
     def armOf(c: org.apache.spark.sql.Column) =
       when(c % 2L === 0L, "full").otherwise("dehubbed")
     val sizes = comp.groupBy(armOf(col("id")).as("arm"), col("comp"))
@@ -472,19 +469,19 @@ object GraphQueries extends QueryPack {
     val (edges, deg, _) = TemporalQueries.q108Stages(s, dir)
     val sym = edges.select(col("u"), col("v"))
       .unionAll(edges.select(col("v").as("u"), col("u").as("v")))
-      .localCheckpoint(true)
+      .transform(checkpoint)
     val landmarks = deg.orderBy(col("deg").desc, col("n"))
       .limit(5).select(col("n").as("lm"))
-      .localCheckpoint(true)
+      .transform(checkpoint)
     var dist = landmarks.select(col("lm"), col("lm").as("pt"))
       .withColumn("dist", lit(0L))
-      .localCheckpoint(true)
+      .transform(checkpoint)
     for (_ <- 1 to 3) {
       val hop = dist.join(sym, col("pt") === col("u"))
         .select(col("lm"), col("v").as("pt"), (col("dist") + 1L).as("dist"))
       dist = dist.unionAll(hop)
         .groupBy("lm", "pt").agg(min("dist").as("dist"))
-        .localCheckpoint(true)
+        .transform(checkpoint)
     }
     dist.filter(col("dist") > 0L)
       .groupBy(col("pt").as("node"))

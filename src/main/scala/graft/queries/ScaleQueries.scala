@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.{QueryPack, Tables}
 import graft.functions.{Rounding, Scored, TopKByValue, ZOrder}
 import graft.operators.{BloomPrune, IntervalMerge, SequencePack, TableDiff}
+import graft.operators.CheckpointBlocks.checkpoint
 
 /** The 100 TB toolkit queries: bloom-pruned joins, bounded top-k
   * aggregation, sketch accuracy contracts, grouping sets, and Z-order
@@ -596,7 +597,7 @@ object ScaleQueries extends QueryPack {
     // 7.9s at sf0.1; the remainder is the CC rounds themselves). The
     // pair set is λ·n/2 rows ≈ corpus-sized — checkpoint-safe by the
     // same argument as the q108Stages graph stages.
-    val pairs = spatialPairs(s, dir, r = r).localCheckpoint(true)
+    val pairs = checkpoint(spatialPairs(s, dir, r = r))
     val sym = pairs.select(col("a").as("p"), col("b").as("q_"))
       .unionAll(pairs.select(col("b").as("p"), col("a").as("q_")))
     val deg = sym.groupBy("p").agg(count(lit(1)).as("deg"))
@@ -615,22 +616,17 @@ object ScaleQueries extends QueryPack {
     // the 17-stage gap at the measured ~0.1s/stage scheduler floor IS
     // the wall gap. Labels identical either way (spec-pinned; both
     // converge to min-id components).
-    val cc = graft.operators.ConnectedComponents
+    val comp = graft.operators.ConnectedComponents
       .components(core.select(col("id")), coreEdges, "id", "a", "b",
         starFirst = true)
-    // release the persisted CC result once its labels are checkpointed
-    // (the caller's contract, as in dedupClusters)
-    val comp = cc.select(col("id").as("cid"), col("comp").as("cluster_id"))
-      .localCheckpoint(true)
-    cc.unpersist()
-    val coreLab = core.join(comp, core("id") === comp("cid"))
-      .select(col("id"), col("cluster_id"), lit("core").as("role"))
+    val coreLab = core.join(comp, "id")
+      .select(col("id"), col("comp").as("cluster_id"), lit("core").as("role"))
     val border = sym
       .join(core.select(col("id").as("q_")), "q_") // neighbor is core
       .join(core.select(col("id").as("p")), Seq("p"), "left_anti") // p not
-      .join(comp, col("q_") === comp("cid"))
+      .join(comp, col("q_") === comp("id"))
       .groupBy(col("p").as("id"))
-      .agg(min("cluster_id").as("cluster_id"))
+      .agg(min("comp").as("cluster_id"))
       .withColumn("role", lit("border"))
     val noise = spatialPts(s, dir).select("id")
       .join(coreLab.select("id").unionAll(border.select("id")),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.{QueryPack, Tables}
 import graft.operators.{Ivf, Lsh}
 import graft.operators.SessionDirMemo.pin
+import graft.operators.CheckpointBlocks.checkpoint
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (BASELINE.json north star).
@@ -111,7 +112,7 @@ object SimilarityQueries extends QueryPack {
         Tables.load(s, dir, "embeddings"), "vec_id", "embedding",
         dim = Dim, k = 8, iters = 2)
       // cents is already checkpointed by fit(); asg is lazy — pin it
-      (cents, asg.localCheckpoint(true))
+      (cents, checkpoint(asg))
     }
 
   /** The symmetric LSH band-bucket candidate pairs (32 bands × 4 bits,
@@ -310,7 +311,7 @@ object SimilarityQueries extends QueryPack {
       .withColumn("vh", expr(
         "transform(v, x -> CAST(floor(x * 1000000.0 / nrm + 0.5) AS BIGINT))"))
       .select(col("label"), col("vh"))
-      .localCheckpoint(true)
+      .transform(checkpoint)
     val s2 = e.select(col("label"), posexplode(col("vh")))
       .groupBy("label", "pos").agg(sum("col").as("sd"))
       .groupBy("label")
@@ -368,7 +369,7 @@ object SimilarityQueries extends QueryPack {
       .withColumn("vh", expr(
         "transform(v, x -> CAST(floor(x * 1000000.0 / nrm + 0.5) AS BIGINT))"))
       .select(col("vh"))
-      .localCheckpoint(true)
+      .transform(checkpoint)
     // Upper-triangle Gram build (r20, guide §2.3 — generate fewer rows):
     // M is symmetric, so only i ≤ j cells are materialized (the inner
     // explode slices the array from the outer position) — d(d+1)/2
@@ -498,7 +499,7 @@ object SimilarityQueries extends QueryPack {
           slice(col("embedding"), j * sub + 1, sub).as("sv"))
         val (cents, asg) = graft.operators.KMeans.fit(
           sv, "vec_id", "sv", dim = sub, k = 8, iters = 2)
-        (cents, asg.localCheckpoint(true))
+        (cents, checkpoint(asg))
       }
     }), Duration.Inf)
   }

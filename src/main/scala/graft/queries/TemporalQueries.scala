@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.{QueryPack, Tables}
 import graft.functions.Rounding
 import graft.operators.SessionDirMemo.pin
+import graft.operators.CheckpointBlocks.checkpoint
 
 /** Time-series completion and reshaping operators the reference's
   * stock-bars domain implies but never implements (the pandas twin would be
@@ -207,7 +208,7 @@ object TemporalQueries extends QueryPack {
     val (edges, deg, arcs0) = q108Stages(s, dir)
     val spark = s
     import spark.implicits._
-    val arcs = arcs0.localCheckpoint(true)
+    val arcs = checkpoint(arcs0)
     val tri = q108Closure(arcs)
     val nNodes = deg.count()
     val nEdges = edges.count()
@@ -350,11 +351,11 @@ object TemporalQueries extends QueryPack {
     val nEdges = edges.count()
     val sym = edges.select(col("u"), col("v"))
       .unionAll(edges.select(col("v").as("u"), col("u").as("v")))
-      .localCheckpoint(true)
+      .transform(checkpoint)
     var dist = sym.select(col("u").as("pt")).distinct()
       .filter(col("pt") % 100 === 0)
       .withColumn("dist", lit(0L))
-      .localCheckpoint(true)
+      .transform(checkpoint)
     val rows = Seq.newBuilder[(Int, Long, Long)]
     rows += ((0, nEdges, dist.count()))
     for (r <- 1 to 3) {
@@ -362,7 +363,7 @@ object TemporalQueries extends QueryPack {
         .select(col("v").as("pt"), (col("dist") + 1L).as("dist"))
       dist = dist.unionAll(hop)
         .groupBy("pt").agg(min("dist").as("dist"))
-        .localCheckpoint(true)
+        .transform(checkpoint)
       rows += ((r, nEdges, dist.count()))
     }
     val spark = s
@@ -374,17 +375,17 @@ object TemporalQueries extends QueryPack {
     val (edges, _, _) = q108Stages(s, dir)
     val sym = edges.select(col("u"), col("v"))
       .unionAll(edges.select(col("v").as("u"), col("u").as("v")))
-      .localCheckpoint(true)
+      .transform(checkpoint)
     var dist = sym.select(col("u").as("pt")).distinct()
       .filter(col("pt") % 100 === 0)
       .withColumn("dist", lit(0L))
-      .localCheckpoint(true)
+      .transform(checkpoint)
     for (_ <- 1 to 3) {
       val hop = dist.join(sym, col("pt") === col("u"))
         .select(col("v").as("pt"), (col("dist") + 1L).as("dist"))
       dist = dist.unionAll(hop)
         .groupBy("pt").agg(min("dist").as("dist"))
-        .localCheckpoint(true)
+        .transform(checkpoint)
     }
     dist.orderBy("pt")
   }

@@ -7,6 +7,7 @@ import graft.functions.Hashing
 import graft.functions.Rounding.roundf
 import graft.functions.TextAnalysis._
 import graft.operators.SessionDirMemo.pin
+import graft.operators.CheckpointBlocks.checkpoint
 
 /** Text-analysis extension queries over `documents` (BASELINE.json north
   * star: token counting, quality scoring, language ID, fingerprinting).
@@ -338,7 +339,7 @@ object TextQueries extends QueryPack {
         col("doc_id")) // r20 guide §2.5 — parallel tokenize
       .select(col("doc_id"), explode(tokensCol(col("text"))).as("tok"))
       .filter(col("tok") =!= "").distinct()
-      .localCheckpoint(true)
+      .transform(checkpoint)
     val expansion = docTok.join(broadcast(top10), "doc_id")
       .groupBy("tok").agg(count(lit(1)).as("df_r"))
       .join(docTok.groupBy("tok").agg(count(lit(1)).as("df_all")), "tok")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.{QueryPack, Tables}
 import graft.functions.Rounding.{cents, roundf, sumCents, sumExact}
 import graft.operators.SessionDirMemo.pin
+import graft.operators.CheckpointBlocks.checkpoint
 
 /** Classic multi-join analytical shapes (TPC-H Q7/Q8/Q2 style) over the
   * testdata star schema — the join-heavy breadth the reference itself never
@@ -925,7 +926,7 @@ object TpchQueries extends QueryPack {
     val keys = Tables.load(s, dir, "orders")
       .filter(col("o_orderstatus") === "F")
       .select(col("o_orderkey").cast("long").as("k")).distinct()
-      .localCheckpoint(true)
+      .transform(checkpoint)
     val bounds = keys.groupBy()
       .agg(min("k").as("lo"), max("k").as("hi"))
     val starts = keys.select((col("k") + 1L).as("k"))
@@ -1191,7 +1192,7 @@ object TpchQueries extends QueryPack {
     val rev = Tables.load(s, dir, "lineitem")
       .groupBy(col("l_partkey").cast("long").as("part"))
       .agg(sumCents(vol4).as("rev4"))
-      .localCheckpoint(true)
+      .transform(checkpoint)
     // ONE scan pass (r21, guide §1.2): the rank column existed only to
     // carry the (rev4 desc, part) order into a SECOND PrefixScan pass —
     // two range shuffles, two checkpoints, two collect jobs for one

@@ -63,28 +63,27 @@ object Formats {
     * dead-letter pattern a 100 TB ingest needs: a malformed line must
     * neither kill the job (FAILFAST) nor vanish silently (DROPMALFORMED);
     * it lands in the quarantine frame for triage while clean rows flow
-    * on. Returns (clean, quarantined-raw-lines, release): the source is
-    * persisted because Spark only permits filtering on the corrupt-record
-    * column over a materialized relation (and it also guarantees the two
-    * frames split ONE consistent read); call `release()` once both frames
-    * are consumed. */
+    * on. Returns (clean, quarantined-raw-lines): the source is
+    * checkpointed because Spark only permits filtering on the
+    * corrupt-record column over a materialized relation (and it also
+    * guarantees the two frames split ONE consistent read); there is
+    * nothing for the caller to release. */
   def readJsonlQuarantine(spark: SparkSession, path: String,
-      schema: StructType): (DataFrame, DataFrame, () => Unit) = {
+      schema: StructType): (DataFrame, DataFrame) = {
     val withCorrupt = schema.add("_corrupt_record",
       org.apache.spark.sql.types.StringType)
-    val raw = spark.read
+    val raw = graft.operators.CheckpointBlocks.checkpoint(spark.read
       .option("timestampFormat", tsFmt)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .schema(withCorrupt)
-      .json(path)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .json(path))
     import org.apache.spark.sql.functions.col
     val clean = raw.filter(col("_corrupt_record").isNull)
       .drop("_corrupt_record")
     val quarantine = raw.filter(col("_corrupt_record").isNotNull)
       .select(col("_corrupt_record").as("raw_line"))
-    (clean, quarantine, () => { raw.unpersist(); () })
+    (clean, quarantine)
   }
 
   /** Sharded JSONL export with a row-count index — the delivery format of

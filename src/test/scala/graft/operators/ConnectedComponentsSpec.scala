@@ -74,10 +74,11 @@ class ConnectedComponentsSpec extends SparkSuite {
     val rounds = ConnectedComponents.lastStarRounds
     assert(rounds > 0, "star fallback did not run for a diameter-200 graph")
     assert(rounds <= 15, s"star took $rounds rounds on 201 nodes — not O(log n)")
-    // the result itself is persisted BY CONTRACT (caller releases it);
-    // everything else — propagation rounds, star rounds, edge caches —
-    // must already be gone
-    result.unpersist(blocking = true)
+    // the result is a checkpoint, whose blocks ContextCleaner frees once
+    // it is unreachable; release them here so the check below sees that
+    // everything else — propagation rounds, star rounds, edge and result
+    // caches — is already gone
+    CheckpointBlocks.release(result)
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore
     assert(leaked.isEmpty, s"star fallback leaked cached RDDs: $leaked")
   }
@@ -205,5 +206,22 @@ class ConnectedComponentsSpec extends SparkSuite {
     assert(e.getMessage.contains("converge"))
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore
     assert(leaked.isEmpty, s"non-convergence leaked cached RDDs: $leaked")
+  }
+
+  test("star-path non-convergence fails loudly and releases its caches") {
+    // the same 6-node path with starFirst and a one-round budget: the
+    // failure is raised inside alternatingStar, with its round caches
+    // and the edge cache all live
+    val s = spark
+    import s.implicits._
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[IllegalArgumentException] {
+      ConnectedComponents.components((0L to 5L).toDF("id"),
+        Seq((5L, 4L), (4L, 3L), (3L, 2L), (2L, 1L), (1L, 0L)).toDF("a", "b"),
+        "id", "a", "b", maxIter = 1, starFirst = true)
+    }
+    assert(e.getMessage.contains("alternating star"))
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore
+    assert(leaked.isEmpty, s"star non-convergence leaked cached RDDs: $leaked")
   }
 }

@@ -10,13 +10,7 @@ import graft.SparkSuite
 class DedupPipelineSpec extends SparkSuite {
   import spark.implicits._
 
-  private def corpus = Seq(
-    (1L, "the quick brown fox jumps over the lazy dog tonight", "a"),
-    (2L, "the quick brown fox jumps over the lazy dog tonight", "b"), // = 1
-    (3L, "the quick brown fox jumps over the lazy cat tonight", "c"), // ~ 1
-    (4L, "completely different text about spark shuffles and joins", "d"),
-    (5L, "unrelated snippet mentioning parquet files and row groups", "e")
-  ).toDF("doc_id", "text", "meta")
+  private def corpus = DedupPipelineSpec.corpus(spark)
 
   test("exact keeps the min-id row per fingerprint, schema intact") {
     val out = DedupPipeline.exact(corpus, "doc_id", "text")
@@ -100,5 +94,22 @@ class DedupPipelineSpec extends SparkSuite {
       keys.contains((2L, 3L)))
     // 4 and 5 never pair with the fox cluster or each other
     assert(!keys.exists { case (a, b) => a >= 4L || b >= 4L })
+  }
+}
+
+object DedupPipelineSpec {
+
+  /** Five documents with known duplicate structure: 2 is an exact copy
+    * of 1, 3 is a near copy of both, 4 and 5 are unique. */
+  def corpus(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    Seq(
+      (1L, "the quick brown fox jumps over the lazy dog tonight", "a"),
+      (2L, "the quick brown fox jumps over the lazy dog tonight", "b"), // = 1
+      (3L, "the quick brown fox jumps over the lazy cat tonight", "c"), // ~ 1
+      (4L, "completely different text about spark shuffles and joins", "d"),
+      (5L, "unrelated snippet mentioning parquet files and row groups", "e")
+    ).toDF("doc_id", "text", "meta")
   }
 }

@@ -242,4 +242,31 @@ class SessionDirMemoSpec extends SparkSuite {
     assert(sites.isEmpty, "builders take no materialization flag and " +
       s"only tests enter SessionDirMemo.rawChain: $sites")
   }
+
+  test("src/main checkpoints only through CheckpointBlocks and caches " +
+    "only inside ConnectedComponents — no caller owes a release") {
+    // InternalScan lives in org.apache.spark.sql and cannot see the
+    // private[graft] CheckpointBlocks
+    val owners = Seq(
+      ".localCheckpoint(" -> Seq("graft/operators/CheckpointBlocks.scala",
+        "org/apache/spark/sql/graftexec/InternalScan.scala"),
+      ".persist(" -> Seq("graft/operators/ConnectedComponents.scala"),
+      ".unpersist()" -> Seq("graft/operators/ConnectedComponents.scala"))
+    val files = Files.walk(Paths.get("src/main"))
+    val sites =
+      try files.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .flatMap { p =>
+          Files.readAllLines(p).asScala.zipWithIndex.flatMap { case (l, i) =>
+            owners.collect {
+              case (call, allowed) if l.contains(call) &&
+                  !allowed.exists(p.toString.endsWith(_)) =>
+                s"$p:${i + 1} $call"
+            }
+          }
+        }.toList.sorted
+      finally files.close()
+    assert(sites.isEmpty, "materialize with CheckpointBlocks.checkpoint; " +
+      s"only ConnectedComponents persists and releases: $sites")
+  }
 }

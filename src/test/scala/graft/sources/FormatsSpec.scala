@@ -232,16 +232,14 @@ class FormatsSpec extends SparkSuite {
       ).mkString("\n").getBytes("UTF-8"))
     val schema = StructType(Seq(StructField("id", LongType),
       StructField("name", StringType)))
-    val (clean, quarantine, release) =
+    val (clean, quarantine) =
       Formats.readJsonlQuarantine(spark, dir, schema)
-    try {
-      assert(clean.count() == 3)
-      assert(clean.columns.toSeq == Seq("id", "name"))
-      val bad = quarantine.collect().map(_.getString(0)).toSet
-      assert(bad.size == 2)
-      assert(bad.exists(_.contains("oops")) &&
-        bad.exists(_.contains("garbage")))
-    } finally release()
+    assert(clean.count() == 3)
+    assert(clean.columns.toSeq == Seq("id", "name"))
+    val bad = quarantine.collect().map(_.getString(0)).toSet
+    assert(bad.size == 2)
+    assert(bad.exists(_.contains("oops")) &&
+      bad.exists(_.contains("garbage")))
   }
 
   test("sharded JSONL export bounds rows per shard and indexes counts") {
