@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import graft.functions.{Hashing, TextAnalysis}
 
@@ -21,9 +21,14 @@ import graft.functions.{Hashing, TextAnalysis}
   *
   * Scale posture is inherited from the stages: every candidate structure
   * is a keyed join, the only broadcast is the capped keeper set inside
-  * `near`, packing is O(1)-state per stream. The report materializes one
-  * count per stage (4 cheap actions) — that is the point of a curation
-  * run's audit trail, not an accident.
+  * `near`, packing is O(1)-state per stream.
+  *
+  * Each dedup stage runs once: `exact` and `near` are each materialized
+  * by one [[CheckpointBlocks.checkpoint]], and the four attrition counts
+  * are [[org.apache.spark.sql.Observation]] metrics on those two jobs
+  * (input, quality and exact on the first, near on the second), so the
+  * report adds no job of its own. Near dedup, split and packing read the
+  * checkpoints, never the raw chain again.
   */
 object CurationPipeline {
 
@@ -46,16 +51,28 @@ object CurationPipeline {
     require(cfg.trainFrac > 0 && cfg.valFrac >= 0 &&
       cfg.trainFrac + cfg.valFrac < 1, "split fractions must partition [0,1)")
     val spark = docs.sparkSession
-    val nInput = docs.count()
-    val quality = docs.filter(
-      length(col(textCol)) >= cfg.minChars &&
-        col(langCol).isin(cfg.langs.toSeq: _*))
-    val nQuality = quality.count()
-    val exact = DedupPipeline.exact(quality, idCol, textCol)
-    val nExact = exact.count()
-    val near = DedupPipeline.near(
-      exact, idCol, textCol, cfg.nearN, cfg.nearThreshold, cfg.maxDf)
-    val nNear = near.count()
+    // an Observation is read only after the checkpoint that fulfils it
+    // has returned: `get` blocks until its metric arrives
+    def observed(df: DataFrame): (DataFrame, Observation) = {
+      val obs = Observation()
+      (df.observe(obs, count(lit(1)).as("n")), obs)
+    }
+    val screen = length(col(textCol)) >= cfg.minChars &&
+      col(langCol).isin(cfg.langs.toSeq: _*)
+    val (input, inputObs) = observed(docs)
+    val (quality, qualityObs) = observed(input.filter(screen))
+    val (exactRaw, exactObs) =
+      observed(DedupPipeline.exact(quality, idCol, textCol))
+    val exact = CheckpointBlocks.checkpoint(exactRaw)
+    val (nearRaw, nearObs) = observed(DedupPipeline.near(
+      exact, idCol, textCol, cfg.nearN, cfg.nearThreshold, cfg.maxDf))
+    val near = CheckpointBlocks.checkpoint(nearRaw)
+    // a subtree the optimizer or AQE proves empty is dropped from the
+    // executed plan with the observed nodes in it, and their metrics come
+    // back absent: such a stage is counted directly, a job paid only on
+    // a corpus with an empty stage
+    def n(obs: Observation, stage: => DataFrame): Long =
+      obs.get.get("n").fold(stage.count())(_.asInstanceOf[Long])
     val u = Hashing.md5Uniform(col(idCol).cast("string"))
     val split = near
       .withColumn("split",
@@ -74,8 +91,10 @@ object CurationPipeline {
       .drop(packed("split")).drop("__pid")
     import spark.implicits._
     val report = Seq(
-      ("1_input", nInput), ("2_quality", nQuality),
-      ("3_exact_dedup", nExact), ("4_near_dedup", nNear))
+      ("1_input", n(inputObs, docs)),
+      ("2_quality", n(qualityObs, docs.filter(screen))),
+      ("3_exact_dedup", n(exactObs, exact)),
+      ("4_near_dedup", n(nearObs, near)))
       .toDF("stage", "n_docs")
     Result(kept, report)
   }

@@ -61,12 +61,15 @@ object Ols {
     }
 
   /** Fit per-group OLS of `target` on `features` (+intercept).
-    * Returns one row per group: (group, coef array<double>) where
-    * coef(0) = intercept, coef(i) = β of features(i-1).
+    * Returns one row per group: (group, coef array<double>, carry…) where
+    * coef(0) = intercept, coef(i) = β of features(i-1), and `carry` are
+    * extra named per-group aggregates over the same rows, computed in the
+    * fit's one `groupBy` (a caller's row count or last-row pick costs no
+    * second pass over the data).
     * Groups whose system stays unsolvable even after the ridge fallback
     * (e.g. zero usable rows) are dropped. */
   def fit(df: DataFrame, group: String, features: Seq[String],
-      target: String): DataFrame = {
+      target: String, carry: Seq[Column] = Nil): DataFrame = {
     val d = features.length + 1
     val xs: Seq[Column] = lit(1.0) +: features.map(f => col(f).cast("double"))
     val y = col(target).cast("double")
@@ -79,7 +82,9 @@ object Ols {
       yield sum(xs(i) * xs(j)).as(s"xtx_${i}_$j")
     val xty = (0 until d).map(i => sum(xs(i) * y).as(s"xty_$i"))
     val aggCols = prods ++ xty
-    val agg = clean.groupBy(group).agg(aggCols.head, aggCols.tail: _*)
+    val agg = clean.groupBy(group)
+      .agg(aggCols.head, (aggCols.tail ++ carry): _*)
+    val carried = agg.columns.drop(1 + aggCols.size).toSeq
 
     val solveUdf = udf { packed: Seq[Double] =>
       val a = Array.ofDim[Double](d, d)
@@ -95,7 +100,7 @@ object Ols {
         (0 until d).map(i => col(s"xty_$i"))): _*)
     agg.withColumn("coef", solveUdf(packed))
       .filter(col("coef").isNotNull)
-      .select(col(group), col("coef"))
+      .select((col(group) +: col("coef") +: carried.map(col)): _*)
   }
 
   /** Column expression βᵀ[1, features…] given a `coef` array column. */

@@ -36,8 +36,12 @@ object ReadParallelism {
     if (df.isStreaming) return df
     val np = math.max(1,
       df.sparkSession.sessionState.conf.numShufflePartitions)
-    // rdd.getNumPartitions compiles the physical plan but runs nothing;
-    // callers apply this to scan-adjacent frames whose plan is tiny.
+    // rdd.getNumPartitions compiles the physical plan. On a frame with no
+    // exchange that runs nothing; on a frame WITH one, AQE materializes
+    // the upstream query stages to build the final RDD, so the probe runs
+    // those stages' jobs (and a later action re-runs them unless the
+    // frame is materialized). Apply it to scan-adjacent or checkpointed
+    // frames.
     if (df.rdd.getNumPartitions * 4 < np) df.repartition(np, key) else df
   }
 }

@@ -51,38 +51,37 @@ object Pipeline {
     def run(spark: SparkSession, bars: DataFrame, rawDir: String,
         runTs: String, format: RawFormat = RawFormat.JsonLines)
         : Seq[String] = {
-      val symbols = bars.select("symbol").distinct()
-        .collect().map(_.getString(0)).sorted.toSeq
-      symbols.flatMap { sym =>
-        val df = bars.filter(col("symbol") === sym)
-        if (df.isEmpty) None // skip-on-empty guard
-        else {
-          val projected = df.select(
-            date_format(col("Datetime"), "yyyy-MM-dd HH:mm:ssXXX")
-              .as("Datetime_"),
-            col("Open").as(s"Open_$sym"),
-            col("High").as(s"High_$sym"),
-            col("Low").as(s"Low_$sym"),
-            col("Close").as(s"Close_$sym"),
-            col("Volume").as(s"Volume_$sym"),
-            col("symbol"))
-          val target = s"$rawDir/${sym}_stock_raw_$runTs.json"
-          format match {
-            case RawFormat.JsonLines =>
-              projected.coalesce(1)
-                .write.mode(SaveMode.Overwrite).json(target)
-            case RawFormat.JsonArray =>
-              // one object, one JSON array — the reference's exact shape
-              // (stock_ingestor.py:37-42); overwrite mirrors put_object
-              val body = projected.toJSON.collect().mkString("[", ",", "]")
-              val fs = FileSystem.get(new java.net.URI(rawDir),
-                spark.sparkContext.hadoopConfiguration)
-              val out = fs.create(new Path(target), true)
-              try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-              finally out.close()
-          }
-          Some(sym)
+      // symbols come from the frame itself, so no symbol's filter below is
+      // empty (the reference's skip-on-empty guard, `:25-27`); a null
+      // symbol, which would match no rows, is dropped here
+      val symbols = bars.select("symbol").filter(col("symbol").isNotNull)
+        .distinct().collect().map(_.getString(0)).sorted.toSeq
+      symbols.map { sym =>
+        val projected = bars.filter(col("symbol") === sym).select(
+          date_format(col("Datetime"), "yyyy-MM-dd HH:mm:ssXXX")
+            .as("Datetime_"),
+          col("Open").as(s"Open_$sym"),
+          col("High").as(s"High_$sym"),
+          col("Low").as(s"Low_$sym"),
+          col("Close").as(s"Close_$sym"),
+          col("Volume").as(s"Volume_$sym"),
+          col("symbol"))
+        val target = s"$rawDir/${sym}_stock_raw_$runTs.json"
+        format match {
+          case RawFormat.JsonLines =>
+            projected.coalesce(1)
+              .write.mode(SaveMode.Overwrite).json(target)
+          case RawFormat.JsonArray =>
+            // one object, one JSON array — the reference's exact shape
+            // (stock_ingestor.py:37-42); overwrite mirrors put_object
+            val body = projected.toJSON.collect().mkString("[", ",", "]")
+            val fs = FileSystem.get(new java.net.URI(rawDir),
+              spark.sparkContext.hadoopConfiguration)
+            val out = fs.create(new Path(target), true)
+            try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+            finally out.close()
         }
+        sym
       }
     }
   }
@@ -157,7 +156,17 @@ object Pipeline {
   /** Stage 4 — predict (`scripts/stock_predictor.py`): per-symbol OLS of
     * next close on [open, high, low, volume], next-step forecast from the
     * last row, in-sample MSE; output contract
-    * (symbol, predicted_close, last_date, mse) per §2 row 40. */
+    * (symbol, predicted_close, last_date, mse) per §2 row 40.
+    *
+    * The `lead` window runs once. One per-symbol aggregate over its pairs
+    * ([[Ols.fit]] with `carry`) yields the normal-equation fit, the pair
+    * count behind the min-rows gate and the last row; the in-sample MSE
+    * is the exact residual average over pairs ⋈ coef, on the same
+    * window exchange. The output is one file sorted by symbol, the
+    * reference's single predictions object (`stock_predictor.py:111`).
+    * Like Combine's single file this is parity at this scale: the
+    * `coalesce(1)` also runs everything after the window exchange (the
+    * window, the fit and the MSE) in one task. */
   object Predict {
     val features: Seq[String] = Seq("open", "high", "low", "volume")
 
@@ -177,37 +186,37 @@ object Pipeline {
       val pairs = lower
         .withColumn("target", lead("close", 1).over(w))
         .na.drop(present :+ "target")
-      // min-rows guard per stock_predictor.py:76-77: <2 usable pairs →
-      // symbol skipped (the ridge fallback would otherwise fabricate a fit)
-      val eligible = pairs.groupBy("symbol")
-        .agg(count(lit(1)).as("n_pairs")).filter(col("n_pairs") >= 2)
-        .select("symbol")
-      val coef = Ols.fit(pairs.join(broadcast(eligible), "symbol"),
-        "symbol", present, "target")
-      val wLast = Window.partitionBy("symbol").orderBy(desc("datetime"))
-      val last = pairs.withColumn("rn", row_number().over(wLast))
-        .filter(col("rn") === 1)
-        .select((col("symbol") +:
-          date_format(col("datetime"), "yyyy-MM-dd HH:mm:ss").as("last_date") +:
+      val last = struct((
+        date_format(col("datetime"), "yyyy-MM-dd HH:mm:ss").as("last_date") +:
           present.map(col)): _*)
-      val mse = pairs.join(broadcast(coef), "symbol")
+      // min-rows guard per stock_predictor.py:76-77: <2 usable pairs →
+      // symbol skipped (the ridge fallback would otherwise fabricate a fit).
+      // Each group's sums do not depend on the other groups, so gating
+      // after the fit keeps exactly the fits of the eligible symbols.
+      val fit = Ols.fit(pairs, "symbol", present, "target", Seq(
+        count(lit(1)).as("n_pairs"),
+        max_by(last, col("datetime")).as("last")))
+        .filter(col("n_pairs") >= 2)
+      val mse = pairs.join(fit.select("symbol", "coef"), "symbol")
         .withColumn("resid", col("target") - Ols.predictExpr(present))
         .groupBy("symbol")
         .agg(avg(col("resid") * col("resid")).as("mse_raw"))
-      coef.join(broadcast(last), "symbol").join(broadcast(mse), "symbol")
+      fit.select(col("symbol"), col("coef"), col("last.*"))
+        .join(mse, "symbol")
         .select(
           col("symbol"),
           round(Ols.predictExpr(present), 2).as("predicted_close"),
           col("last_date"),
           round(col("mse_raw"), 4).as("mse"))
-        .orderBy("symbol")
+        .coalesce(1).sortWithinPartitions("symbol")
     }
 
     def run(spark: SparkSession, combinedDir: String, predictionsDir: String)
         : DataFrame = {
       val out = predictions(spark.read.parquet(combinedDir))
       out.write.mode(SaveMode.Overwrite).parquet(predictionsDir)
-      spark.read.parquet(predictionsDir)
+      // the schema is known: reading it back infers nothing (no job)
+      spark.read.schema(out.schema).parquet(predictionsDir)
     }
   }
 

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import java.nio.file.Files
 import java.sql.Timestamp
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
 
@@ -37,12 +37,15 @@ class PipelineSpec extends SparkSuite {
       Double, Long)]): DataFrame =
     rows.toDF("symbol", "Datetime", "Open", "High", "Low", "Close", "Volume")
 
+  /** Two fittable symbols (AAPL exactly linear, GOOG noisy) and two the
+    * min-rows guard skips. */
+  private def bars: DataFrame = toDf(
+    mkBars("AAPL", 10, _ => 0.0) ++
+      mkBars("GOOG", 9, t => if (t % 2 == 0) 0.3 else -0.3) ++
+      mkBars("MSFT", 1, _ => 0.0) ++ // 0 usable pairs → skipped
+      mkBars("TWOB", 2, _ => 0.0))   // 1 usable pair → skipped (len>=2 guard)
+
   test("end-to-end: raw → processed → combined → predictions contract") {
-    val bars = toDf(
-      mkBars("AAPL", 10, _ => 0.0) ++
-        mkBars("GOOG", 9, t => if (t % 2 == 0) 0.3 else -0.3) ++
-        mkBars("MSFT", 1, _ => 0.0) ++ // 0 usable pairs → skipped
-        mkBars("TWOB", 2, _ => 0.0))   // 1 usable pair → skipped (len>=2 guard)
     val dir = Files.createTempDirectory("graft_pipe").toString
     val out = Pipeline.run(spark, bars, dir).orderBy("symbol").collect()
 
@@ -123,5 +126,35 @@ class PipelineSpec extends SparkSuite {
     val novol = combined.filter(col("symbol") === "NOVOL")
     assert(novol.count() == 1 && novol.head().isNullAt(
       novol.columns.indexOf("Volume")))
+  }
+
+  test("predictions equal the pinned rows in every column") {
+    val dir = Files.createTempDirectory("graft_pin").toString
+    val out = Pipeline.run(spark, bars, dir).orderBy("symbol").collect()
+    assert(out.toSeq == Seq(
+      Row("AAPL", 8.7, "2024-01-01 08:00:00", 0.0),
+      Row("GOOG", 6.95, "2024-01-01 07:00:00", 0.054)))
+  }
+
+  test("predict with no eligible symbol returns an empty frame") {
+    val p = Pipeline.Predict.predictions(toDf(
+      mkBars("MSFT", 1, _ => 0.0) ++ mkBars("TWOB", 2, _ => 0.0)))
+    assert(p.columns.toSeq ==
+      Seq("symbol", "predicted_close", "last_date", "mse"))
+    assert(p.collect().isEmpty)
+  }
+
+  test("Predict.run fits, gates and takes the last row in one aggregate") {
+    val dir = Files.createTempDirectory("graft_jobs").toString
+    Pipeline.Ingest.run(spark, bars, s"$dir/raw", "20240101T000000Z")
+    Pipeline.Transform.run(spark, s"$dir/raw", s"$dir/processed")
+    Pipeline.Combine.run(spark, s"$dir/processed", s"$dir/combined")
+    // the bound is the count measured on this Spark version (AQE stage
+    // jobs included); re-measure it on an upgrade, like the plan gates
+    val n = jobsOf(
+      Pipeline.Predict.run(spark, s"$dir/combined", s"$dir/predictions"))
+    assert(n <= 5, s"Predict.run ran $n jobs > 5; re-deriving the lead " +
+      "window per consumer behind broadcasts, a global sort and a " +
+      "schema-inferring read-back ran 10")
   }
 }
