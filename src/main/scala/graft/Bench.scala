@@ -9,10 +9,12 @@ object Bench {
     * The structural counters — jobs started, stages completed, tasks
     * ended and their summed run time — are load-independent: per-stage
     * scheduler floor dominates the sf0.1 suite, so `stages` is the
-    * number a plan change moves and `taskMs` is the real work. */
+    * number a plan change moves and `taskMs` is the real work.
+    * `compiles` counts the classes Janino compiled during the run: the
+    * generated code the session's class cache missed. */
   private final case class Run(sec: Double, spillBytes: Long,
     peakMem: Long, broadcastBytes: Long,
-    jobs: Long, stages: Long, tasks: Long, taskMs: Long)
+    jobs: Long, stages: Long, tasks: Long, taskMs: Long, compiles: Long)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -57,10 +59,14 @@ object Bench {
     for (nb <- minhashBandsEnv)
       spark.conf.set("spark.graft.minhash.bands", nb.toString)
     // sorted execution order: Map iteration order shifts as queries are
-    // added, which moves which query absorbs one-time JIT/codegen in
+    // added, which moves which query absorbs one-time JIT warm-up in
     // pass 1 and makes per-query numbers incomparable across rounds.
-    // That pass-1 cost lands on the first consumer of each codegen
-    // family, whose passes then disagree by >1.5× and earn the targeted
+    // Code generation is a one-time cost only while the class cache
+    // holds the suite's working set: at Spark's default of 100 entries
+    // pass 2 recompiled 7,772 classes at sf0.01, which is why
+    // GraftSession.builder sizes it. The `compiles` map shows what each
+    // query still compiles in its best pass. A query whose pass 1 pays
+    // such costs disagrees with pass 2 by >1.5× and earns the targeted
     // third sample below; set-up cost is perfbench's cold_s.
     // best-of-2 per query, INTERLEAVED (A…Z then A…Z, min per query):
     // a single pass cannot distinguish a code regression from transient
@@ -90,6 +96,8 @@ object Bench {
     import org.apache.spark.scheduler._
     val spillAcc, peakAcc, bcastAcc = new AtomicLong
     val jobsAcc, stagesAcc, tasksAcc, taskMsAcc = new AtomicLong
+    val compiled =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         jobsAcc.incrementAndGet()
@@ -129,13 +137,15 @@ object Bench {
       org.apache.spark.graftbench.ListenerFlush.drain(spark.sparkContext)
       for (a <- Seq(spillAcc, peakAcc, bcastAcc, jobsAcc, stagesAcc,
           tasksAcc, taskMsAcc)) a.set(0L)
+      val compiled0 = compiled.getCount
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).write.mode("overwrite").format("noop").save()
         val sec = (System.nanoTime() - t0) / 1e9
+        val compiles = compiled.getCount - compiled0
         org.apache.spark.graftbench.ListenerFlush.drain(spark.sparkContext)
         Right(Run(sec, spillAcc.get, peakAcc.get, bcastAcc.get,
-          jobsAcc.get, stagesAcc.get, tasksAcc.get, taskMsAcc.get))
+          jobsAcc.get, stagesAcc.get, tasksAcc.get, taskMsAcc.get, compiles))
       }
       catch { case e: Throwable =>
         Left(e.getClass.getName + ": " +
@@ -247,11 +257,12 @@ object Bench {
     }.mkString("{", ",", "}")
     val qsPeakMin = longMapMin(_.peakMem)
     // structural counters, MIN over clean runs: the warm reading, once
-    // pass 1 has paid any memo build and schema inference
+    // pass 1 has paid any memo build, schema inference and code generation
     val qsJobs = longMapMin(_.jobs)
     val qsStages = longMapMin(_.stages)
     val qsTasks = longMapMin(_.tasks)
     val qsTaskSec = longMapMin(_.taskMs, ms => r6(ms / 1e3))
+    val qsCompiles = longMapMin(_.compiles)
     // the cause of every failed run, in run order, for each query with
     // one (failed or flaky); empty on a clean suite
     def jsonStr(x: String): String = "\"" + x.flatMap {
@@ -356,7 +367,7 @@ object Bench {
       if (only.isDefined) "PLANS_SUBSET.json" else "PLANS.json")
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(benchOut),
-      s"""{$head,"queries":$qs,"queries_raw":$qsRaw,"spill_bytes":$qsSpill,"peak_exec_mem":$qsPeak,"peak_exec_mem_min":$qsPeakMin,"peak_exec_mem_raw":$qsPeakRaw,"max_broadcast_bytes":$qsBcast,"jobs":$qsJobs,"stages":$qsStages,"tasks":$qsTasks,"task_sec":$qsTaskSec,"errors":$qsErrors}""")
+      s"""{$head,"queries":$qs,"queries_raw":$qsRaw,"spill_bytes":$qsSpill,"peak_exec_mem":$qsPeak,"peak_exec_mem_min":$qsPeakMin,"peak_exec_mem_raw":$qsPeakRaw,"max_broadcast_bytes":$qsBcast,"jobs":$qsJobs,"stages":$qsStages,"tasks":$qsTasks,"task_sec":$qsTaskSec,"compiles":$qsCompiles,"errors":$qsErrors}""")
     catch { case _: Throwable => () } // file write is best-effort telemetry
     // plan-shape snapshot (round artifact): PlanAudit over every declared
     // query, so a plan regression (new shuffle, lost broadcast, a

@@ -131,10 +131,12 @@ object Pipeline {
   /** Stage 3 — combine (`scripts/combine_processed.py`, intended semantics
     * per SURVEY §3 defect 1): UNION ALL of every per-symbol processed
     * parquet, aligned by name with null-fill (pandas concat ≡
-    * unionByName(allowMissingColumns)); single combined output file. */
+    * unionByName(allowMissingColumns)); single combined output file.
+    * Returns the combined zone read back over the schema just written, so
+    * the reader infers nothing (no job). */
   object Combine {
     def run(spark: SparkSession, processedDir: String, combinedDir: String)
-        : Unit = {
+        : DataFrame = {
       // explicit driver-side listing (mirrors the reference's
       // list_objects_v2 at combine_processed.py:13-19) — also avoids the
       // analyzer's noisy glob-path fallback logging
@@ -150,6 +152,7 @@ object Pipeline {
       // reference writes ONE combined object — coalesce(1) is parity at this
       // scale and deliberately NOT what the 100 TB extension ops do.
       out.coalesce(1).write.mode(SaveMode.Overwrite).parquet(combinedDir)
+      spark.read.schema(out.schema).parquet(combinedDir)
     }
   }
 
@@ -212,11 +215,17 @@ object Pipeline {
     }
 
     def run(spark: SparkSession, combinedDir: String, predictionsDir: String)
-        : DataFrame = {
-      val out = predictions(spark.read.parquet(combinedDir))
+        : DataFrame =
+      write(spark.read.parquet(combinedDir), predictionsDir)
+
+    /** Writes the predictions of `combined` and returns them read back.
+      * [[Pipeline.run]] passes [[Combine.run]]'s frame, whose schema is
+      * known; [[run]] reads the zone and infers it (one job). */
+    def write(combined: DataFrame, predictionsDir: String): DataFrame = {
+      val out = predictions(combined)
       out.write.mode(SaveMode.Overwrite).parquet(predictionsDir)
       // the schema is known: reading it back infers nothing (no job)
-      spark.read.schema(out.schema).parquet(predictionsDir)
+      combined.sparkSession.read.schema(out.schema).parquet(predictionsDir)
     }
   }
 
@@ -255,11 +264,11 @@ object Pipeline {
         spark.read.parquet(s"$workDir/processed/${sym}_processed"),
         qualityChecks, s"processed/$sym")
     }
-    withRetry(retry, "combine") {
+    val combined = withRetry(retry, "combine") {
       Combine.run(spark, s"$workDir/processed", s"$workDir/combined")
     }
     withRetry(retry, "predict") {
-      Predict.run(spark, s"$workDir/combined", s"$workDir/predictions")
+      Predict.write(combined, s"$workDir/predictions")
     }
   }
 }

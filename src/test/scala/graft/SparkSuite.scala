@@ -24,6 +24,30 @@ trait SparkSuite extends AnyFunSuite {
     try { body; drain(); jobs.get }
     finally sc.removeSparkListener(l)
   }
+
+  /** The classes Janino compiles in each of three calls of `body` after a
+    * warm-up call: generated code the class cache missed. The cache is an
+    * LRU of `spark.sql.codegen.cache.maxEntries` classes, fixed at the
+    * first code generation in the JVM. Under Spark's default of 100 a body
+    * that cycles through more classes recompiles all of them on every
+    * call; `GraftSession.builder` sizes it so a repeated body compiles
+    * nothing. Under AQE the whole-stage codegen ids follow the order in
+    * which concurrent shuffle stages finish, so now and then a call meets
+    * a variant not compiled yet (8 classes in one of nine warm curation
+    * calls): the fewest over the three calls is the floor the cache sets.
+    * That floor is also above 0 when a suite generates code before the
+    * first builder-made session exists, since the cache then keeps
+    * Spark's default bound. */
+  def warmCompiles(body: => Unit): Seq[Long] = {
+    val compiled =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    body
+    Seq.fill(3) {
+      val before = compiled.getCount
+      body
+      compiled.getCount - before
+    }
+  }
 }
 
 object SparkSuite {

@@ -84,6 +84,17 @@ class CurationPipelineSpec extends SparkSuite with TimeLimits {
       "standalone count()s and no materialized exact stage it ran 43")
   }
 
+  test("a repeated curation run compiles no class") {
+    val n = warmCompiles {
+      val r = CurationPipeline.run(
+        Tables.load(spark, sf, "documents"), "doc_id", "text", "lang")
+      r.kept.write.mode("overwrite").format("noop").save()
+      r.report.collect()
+    }
+    assert(n.min == 0, "repeated CurationPipeline.run calls compiled " +
+      s"${n.mkString(", ")} classes")
+  }
+
   // the report's counts are Observations, and `Observation.get` blocks
   // until its metric arrives: a stage that never fulfils one must fail
   // the case, not hang the suite

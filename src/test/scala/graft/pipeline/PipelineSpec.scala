@@ -157,4 +157,20 @@ class PipelineSpec extends SparkSuite {
       "window per consumer behind broadcasts, a global sort and a " +
       "schema-inferring read-back ran 10")
   }
+
+  test("Pipeline.run hands Combine's frame to predict without a re-read") {
+    val dir = Files.createTempDirectory("graft_run_jobs").toString
+    // the bound is the count measured on this Spark version, like the
+    // Predict.run guard above
+    val n = jobsOf(Pipeline.run(spark, bars, dir, retry = Retry.none))
+    assert(n <= 32, s"Pipeline.run ran $n jobs > 32; predict inferring " +
+      "the schema of the combined zone it just wrote ran 33")
+  }
+
+  test("a repeated Pipeline.run compiles no class") {
+    val dir = Files.createTempDirectory("graft_codegen").toString
+    val n = warmCompiles(Pipeline.run(spark, bars, dir, retry = Retry.none))
+    assert(n.min == 0,
+      s"repeated Pipeline.run calls compiled ${n.mkString(", ")} classes")
+  }
 }
