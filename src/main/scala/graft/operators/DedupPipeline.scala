@@ -14,8 +14,8 @@ import graft.functions.TextAnalysis.{fingerprint, hashedNgramsFromTokens,
   *
   * Everything is a keyed join or aggregation — candidate generation goes
   * through the per-shingle document lists (df-capped fan-out), never an
-  * all-pairs product, and clustering is [[ConnectedComponents]] with its
-  * per-round cache hygiene. See DedupQueries' scaladoc for the 100 TB
+  * all-pairs product, and clustering is [[ConnectedComponents]]'
+  * alternating-star rounds, O(log n) of them on any pair graph. See DedupQueries' scaladoc for the 100 TB
   * posture of each stage.
   */
 object DedupPipeline {

@@ -112,8 +112,8 @@ object DedupQueries extends QueryPack {
     }
 
   /** Dedup clustering: connected components over the near-dup pair graph
-    * (graft.operators.ConnectedComponents — iterative min-label
-    * propagation). Output is the retention decision itself: every document
+    * (graft.operators.ConnectedComponents — alternating large/small
+    * star). Output is the retention decision itself: every document
     * with its cluster id (min doc_id in its component) and whether it is
     * the canonical keeper. Similarity is NOT transitive, so this is a real
     * closure, not a group-by: A~B and B~C cluster {A,B,C} even when A~C

@@ -481,10 +481,10 @@ object EventOpsQueries extends QueryPack {
     * (two-slot LRU, eager localCheckpoint — see its scaladoc for why the
     * slot, not a weak map, is the honest retention bound), the
     * cross-query analogue of q263's pairs materialization
-    * ([[ScaleQueries]]): the CC run costs ~2s of label-join rounds at
+    * ([[ScaleQueries]]): the CC run costs ~2s at
     * sf0.1 and feeds THREE standalone queries, so rebuilding it per
     * consumer triples the cost for bit-identical output (the build is
-    * deterministic — sorted collect_set, min-label CC). The checkpoint
+    * deterministic — sorted collect_set, min-id CC labels). The checkpoint
     * holds one row per user (user-scale, not event-scale). Each query
     * still stands alone for the oracle — a cold call builds
     * everything. */

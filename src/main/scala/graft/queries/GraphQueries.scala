@@ -397,7 +397,7 @@ object GraphQueries extends QueryPack {
     * ONE closure by encoding the arm into the id (`id' = 2·id + arm`).
     * The encoding is order-preserving within an arm (id ↦ 2·id + c is
     * strictly monotone) and arms can never connect (edges stay within
-    * one parity class), so the fused min-label of a node decodes to
+    * one parity class), so the fused min-id label of a node decodes to
     * exactly the label its per-arm run would produce: comp' = 2·comp +
     * arm, proven bit-identical in ConnectedComponentsSpec. Round count
     * becomes max(arms), not sum — the same trick batches ANY number of
@@ -423,13 +423,9 @@ object GraphQueries extends QueryPack {
       df.select((col("u") * 2L + lit(arm.toLong)).as("u"),
         (col("v") * 2L + lit(arm.toLong)).as("v"))
     val taggedEdges = tagE(edges, 0).unionAll(tagE(dehubEdges, 1))
-    // starFirst: the co-order graph is one giant sparse component —
-    // min-label would pace 15 guaranteed-wasted rounds before falling
-    // back (r11 measured 31.7s → 12.9s for threaded per-arm runs; the
-    // fused single run removes the second arm's round-trips too)
     val comp = graft.operators.ConnectedComponents.components(
       tagN(nodes, 0).unionAll(tagN(dehubNodes, 1)), taggedEdges,
-      "n", "u", "v", starFirst = true)
+      "n", "u", "v")
     def armOf(c: org.apache.spark.sql.Column) =
       when(c % 2L === 0L, "full").otherwise("dehubbed")
     val sizes = comp.groupBy(armOf(col("id")).as("arm"), col("comp"))

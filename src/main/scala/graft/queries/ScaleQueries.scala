@@ -606,19 +606,8 @@ object ScaleQueries extends QueryPack {
       .join(core.select(col("id").as("a")), "a")
       .join(core.select(col("id").as("b")), "b")
       .select("a", "b")
-    // starFirst (r21 re-A/B — the r12 "tied, kept off" verdict INVERTED
-    // once star rounds got cheap): the percolated blob converges in 12
-    // min-label rounds (diameter) vs ~6 star rounds, and a star round
-    // now costs 3 exchanges + NO separate fixed-point job (r20's window
-    // form + r21's observation-fold structural test) where r12's cost
-    // 2.4× a propagation round. Same-box min-of-3 subset bench:
-    // propagation 8.42s / star 6.94s; structural probe 80 → 63 stages —
-    // the 17-stage gap at the measured ~0.1s/stage scheduler floor IS
-    // the wall gap. Labels identical either way (spec-pinned; both
-    // converge to min-id components).
     val comp = graft.operators.ConnectedComponents
-      .components(core.select(col("id")), coreEdges, "id", "a", "b",
-        starFirst = true)
+      .components(core.select(col("id")), coreEdges, "id", "a", "b")
     val coreLab = core.join(comp, "id")
       .select(col("id"), col("comp").as("cluster_id"), lit("core").as("role"))
     val border = sym

@@ -61,8 +61,8 @@ object SimilarityQueries extends QueryPack {
     * `spark.graft.lsh.bands` / `spark.graft.lsh.rowsPerBand` conf pair
     * when set (how a production run applies
     * [[graft.operators.Lsh.tunedGeometry]]'s corpus-size rule, and how
-    * the scaling sweep's tuned sf~1 row runs — Bench threads
-    * SPARK_GRAFT_LSH_* env into these), else the 32×4 default the
+    * the scaling sweep's tuned sf~1 row runs — it passes them as
+    * -Dspark.graft.lsh.* JVM system properties), else the 32×4 default the
     * oracle contract pins. The driver never sets the conf, so every
     * declared query hashes against the default geometry.
     *

@@ -2,8 +2,10 @@ package graft.operators
 
 import graft.SparkSuite
 
-/** Min-label propagation: multi-hop chains (propagation must iterate),
-  * disjoint components, isolated nodes, and non-convergence detection. */
+/** Alternating large/small-star connected components: multi-hop chains
+  * (the rounds must iterate), disjoint components, isolated nodes,
+  * self-loops and undeclared endpoints, checked against a driver-side
+  * union-find, plus non-convergence detection and the job floor. */
 class ConnectedComponentsSpec extends SparkSuite {
 
   private def comp(nodes: Seq[Long], edges: Seq[(Long, Long)],
@@ -53,10 +55,10 @@ class ConnectedComponentsSpec extends SparkSuite {
   }
 
   test("high-diameter chain falls back to alternating star in O(log n) rounds") {
-    // a 201-node path has diameter 200 — min-label would need 200 rounds,
-    // far past the 15-round fallback point; alternating large/small-star
+    // a 201-node path has diameter 200 — one-hop-per-round min-label
+    // propagation would need 200 rounds; alternating large/small-star
     // must finish the job within the default maxIter=50 budget AND in a
-    // logarithmic round count (the whole point of the fallback)
+    // logarithmic round count
     val s = spark
     import s.implicits._
     val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
@@ -66,26 +68,21 @@ class ConnectedComponentsSpec extends SparkSuite {
       (0L until 200L).map(i => (i + 1, i)).toDF("a", "b"), "id", "a", "b")
     val got = result.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == (0L to 200L).map(_ -> 0L).toMap)
-    // the batched loop must have spent exactly the 15-round budget before
-    // handing over (batching may not silently shrink the cap)
-    assert(ConnectedComponents.lastPropRounds == 15,
-      s"expected the full 15-round propagation budget, " +
-        s"got ${ConnectedComponents.lastPropRounds}")
     val rounds = ConnectedComponents.lastStarRounds
-    assert(rounds > 0, "star fallback did not run for a diameter-200 graph")
+    assert(rounds > 0, "star rounds did not run for a diameter-200 graph")
     assert(rounds <= 15, s"star took $rounds rounds on 201 nodes — not O(log n)")
     // the result is a checkpoint, whose blocks ContextCleaner frees once
     // it is unreachable; release them here so the check below sees that
-    // everything else — propagation rounds, star rounds, edge and result
-    // caches — is already gone
+    // everything else — star rounds, edge and result caches — is
+    // already gone
     CheckpointBlocks.release(result)
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore
     assert(leaked.isEmpty, s"star fallback leaked cached RDDs: $leaked")
   }
 
   test("star fallback keeps disjoint components and singletons separate") {
-    // two long chains + an isolated node: the star path must not merge
-    // components or drop declared singletons when it re-anchors labels
+    // two long chains + an isolated node: the star rounds must not merge
+    // components, and the final join must not drop declared singletons
     val chainA = (0L until 30L).map(i => (i + 1, i))
     val chainB = (100L until 130L).map(i => (i + 1, i))
     ConnectedComponents.lastStarRounds = -1
@@ -96,38 +93,44 @@ class ConnectedComponentsSpec extends SparkSuite {
     assert(got(999L) == 999L)
   }
 
-  test("a low forced cap still takes the star path and stays correct — " +
-    "the cap is a budget, not a correctness knob") {
-    val s = spark
-    import s.implicits._
-    ConnectedComponents.lastStarRounds = -1
-    // per-call parameter, not a global var (ADVICE r12): lowering the cap
-    // here cannot change CC pacing for any concurrently-running suite
-    val got = ConnectedComponents.components(
-      (0L to 5L).toDF("id"),
-      Seq((5L, 4L), (4L, 3L), (3L, 2L), (2L, 1L), (1L, 0L)).toDF("a", "b"),
-      "id", "a", "b", starFallbackAt = 2)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(ConnectedComponents.lastStarRounds > 0, "expected the star path")
-    assert(ConnectedComponents.lastPropRounds == 2,
-      "the lowered cap must bound the propagation rounds exactly")
-    assert(got == (0L to 5L).map(_ -> 0L).toMap)
-  }
-
-  test("starFirst produces identical labels to the propagation path") {
-    val s = spark
-    import s.implicits._
+  test("labels equal a driver-side union-find on a mixed graph") {
     // chain (high diameter) + dense pair + singleton — every regime
     val nodes = (0L to 9L) ++ Seq(20L, 21L, 30L)
     val edges = Seq((9L, 8L), (8L, 7L), (7L, 6L), (6L, 5L), (5L, 4L),
       (4L, 3L), (3L, 2L), (2L, 1L), (1L, 0L), (20L, 21L))
-    def run(sf: Boolean) = ConnectedComponents.components(
-      nodes.toDF("id"), edges.toDF("a", "b"), "id", "a", "b",
-      starFirst = sf)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaStar = run(true)
-    assert(viaStar == run(false))
-    assert(viaStar(9L) == 0L && viaStar(21L) == 20L && viaStar(30L) == 30L)
+    val got = comp(nodes, edges)
+    assert(got == ConnectedComponentsSpec.unionFind(nodes, edges))
+    assert(got(9L) == 0L && got(21L) == 20L && got(30L) == 30L)
+  }
+
+  test("labels equal a driver-side union-find on seeded random graphs " +
+    "(chains, cliques, self-loops, undeclared endpoints, duplicate ids)") {
+    for (seed <- 1 to 6) {
+      val rnd = new scala.util.Random(seed)
+      val base = seed * 1000L
+      // a shuffled chain, a clique, a few self-loops (declared and not)
+      // and sparse random edges; the shuffle hides the chain's order
+      val chain = rnd.shuffle((0L until 25L).toList).map(base + _)
+      val chainEdges = chain.zip(chain.tail)
+      val clique = (100L until 106L).map(base + _)
+      val cliqueEdges = for (a <- clique; b <- clique if a < b) yield (a, b)
+      val loops = Seq((base + 200L, base + 200L), (base + 201L, base + 201L),
+        (base + 3L, base + 3L))
+      val randomEdges = Seq.fill(15)((base + 300L + rnd.nextInt(40),
+        base + 300L + rnd.nextInt(40)))
+      val edges = rnd.shuffle(
+        chainEdges ++ cliqueEdges ++ loops ++ randomEdges).map {
+          case (a, b) => if (rnd.nextBoolean()) (a, b) else (b, a) }
+      val endpoints = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
+      // declare only part of the endpoints (the rest join implicitly),
+      // some isolated ids, and duplicates of both
+      val declared = endpoints.filter(_ => rnd.nextInt(3) > 0) ++
+        Seq(base + 500L, base + 501L)
+      val nodes = declared ++ declared.take(5)
+      val got = comp(nodes, edges)
+      assert(got == ConnectedComponentsSpec.unionFind(nodes, edges),
+        s"seed $seed: labels diverge from union-find")
+    }
   }
 
   test("arm-in-the-id fusion decodes to bit-identical per-arm labels — " +
@@ -142,7 +145,7 @@ class ConnectedComponentsSpec extends SparkSuite {
     val edges1 = edges.filterNot { case (a, b) => a == 2L || b == 2L }
     def run(ns: Seq[Long], es: Seq[(Long, Long)]) =
       ConnectedComponents.components(
-        ns.toDF("id"), es.toDF("a", "b"), "id", "a", "b", starFirst = true)
+        ns.toDF("id"), es.toDF("a", "b"), "id", "a", "b")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val perArm0 = run(nodes, edges)
     val perArm1 = run(nodes1, edges1)
@@ -161,12 +164,11 @@ class ConnectedComponentsSpec extends SparkSuite {
   }
 
   test("job floor holds: the observe-fold keeps one driver action per " +
-    "round (measured 35 jobs on the two-path fixture, +2 slack)") {
+    "round (measured 30 jobs on the two-path fixture, +2 slack)") {
     // pins ANALYSIS_r13_ccfloor's win structurally: a separate
-    // convergence count() reappearing adds ~1 job per round (this
-    // fixture runs ~5 rounds → would read ≥ 40). AQE query-stage jobs
-    // are part of the measured floor; the pin is for THIS Spark version
-    // (re-measure on upgrade, like the PlanGate pins).
+    // convergence count() reappearing adds ≥ 1 job per star round. AQE
+    // query-stage jobs are part of the measured floor; the pin is for
+    // THIS Spark version (re-measure on upgrade, like the PlanGate pins).
     import org.apache.spark.scheduler._
     import org.apache.spark.sql.functions.{col, lit}
     import java.util.concurrent.atomic.AtomicInteger
@@ -190,8 +192,8 @@ class ConnectedComponentsSpec extends SparkSuite {
     Thread.sleep(2000)
     spark.sparkContext.removeSparkListener(l)
     c.unpersist()
-    assert(jobs.get <= 35 + 2,
-      s"CC round floor regressed: ${jobs.get} jobs > measured 35+2 — " +
+    assert(jobs.get <= 30 + 2,
+      s"CC round floor regressed: ${jobs.get} jobs > measured 30+2 — " +
         "did a per-round action (convergence count?) come back?")
   }
 
@@ -209,19 +211,42 @@ class ConnectedComponentsSpec extends SparkSuite {
   }
 
   test("star-path non-convergence fails loudly and releases its caches") {
-    // the same 6-node path with starFirst and a one-round budget: the
-    // failure is raised inside alternatingStar, with its round caches
-    // and the edge cache all live
+    // the same 6-node path with a one-round budget: the failure is
+    // raised inside alternatingStar, with its round cache and the edge
+    // cache both live
     val s = spark
     import s.implicits._
     val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val e = intercept[IllegalArgumentException] {
       ConnectedComponents.components((0L to 5L).toDF("id"),
         Seq((5L, 4L), (4L, 3L), (3L, 2L), (2L, 1L), (1L, 0L)).toDF("a", "b"),
-        "id", "a", "b", maxIter = 1, starFirst = true)
+        "id", "a", "b", maxIter = 1)
     }
     assert(e.getMessage.contains("alternating star"))
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore
     assert(leaked.isEmpty, s"star non-convergence leaked cached RDDs: $leaked")
+  }
+}
+
+object ConnectedComponentsSpec {
+
+  /** Min-id component labels of `nodes` ∪ the endpoints of `edges`, by a
+    * driver-side union-find: the reference the distributed labels must
+    * equal. */
+  def unionFind(nodes: Seq[Long], edges: Seq[(Long, Long)])
+      : Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    // the smaller root wins, so every root is its component's min id
+    def union(a: Long, b: Long): Unit = {
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    nodes.foreach(find)
+    edges.foreach { case (a, b) => union(a, b) }
+    parent.keys.map(x => x -> find(x)).toMap
   }
 }

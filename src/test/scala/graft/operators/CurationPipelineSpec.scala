@@ -80,8 +80,9 @@ class CurationPipelineSpec extends SparkSuite with TimeLimits {
     // it on an upgrade, like the plan gates
     val n = jobsOf(CurationPipeline.run(
       Tables.load(spark, sf, "documents"), "doc_id", "text", "lang"))
-    assert(n <= 29, s"CurationPipeline.run ran $n jobs > 29; with four " +
-      "standalone count()s and no materialized exact stage it ran 43")
+    assert(n <= 25, s"CurationPipeline.run ran $n jobs > 25; with four " +
+      "standalone count()s and no materialized exact stage it ran 43, " +
+      "with min-label components and their separate edge cache 29")
   }
 
   test("a repeated curation run compiles no class") {

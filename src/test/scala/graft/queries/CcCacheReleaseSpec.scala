@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions.lit
 /** `ConnectedComponents.components` returns a checkpoint and releases
   * every cache it made, so no caller owes an `unpersist()`. A cache it
   * failed to release would stay a MEMORY_AND_DISK entry in the session's
-  * CacheManager for the life of the JVM, once per call. CC itself (both
-  * paths), the composed dedup and curation APIs and each CC-driven query
-  * must leave the cache exactly as empty as they found it. */
+  * CacheManager for the life of the JVM, once per call. CC itself (on a
+  * shallow and a deep graph), the composed dedup and curation APIs and
+  * each CC-driven query must leave the cache exactly as empty as they
+  * found it. */
 class CcCacheReleaseSpec extends SparkSuite {
   import spark.implicits._
 
@@ -41,16 +42,20 @@ class CcCacheReleaseSpec extends SparkSuite {
       }
     }
 
-  for ((path, starFirst) <- Seq("propagation" -> false, "star" -> true))
-    test(s"components on the $path path leaves no cached relation behind " +
+  // a few-round forest and a 201-node chain that needs many star rounds
+  private val shapes = Seq(
+    ("7-node forest", (0L to 6L), Seq((1L, 0L), (2L, 1L), (4L, 3L)),
+      Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 3L, 4L -> 3L, 5L -> 5L,
+        6L -> 6L)),
+    ("201-node chain", (0L to 200L), (0L until 200L).map(i => (i + 1, i)),
+      (0L to 200L).map(_ -> 0L).toMap))
+  for ((shape, nodes, edges, want) <- shapes)
+    test(s"components on a $shape leaves no cached relation behind " +
       "and its result stays readable") {
-      leavesNoCache(s"components ($path)") {
-        val labels = ConnectedComponents.components((0L to 6L).toDF("id"),
-          Seq((1L, 0L), (2L, 1L), (4L, 3L)).toDF("a", "b"), "id", "a", "b",
-          starFirst = starFirst)
-        assert(labels.as[(Long, Long)].collect().toMap ==
-          Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 3L, 4L -> 3L, 5L -> 5L,
-            6L -> 6L))
+      leavesNoCache(s"components ($shape)") {
+        val labels = ConnectedComponents.components(nodes.toDF("id"),
+          edges.toDF("a", "b"), "id", "a", "b")
+        assert(labels.as[(Long, Long)].collect().toMap == want)
       }
     }
 

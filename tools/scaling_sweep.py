@@ -317,6 +317,14 @@ def bench_out(sf: str) -> str:
     return f"/tmp/bench_scaling_sf{sf}.json"
 
 
+def spark_props(confs: dict) -> dict:
+    """Environment that hands `confs` to the forked bench JVM as -D JVM
+    system properties, which SparkConf loads as session confs."""
+    opts = " ".join(f"-D{k}={v}" for k, v in confs.items())
+    prior = os.environ.get("JAVA_TOOL_OPTIONS", "")
+    return {"JAVA_TOOL_OPTIONS": f"{prior} {opts}".strip()}
+
+
 def run_bench(sf: str, queries=None, out=None, extra_env=None) -> None:
     sf_dir = SF1X_DIR if sf.startswith("1x") else f"/root/testdata/sf{sf}"
     if queries is None:
@@ -383,17 +391,17 @@ def main() -> None:
                   out=bench_out("1x_audio"), extra_env=SF1X_ENV)
         b, r = SF1X_TUNED_GEOMETRY
         run_bench("1x-tuned", queries=[SF1X_TUNED_QUERY], out=tuned_out(),
-                  extra_env=dict(SF1X_ENV,
-                                 SPARK_GRAFT_LSH_BANDS=str(b),
-                                 SPARK_GRAFT_LSH_ROWS=str(r)))
+                  extra_env=dict(SF1X_ENV, **spark_props(
+                      {"spark.graft.lsh.bands": b,
+                       "spark.graft.lsh.rowsPerBand": r})))
         run_bench("1x-tuned-ivf", queries=[SF1X_TUNED_IVF_QUERY],
                   out=tuned_ivf_out(),
-                  extra_env=dict(SF1X_ENV, SPARK_GRAFT_IVF_NPROBE=str(
-                      SF1X_TUNED_IVF_NPROBE)))
+                  extra_env=dict(SF1X_ENV, **spark_props(
+                      {"spark.graft.ivf.nprobe": SF1X_TUNED_IVF_NPROBE})))
         run_bench("1x-tuned-mh", queries=[SF1X_TUNED_MH_QUERY],
                   out=tuned_mh_out(),
-                  extra_env=dict(SF1X_ENV, SPARK_GRAFT_MINHASH_BANDS=str(
-                      SF1X_TUNED_MH_BANDS)))
+                  extra_env=dict(SF1X_ENV, **spark_props(
+                      {"spark.graft.minhash.bands": SF1X_TUNED_MH_BANDS})))
     runs = {sf: load_json(bench_out(sf), f"sf{sf} bench") for sf in SFS}
     runs1x = load_json(bench_out("1x"), "sf~1 bench")
     runs1xHeads = load_json(bench_out("1x_heads"), "sf~1 heads bench")
