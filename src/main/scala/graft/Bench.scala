@@ -1,11 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   /** One timed execution: wall seconds plus the runtime memory telemetry
-    * plan shape cannot see (r16 verdict item 5) — task spill bytes
-    * (memory + disk), max per-task peak execution memory, and the
-    * largest materialized broadcast. ArtifactGateSpec gates the
-    * committed BENCH_FULL.json on zero spill / bounded broadcasts.
+    * plan shape cannot see — task spill bytes (memory + disk), max
+    * per-task peak execution memory, and the largest materialized
+    * broadcast. ArtifactGateSpec gates the committed BENCH_FULL.json on
+    * zero spill and bounded peaks and broadcasts.
     * The structural counters — jobs started, stages completed, tasks
     * ended and their summed run time — are load-independent: per-stage
     * scheduler floor dominates the sf0.1 suite, so `stages` is the
@@ -16,29 +17,65 @@ object Bench {
     peakMem: Long, broadcastBytes: Long,
     jobs: Long, stages: Long, tasks: Long, taskMs: Long, compiles: Long)
 
+  /** Pass 1 is cold (memo builds, schema inference, first code
+    * generation); passes 2..4 are warm. Interleaved over the suite, so a
+    * query's samples sit a whole pass apart and a load spike shorter than
+    * a pass inflates at most one of them. */
+  val passes = 4
+
+  /** Linear-interpolated percentile (numpy's default), `p` in [0, 100]. */
+  def percentile(xs: Seq[Double], p: Double): Double = {
+    val s = xs.sorted
+    val r = p / 100 * (s.size - 1)
+    val lo = math.floor(r).toInt
+    val hi = math.min(lo + 1, s.size - 1)
+    s(lo) + (s(hi) - s(lo)) * (r - lo)
+  }
+
+  /** One query's seconds: `cold` is pass 1, `warm` the median of the clean
+    * warm passes with its quartiles `q1`/`q3`. A query without a clean
+    * warm run is `failed` (null in the artifact, outside the total); one
+    * that otherwise failed some run is `flaky`. */
+  final case class Summary(cold: Option[Double], warm: Option[Double],
+    q1: Option[Double], q3: Option[Double], failed: Boolean, flaky: Boolean)
+
+  /** Summarizes one query's per-pass seconds (None = a failed run). */
+  def summarize(secs: Seq[Option[Double]]): Summary = {
+    val warm = secs.drop(1).flatten
+    def pct(p: Double) = Option.when(warm.nonEmpty)(percentile(warm, p))
+    Summary(secs.headOption.flatten, pct(50), pct(25), pct(75),
+      failed = warm.isEmpty, flaky = warm.nonEmpty && secs.exists(_.isEmpty))
+  }
+
+  /** The suite total: the sum of the warm medians of the unfailed queries. */
+  def total(qs: Seq[Summary]): Double = qs.flatMap(_.warm).sum
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    // a failed query leaves exit code 1; a failed artifact write throws
+    // past the stop, so a stale artifact never survives a "clean" run
+    val ok = try run(spark, sfDir) finally spark.stop()
+    if (!ok) sys.exit(1)
+  }
+
+  private def run(spark: SparkSession, sfDir: String): Boolean = {
     Tables.configure(spark)
-    // ERROR, not WARN: three consecutive rounds the driver's tail capture
-    // of stdout was flooded past the JSON line by a *different* WARN class
-    // each round (executor heartbeats r8, SimpleFunctionRegistry r9,
-    // WindowExec "No Partition Defined" r10 — all eight unpartitioned-window
-    // sites run on bounded intermediates ≤100 rows or per-source/per-month
-    // aggregates, judge-audited, so the WARN is noise here). Verify keeps
-    // WARN; the bench's only stdout contract is the one JSON line.
+    // ERROR, not WARN: the bench's only stdout contract is the one JSON
+    // line, and WARN classes (executor heartbeats, function registry,
+    // unpartitioned windows over bounded intermediates) flooded the tail
+    // capture past it. Verify keeps WARN.
     spark.sparkContext.setLogLevel("ERROR")
-    // deployment index knobs (the scaling sweep's tuned sf~1 arms) are
-    // the spark.graft.* confs the knob readers consume (SimilarityQueries.
-    // lshGeometry/ivfNProbe, DedupQueries.minhashBands); SparkConf loads
-    // them from -Dspark.graft.… JVM system properties, and unset = the
-    // defaults the oracle contract pins. Parsed as Int HERE: a malformed
-    // value fails fast instead of deep inside a query chain, and the
-    // artifact tags below are built from the parsed ints, so a quote or
-    // backslash in a value can never corrupt the JSON head.
+    // deployment index knobs are the spark.graft.* confs the knob readers
+    // consume (SimilarityQueries.lshGeometry/ivfNProbe,
+    // DedupQueries.minhashBands); SparkConf loads them from
+    // -Dspark.graft.… JVM system properties, and unset = the defaults the
+    // oracle contract pins. Parsed as Int HERE: a malformed value fails
+    // fast, and the artifact tags below are built from the parsed ints,
+    // so a quote or backslash in a value can never corrupt the JSON head.
     def intConf(key: String): Option[Int] =
       spark.conf.getOption(key).map { v =>
         try v.trim.toInt
@@ -51,40 +88,18 @@ object Bench {
     val lshRows = intConf("spark.graft.lsh.rowsPerBand")
     val ivfNprobe = intConf("spark.graft.ivf.nprobe")
     val minhashBands = intConf("spark.graft.minhash.bands")
-    // sorted execution order: Map iteration order shifts as queries are
-    // added, which moves which query absorbs one-time JIT warm-up in
-    // pass 1 and makes per-query numbers incomparable across rounds.
-    // Code generation is a one-time cost only while the class cache
-    // holds the suite's working set: at Spark's default of 100 entries
-    // pass 2 recompiled 7,772 classes at sf0.01, which is why
-    // GraftSession.builder sizes it. The `compiles` map shows what each
-    // query still compiles in its best pass. A query whose pass 1 pays
-    // such costs disagrees with pass 2 by >1.5× and earns the targeted
-    // third sample below; set-up cost is perfbench's cold_s.
-    // best-of-2 per query, INTERLEAVED (A…Z then A…Z, min per query):
-    // a single pass cannot distinguish a code regression from transient
-    // machine contention (round 4's numbers swung >20x both ways on
-    // untouched code), and back-to-back repeats of the same query share
-    // one contention window, so a multi-minute load spike poisons both
-    // samples at once (round 5). Separating a query's two samples by the
-    // full suite length (~minutes) makes the min robust to any spike
-    // shorter than a whole pass; both raw readings ride along so a
-    // contended pass is still visible in the artifact.
-    val passes = 2
     // SPARK_GRAFT_ONLY=q113_bfs_reach,q149_pq_codes — iterate on a subset
-    // without paying for the full suite; unset (driver runs) = all queries
+    // without paying for the full suite; unset = all queries. Sorted
+    // execution order keeps the query that pays a shared one-time cost in
+    // pass 1 the same across runs.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    // failures tracked per (query, pass), not globally: a query that
-    // throws in only one pass (transient contention, round-8 advice) keeps
-    // the min of its clean samples and still counts toward the total —
-    // only an every-pass failure nulls it out of the comparison.
-    // per-query memory telemetry: task metrics accumulate through a
-    // listener scoped by reset/drain around each timed run (the bus is
-    // async — without the drain a query's tail events would land in the
-    // next query's window); the drains sit OUTSIDE the timed section
+    // per-query telemetry: task metrics accumulate through a listener
+    // scoped by reset/drain around each timed run (the bus is async —
+    // without the drain a query's tail events would land in the next
+    // query's window); the drains sit OUTSIDE the timed section
     import java.util.concurrent.atomic.AtomicLong
     import org.apache.spark.scheduler._
     val spillAcc, peakAcc, bcastAcc = new AtomicLong
@@ -124,7 +139,7 @@ object Bench {
     // the timed action is a noop write: it computes every column, where
     // `count()` lets Catalyst prune joins and projections away. A failed
     // run keeps its cause (class and first message line) for the
-    // artifact's `errors` map.
+    // artifact's `errors` map; a fatal error ends the bench.
     def timeOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Either[String, Run] = {
       org.apache.spark.graftbench.ListenerFlush.drain(spark.sparkContext)
@@ -140,122 +155,51 @@ object Bench {
         Right(Run(sec, spillAcc.get, peakAcc.get, bcastAcc.get,
           jobsAcc.get, stagesAcc.get, tasksAcc.get, taskMsAcc.get, compiles))
       }
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         Left(e.getClass.getName + ": " +
           String.valueOf(e.getMessage).linesIterator.nextOption()
             .getOrElse("").take(300))
       }
     }
-    // per-pass contention telemetry (r19 verdict item 1): the min-of-
-    // passes peak map is robust to a spike that hits ONE pass, but when
-    // the box is loaded for the whole bench both interleaved passes
-    // inflate together (identical code: 170 MB committed at load 4.86,
-    // 673 MB on the driver refresh at load 8.35 — min included). The
-    // 1-min load average sampled at each pass END (a pass spans minutes,
-    // so the sample reflects that pass's window) rides into the
-    // artifact, and ArtifactGateSpec adjudicates the 1 GiB working-set
-    // bound only against runs from load-comparable passes.
-    def nowLoad: Double = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
-    // the pre-suite sample is the only EXTERNAL-only reading; per-pass
-    // end samples are self-load + external. Measured r20: a quiet-box
-    // FULL-SUITE pass ends at load ~2.4-4.3 (the suite's tail is many
-    // short queries, so the 1-min average has decayed from its heavy
-    // bursts by pass end), while a short SUBSET run can read ~9-11
-    // (the sample lands right after startup's heavy burst) — the gate's
-    // quiet threshold is calibrated against the full-suite profile,
-    // which is the only artifact it ever gates
-    val startLoad = nowLoad
+    // the 1-min load average at each pass END (a pass spans minutes, so
+    // the sample reflects that pass's window): ArtifactGateSpec
+    // adjudicates the 1 GiB working-set bound only against runs from
+    // load-comparable passes, since a loaded box inflates every pass's
+    // per-task peak together
     val passLoads = scala.collection.mutable.ArrayBuffer[Double]()
-    val samples: Seq[Seq[Either[String, Run]]] = (1 to passes).map { _ =>
+    val samples = (1 to passes).map { _ =>
       val r = ordered.map { case (_, fn) => timeOne(fn) }
-      passLoads += nowLoad
+      passLoads += java.lang.management.ManagementFactory
+        .getOperatingSystemMXBean.getSystemLoadAverage
       r
     }
-    // adaptive re-sampling (round-9 advice): when a query's two interleaved
-    // passes disagree by >1.5×, min-of-2 is a lottery — q59/q105 carried
-    // ≥3× spreads for two rounds straight, making round-over-round deltas
-    // noise. A third targeted pass (queries run in suite order, so the
-    // extra pass is itself separated from both earlier samples) tightens
-    // the min without re-running the whole suite.
-    // …and unconditionally for any query whose min exceeds heavyFloor:
-    // the suite's most expensive queries are exactly the ones whose
-    // round-over-round deltas the judge reads hardest, yet a <1.5× spread
-    // left them with only two samples (round 10's q263 read [7.64, 9.94] —
-    // 1.30×, under the trigger, so the costliest number in the suite was
-    // the least defended). A third sample for the handful of >3s queries
-    // costs ~30s of suite time and makes every headline number min-of-3.
-    val spreadThreshold = 1.5
-    val heavyFloor = 3.0
-    val needThird: Set[Int] = ordered.indices.filter { i =>
-      val good = samples.flatMap(_(i).toOption).map(_.sec)
-      good.size >= 2 &&
-        (good.max / good.min > spreadThreshold || good.min > heavyFloor)
-    }.toSet
-    val third: Map[Int, Either[String, Run]] =
-      ordered.zipWithIndex.collect {
-        case ((_, fn), i) if needThird(i) => i -> timeOne(fn)
-      }.toMap
-    // the targeted third pass gets its own load sample: a run's pass
-    // provenance is positional (queries_raw index 0/1 = interleaved
-    // passes, index 2 = this block), so the gate can pair every raw
-    // peak with the load its pass ran under
-    val thirdLoad: Option[Double] =
-      if (third.nonEmpty) Some(nowLoad) else None
     val results = ordered.zipWithIndex.map { case ((name, _), i) =>
-      val runs = samples.map(_(i)) ++ third.get(i).toSeq
-      (name, runs.flatMap(_.toOption), runs)
+      val runs = samples.map(_(i))
+      (name, runs.flatMap(_.toOption), runs,
+        summarize(runs.map(_.toOption.map(_.sec))))
     }
-    val failed = results.collect { case (k, good, _) if good.isEmpty => k }
-    val flaky = results.collect {
-      case (k, good, all) if good.nonEmpty && good.size < all.size => k }
+    val failed = results.collect { case (k, _, _, s) if s.failed => k }
+    val flaky = results.collect { case (k, _, _, s) if s.flaky => k }
     def r6(d: Double): String = BigDecimal(d)
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toString
-    // an every-pass-failed query must be visible, not silently counted as
-    // a fast run: its per-query entry is null (error-fast wall times would
-    // understate it) and it contributes nothing to the total, so the total
-    // stays comparable across rounds as the set of passing queries
-    val qs = results.map { case (k, good, _) =>
-      val cell = if (good.isEmpty) "null" else r6(good.map(_.sec).min)
-      s"\"" + k + "\":" + cell
-    }.mkString("{", ",", "}")
-    val qsRaw = results.map { case (k, _, ts) =>
-      s"\"" + k + "\":" +
-        ts.map(_.fold(_ => "null", r => r6(r.sec)))
-          .mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    // memory telemetry maps (r16 verdict item 5): MAX across the runs —
-    // spill is a defect whichever pass it happens in, and the peak/
-    // broadcast claims being gated are worst-case ones
-    def longMap(f: Run => Long): String = results.map { case (k, good, _) =>
-      val cell = if (good.isEmpty) "null" else f(good.max(Ordering.by(f))).toString
-      s"\"" + k + "\":" + cell
-    }.mkString("{", ",", "}")
-    val qsSpill = longMap(_.spillBytes)
-    val qsPeak = longMap(_.peakMem)
-    val qsBcast = longMap(_.broadcastBytes)
-    // …plus the MIN-of-passes peak map (r18 verdict item 3): the max map
-    // is honest worst-case telemetry, but a gate on it is contention-
-    // sensitive — the same code measured 162 MB on a quiet box and
-    // 673 MB on one whose load average doubled (extra concurrent tasks
-    // raise per-task acquisition under the fair memory manager). The min
-    // across interleaved passes measures the CODE's floor requirement —
-    // box noise can inflate one pass, not all of them — so the 1 GiB
-    // working-set gate reads this map and a loaded re-run cannot 4× the
-    // gated number
-    def longMapMin(f: Run => Long, show: Long => String = _.toString)
-        : String = results.map { case (k, good, _) =>
-      val cell = if (good.isEmpty) "null" else show(good.map(f).min)
-      s"\"" + k + "\":" + cell
-    }.mkString("{", ",", "}")
-    val qsPeakMin = longMapMin(_.peakMem)
-    // structural counters, MIN over clean runs: the warm reading, once
-    // pass 1 has paid any memo build, schema inference and code generation
-    val qsJobs = longMapMin(_.jobs)
-    val qsStages = longMapMin(_.stages)
-    val qsTasks = longMapMin(_.tasks)
-    val qsTaskSec = longMapMin(_.taskMs, ms => r6(ms / 1e3))
-    val qsCompiles = longMapMin(_.compiles)
+    def jsonMap(cells: Seq[(String, String)]): String = cells
+      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    // a failed query's cell is null (error-fast wall times would
+    // understate it) and it adds nothing to the total, so the total stays
+    // comparable across runs as the set of passing queries
+    def secMap(f: Summary => Option[Double]): String = jsonMap(
+      results.map { case (k, _, _, s) => k -> f(s).fold("null")(r6) })
+    def rawMap(f: Run => String): String = jsonMap(results.map {
+      case (k, _, runs, _) =>
+        k -> runs.map(_.fold(_ => "null", f)).mkString("[", ",", "]") })
+    // memory maps take the MAX over clean runs (spill is a defect in any
+    // pass, and the broadcast claim is a worst-case one); the structural
+    // counters take the MIN, the warm reading once pass 1 has paid any
+    // memo build, schema inference and code generation
+    def longMap(agg: Seq[Long] => Long, f: Run => Long,
+        show: Long => String = _.toString): String = jsonMap(results.map {
+      case (k, good, _, _) =>
+        k -> (if (good.isEmpty) "null" else show(agg(good.map(f)))) })
     // the cause of every failed run, in run order, for each query with
     // one (failed or flaky); empty on a clean suite
     def jsonStr(x: String): String = "\"" + x.flatMap {
@@ -264,46 +208,20 @@ object Bench {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val qsErrors = results.collect { case (k, _, ts) if ts.exists(_.isLeft) =>
-      s"\"" + k + "\":" + ts.collect { case Left(e) => jsonStr(e) }
-        .mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    // …and the RAW per-run peak map (r19 verdict item 1): aligned with
-    // queries_raw (index 0/1 = interleaved passes, 2 = targeted third
-    // pass), so the gate can select the runs whose pass load is
-    // comparable to a quiet box instead of trusting a min that every
-    // pass inflated together
-    val qsPeakRaw = results.map { case (k, _, ts) =>
-      s"\"" + k + "\":" +
-        ts.map(_.fold(_ => "null", _.peakMem.toString))
-          .mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    // ONE aggregation convention (ADVICE r17): the head total is the sum
-    // of the per-query MAX values — exactly what re-summing the
-    // spill_bytes map yields, so the artifact agrees with itself and
-    // with ArtifactGateSpec's independent re-sum
-    val spillTotal = results.map { case (_, good, _) =>
-      if (good.isEmpty) 0L else good.map(_.spillBytes).max }.sum
-    val total = results.collect {
-      case (_, good, _) if good.nonEmpty => good.map(_.sec).min }.sum
-    def names(xs: Seq[String]): String =
-      xs.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // machine-contention telemetry: a contended box (round-2's 91.8s vs a
-    // quiet 51.9s on identical code) is self-identifying when the 1-minute
-    // load average rides along with the numbers
-    val loadAvg = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
-    val hostCpus = Runtime.getRuntime.availableProcessors
+    val qsErrors = jsonMap(results.collect {
+      case (k, _, runs, _) if runs.exists(_.isLeft) =>
+        k -> runs.collect { case Left(e) => jsonStr(e) }.mkString("[", ",", "]")
+    })
+    // the head total re-sums the spill_bytes map, as ArtifactGateSpec does
+    val spillTotal = results.map { case (_, good, _, _) =>
+      good.map(_.spillBytes).maxOption.getOrElse(0L) }.sum
+    def names(xs: Iterable[String]): String =
+      xs.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val ok = failed.isEmpty
-    // subset runs are tagged ("only":[...]) so a SPARK_GRAFT_ONLY artifact
-    // can never masquerade as a full-suite round snapshot (round-9 advice:
-    // a 2-query PLANS.json was committed as if it covered all 207)
-    val onlyTag = only.map(o => s""","only":${names(o.toSeq)}""").getOrElse("")
-    // a tuned-knob run must never masquerade as a default-knob snapshot
-    // (same rationale as the "only" tag); a HALF-set geometry pair is
-    // tagged too — it still changed the conf. Tags are built from the
-    // PARSED ints (ADVICE r18), so the JSON head can never carry a raw
-    // conf string.
+    // subset and tuned-knob runs are tagged, so neither can pass for the
+    // default-knob full-suite snapshot; a half-set geometry pair is
+    // tagged too (it still changed the conf)
+    val onlyTag = only.map(o => s""","only":${names(o)}""").getOrElse("")
     val geomTag = (lshBands, lshRows) match {
       case (None, None) => ""
       case (b, r) =>
@@ -314,43 +232,27 @@ object Bench {
       .map(p => s""","ivf_nprobe":$p""").getOrElse("")
     val mhTag = minhashBands
       .map(nb => s""","minhash_bands":$nb""").getOrElse("")
-    // freshness linkage (ADVICE r17): the md5 of the DECLARED query list
-    // ties the artifact to the source revision that produced it —
-    // ArtifactGateSpec recomputes this from SparkEntry.queries and fails
-    // on a stale BENCH_FULL (one generated before a query was added)
+    // freshness linkage: the md5 of the DECLARED query list ties the
+    // artifact to the source revision that produced it; ArtifactGateSpec
+    // recomputes it from SparkEntry.queries and fails on a stale artifact
     val listMd5 = {
       val md = java.security.MessageDigest.getInstance("MD5")
       md.update(SparkEntry.queries.keys.toSeq.sorted.mkString("\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       md.digest.map("%02x".format(_)).mkString
     }
-    val passLoadsJson = passLoads.map(l => r6(l)).mkString("[", ",", "]")
-    val thirdLoadJson = thirdLoad.map(l => r6(l)).getOrElse("null")
-    val head = s""""metric":"total","value":$total,"unit":"sec","ok":$ok,"passes":$passes,"failed":${names(failed)},"flaky":${names(flaky)},"sf":"$sfDir","load_avg":$loadAvg,"start_load_avg":${r6(startLoad)},"pass_load_avg":$passLoadsJson,"third_load_avg":$thirdLoadJson,"host_cpus":$hostCpus,"spill_bytes_total":$spillTotal,"query_list_md5":"$listMd5"$geomTag$ivfTag$mhTag$onlyTag"""
-    // stdout carries exactly ONE line, and it is SMALL: the driver
-    // snapshots stdout through a ~2 KB tail window, so with 318 queries
-    // the full per-query line (~12 KB) is truncated no matter how it is
-    // internally ordered (BENCH_r8–r11 all parsed as null). The stdout
-    // line is a bounded compact summary — the totals plus only the
-    // top-15 slowest queries, explicitly marked truncated — sized to
-    // always fit the window whole; the complete per-query map lands
-    // verbatim in BENCH_FULL.json (committed each round), so
-    // round-over-round per-query comparison never depends on tail
-    // length.
-    // The field stays named "queries" DELIBERATELY (ADVICE r12 suggested
-    // renaming the truncated map so legacy parsers fail loudly): the
-    // driver's published stdout contract keys per-query seconds on
-    // "queries", and round 13 is the first round the line can parse at
-    // all (the [info] prefix is gone) — renaming the key in the same
-    // round would trade a flagged, documented truncation
-    // ("queries_truncated":true + "queries_full" pointer) for a silent
-    // missing-field miss in the one consumer that matters. Any parser
-    // that wants the full map has BENCH_FULL.json, named in-band.
-    val slowest = results.collect { case (k, good, _) if good.nonEmpty =>
-      (k, good.map(_.sec).min) }.sortBy(-_._2).take(15)
-    val qsTop = slowest.map { case (k, v) => s"\"" + k + "\":" + r6(v) }
-      .mkString("{", ",", "}")
-    println(s"""{$head,"n_queries":${results.size},"queries":$qsTop,"queries_truncated":true,"queries_full":"BENCH_FULL.json"}""")
+    val hostCpus = Runtime.getRuntime.availableProcessors
+    val head = s""""metric":"total","value":${total(results.map(_._4))},"unit":"sec","ok":$ok,"passes":$passes,"failed":${names(failed)},"flaky":${names(flaky)},"sf":"$sfDir","pass_load_avg":${passLoads.map(r6).mkString("[", ",", "]")},"host_cpus":$hostCpus,"spill_bytes_total":$spillTotal,"query_list_md5":"$listMd5"$geomTag$ivfTag$mhTag$onlyTag"""
+    // stdout carries exactly ONE small line: a caller that keeps a ~2 KB
+    // tail of stdout must get it whole, and the full per-query map
+    // (~12 KB) would overflow that. So the line carries the totals plus
+    // the 15 slowest warm medians, marked truncated; the full maps land
+    // in BENCH_FULL.json.
+    // The field keeps the name "queries", which the stdout contract keys
+    // per-query seconds on.
+    val slowest = results.flatMap { case (k, _, _, s) => s.warm.map(k -> _) }
+      .sortBy(-_._2).take(15)
+    println(s"""{$head,"n_queries":${results.size},"queries":${jsonMap(slowest.map { case (k, v) => k -> r6(v) })},"queries_truncated":true,"queries_full":"BENCH_FULL.json"}""")
     // subset runs write *_SUBSET artifacts by default so an iteration loop
     // can never clobber the committed full-suite BENCH_FULL/PLANS snapshots
     // (explicit SPARK_GRAFT_BENCH_OUT/PLANS_OUT still override)
@@ -358,36 +260,21 @@ object Bench {
       if (only.isDefined) "BENCH_SUBSET.json" else "BENCH_FULL.json")
     val plansOut = sys.env.getOrElse("SPARK_GRAFT_PLANS_OUT",
       if (only.isDefined) "PLANS_SUBSET.json" else "PLANS.json")
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(benchOut),
-      s"""{$head,"queries":$qs,"queries_raw":$qsRaw,"spill_bytes":$qsSpill,"peak_exec_mem":$qsPeak,"peak_exec_mem_min":$qsPeakMin,"peak_exec_mem_raw":$qsPeakRaw,"max_broadcast_bytes":$qsBcast,"jobs":$qsJobs,"stages":$qsStages,"tasks":$qsTasks,"task_sec":$qsTaskSec,"compiles":$qsCompiles,"errors":$qsErrors}""")
-    catch { case _: Throwable => () } // file write is best-effort telemetry
-    // plan-shape snapshot (round artifact): PlanAudit over every declared
-    // query, so a plan regression (new shuffle, lost broadcast, a
-    // cartesian) diffs round-over-round even when wall-times move for data
-    // reasons. Mostly construction-only, but NOT free of execution: any
-    // query whose construction runs eager actions re-runs them while its
-    // DataFrame is built — the q108Stages consumers (q108/q113/q198/q201,
-    // localCheckpoint stages), the GlobalRank/PrefixScan consumers
-    // (q174/q200/q234/q237/q257/q260/q272 and friends — checkpoint +
-    // count passes), the seed/count actions in q231/q255/q263, and the
-    // CC-driven q244/q247. All of that lands AFTER all timing — never
-    // inside it. Best-effort: a plans failure must not fail the bench.
-    try {
-      val plans = ordered.map { case (name, fn) =>
-        val cell =
-          try {
-            val a = graft.operators.PlanAudit.of(fn(spark, sfDir))
-            s"""{"shuffles":${a.shuffles},"broadcasts":${a.broadcasts},"scans":${a.scans},"cartesians":${a.cartesians},"nested_loop_joins":${a.nestedLoopJoins},"codegen_spans":${a.codegenSpans},"nodes":${a.nodes},"unpartitioned_windows":${a.unpartitionedWindows},"single_partition_exchanges":${a.singlePartitionExchanges},"reused_exchanges":${a.reusedExchanges},"reused_subqueries":${a.reusedSubqueries}}"""
-          } catch { case _: Throwable => "null" }
-        s"\"" + name + "\":" + cell
-      }.mkString("{", ",", "}")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(plansOut), plans)
-    } catch { case _: Throwable => () }
-    spark.stop()
-    // a bench with failed queries must not read as a clean success to the
-    // harness (round 7's rc=0 masked two real regressions)
-    if (!ok) sys.exit(1)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(benchOut),
+      s"""{$head,"queries":${secMap(_.warm)},"queries_cold":${secMap(_.cold)},"queries_q1":${secMap(_.q1)},"queries_q3":${secMap(_.q3)},"queries_raw":${rawMap(r => r6(r.sec))},"spill_bytes":${longMap(_.max, _.spillBytes)},"peak_exec_mem_raw":${rawMap(_.peakMem.toString)},"max_broadcast_bytes":${longMap(_.max, _.broadcastBytes)},"jobs":${longMap(_.min, _.jobs)},"stages":${longMap(_.min, _.stages)},"tasks":${longMap(_.min, _.tasks)},"task_sec":${longMap(_.min, _.taskMs, ms => r6(ms / 1e3))},"compiles":${longMap(_.min, _.compiles)},"errors":$qsErrors}""")
+    // plan-shape snapshot: PlanAudit over every declared query, so a plan
+    // regression (new shuffle, lost broadcast, a cartesian) shows in a
+    // diff even when wall-times move for data reasons. Construction runs
+    // any eager actions a query's chain holds (checkpoint stages, seed
+    // counts, CC) again, after all timing. A query whose audit fails gets
+    // a null cell, which ArtifactGateSpec fails on.
+    val plans = jsonMap(ordered.map { case (name, fn) =>
+      name -> (try {
+        val a = graft.operators.PlanAudit.of(fn(spark, sfDir))
+        s"""{"shuffles":${a.shuffles},"broadcasts":${a.broadcasts},"scans":${a.scans},"cartesians":${a.cartesians},"nested_loop_joins":${a.nestedLoopJoins},"codegen_spans":${a.codegenSpans},"nodes":${a.nodes},"unpartitioned_windows":${a.unpartitionedWindows},"single_partition_exchanges":${a.singlePartitionExchanges},"reused_exchanges":${a.reusedExchanges},"reused_subqueries":${a.reusedSubqueries}}"""
+      } catch { case NonFatal(_) => "null" })
+    })
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(plansOut), plans)
+    ok
   }
 }

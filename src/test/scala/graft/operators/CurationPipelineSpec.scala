@@ -77,10 +77,13 @@ class CurationPipelineSpec extends SparkSuite with TimeLimits {
 
   test("CurationPipeline.run materializes each dedup stage once") {
     // the bound is the count measured on this Spark version; re-measure
-    // it on an upgrade, like the plan gates
+    // it on an upgrade, like the plan gates. The guarded call is a warm
+    // one: the first Tables.load of the documents in a JVM adds one job,
+    // the parquet schema inference its schema memo then replays
+    result
     val n = jobsOf(CurationPipeline.run(
       Tables.load(spark, sf, "documents"), "doc_id", "text", "lang"))
-    assert(n <= 25, s"CurationPipeline.run ran $n jobs > 25; with four " +
+    assert(n <= 24, s"CurationPipeline.run ran $n jobs > 24; with four " +
       "standalone count()s and no materialized exact stage it ran 43, " +
       "with min-label components and their separate edge cache 29")
   }

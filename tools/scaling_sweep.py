@@ -3,7 +3,7 @@
 
 Replaces plan-reading with measurement for the bench's expensive tail:
 runs the top-cost queries (plus the verdict-named iterative heads) at
-sf0.001 / sf0.01 / sf0.1 through graft.Bench (min-of-passes timing, the
+sf0.001 / sf0.01 / sf0.1 through graft.Bench (warm-median timing, the
 same harness the round artifacts use), fits a log-log slope per query,
 and flags anything super-linear beyond its STATED complexity. Emits
 SCALING.md so future rounds re-run and diff:
@@ -125,9 +125,9 @@ STATED = {
 
 SFS = ["0.001", "0.01", "0.1"]
 
-# Memoized consumers need special handling: Bench's min-of-passes
-# amortizes a SessionDirMemo build to ~0 (the stub read), so the min is
-# the wrong scaling signal. The build cost rides the FIRST raw sample of
+# Memoized consumers need special handling: Bench's warm median reads
+# a SessionDirMemo build's stub (~0), so the warm median is the wrong
+# scaling signal. The build cost rides the FIRST raw sample of
 # the memo's first consumer in suite order — use that for the builder,
 # and mark pure-stub siblings instead of fitting a meaningless slope.
 # Bench has no JIT warmup, so a pass-1 sample also carries one-time JIT.
@@ -149,7 +149,7 @@ COLD_FIRST_SAMPLE = {
         "bpeMemo trains here (pass-1 raw sample)",
     "q270_lsh_tuning":
         "minhashTuningTable memo builds here (pass-1 raw sample; r19 "
-        "memoization — min-of-passes would measure the stub)",
+        "memoization — the warm median would measure the stub)",
 }
 STUB_ONLY = {
     "q265_widest_path": "reads q264's memoized semiring state - see q264's row for the loop's scaling",
@@ -409,8 +409,8 @@ def main() -> None:
     runs1xT = load_json(tuned_out(), "sf~1 tuned-geometry bench")
     runs1xTIvf = load_json(tuned_ivf_out(), "sf~1 tuned-ivf bench")
     runs1xTMh = load_json(tuned_mh_out(), "sf~1 tuned-minhash bench")
-    loads = {sf: runs[sf].get("load_avg") for sf in SFS}
-    load1x = runs1x.get("load_avg")
+    loads = {sf: runs[sf]["pass_load_avg"][-1] for sf in SFS}
+    load1x = runs1x["pass_load_avg"][-1]
     rows = []
     for q in QUERIES:
         if q in STUB_ONLY:
@@ -438,7 +438,7 @@ def main() -> None:
                      else runs1xAudio if q in SF1X_AUDIO_QUERIES
                      else runs1x)
             # cold families read the pass-1 raw sample at sf~1 too —
-            # min-of-passes would measure the memo stub (r18)
+            # the warm median would measure the memo stub (r18)
             if q in COLD_FIRST_SAMPLE:
                 raw = src1x.get("queries_raw", {}).get(q)
                 t1x = raw[0] if raw else None
@@ -520,7 +520,7 @@ def main() -> None:
     # bound). This section reports both samples with separate bounds so
     # a build regression and a query regression fail by different
     # names: build = pass-1 raw sample (bound: the query's STATED
-    # complexity), warm = min of the later interleaved/third samples —
+    # complexity), warm = the warm median of passes 2..4 —
     # the memoized read path (bound 1.50, adjudicated only above a
     # 0.5 s floor: stub reads are scheduler-floor-dominated, and a
     # log-ratio of two ~40 ms floors measures the box, not the code).
@@ -532,18 +532,14 @@ def main() -> None:
     def _build_sample(raw):
         return raw[0] if raw else None
 
-    def _warm_sample(raw):
-        tail_samples = [t for t in (raw[1:] if raw else [])
-                        if t is not None]
-        return min(tail_samples) if tail_samples else None
-
     memo_split = []
     for q in MEMO_SPLIT_QUERIES:
         src1x = (runs1xHeads if q in SF1X_HEAD_QUERIES else runs1x)
         raw01 = runs["0.1"].get("queries_raw", {}).get(q)
         raw1x = src1x.get("queries_raw", {}).get(q)
         b01, b1x = _build_sample(raw01), _build_sample(raw1x)
-        w01, w1x = _warm_sample(raw01), _warm_sample(raw1x)
+        w01 = runs["0.1"]["queries"].get(q)
+        w1x = src1x["queries"].get(q)
         build_tail = (math.log10(b1x / b01)
                       if b01 and b1x else None)
         warm_tail = (math.log10(w1x / w01)
@@ -569,8 +565,8 @@ def main() -> None:
     lines.append("Generated by `python3 tools/scaling_sweep.py` — the "
                  "bench tail's top-15 by r15 cost plus the verdict-named "
                  "iterative heads, each run through `graft.Bench` "
-                 "(min-of-interleaved-passes, third sample for heavy/"
-                 "spread queries) at all three driver snapshots, plus a "
+                 "(median of three warm passes after a cold one) "
+                 "at all three testdata snapshots, plus a "
                  "SYNTHESIZED sf~1 decade (10× salted replication of "
                  "sf0.1 — see `synthesize_sf1x` for why salted, not "
                  "copied) for the steep-tail pair-mining families AND "
@@ -812,7 +808,7 @@ still dominate", not "the algorithm is sub-linear forever"; the sf~1
 decade exists to burn off more floor, q306 shows what an ACTIVATED
 term looks like, and the tuned arm shows what a REMOVED term looks
 like (and that removal can land in spill bytes rather than seconds).
-Numbers are min-of-interleaved-passes (cold rows: pass-1) under the
+Numbers are warm medians of three passes (cold rows: pass-1) under the
 box loads recorded above; the tail decade is the robust signal, the
 fitted slope a floor-dragged lower bound.
 
