@@ -202,15 +202,10 @@ object Bench {
         k -> (if (good.isEmpty) "null" else show(agg(good.map(f)))) })
     // the cause of every failed run, in run order, for each query with
     // one (failed or flaky); empty on a clean suite
-    def jsonStr(x: String): String = "\"" + x.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val qsErrors = jsonMap(results.collect {
       case (k, _, runs, _) if runs.exists(_.isLeft) =>
-        k -> runs.collect { case Left(e) => jsonStr(e) }.mkString("[", ",", "]")
+        k -> runs.collect { case Left(e) => Verify.jsonStr(e) }
+          .mkString("[", ",", "]")
     })
     // the head total re-sums the spill_bytes map, as ArtifactGateSpec does
     val spillTotal = results.map { case (_, good, _, _) =>

@@ -10,8 +10,10 @@ import org.apache.spark.sql.functions._
   *
   * Expressed as a windowed max over a struct (lexicographic tuple order) so
   * it is one shuffle on the key, no row_number sort needed, and skew-safe
-  * under AQE. Used for latest-file-per-symbol pruning and last-row-per-group
-  * feature extraction.
+  * under AQE. A public operator with no caller in the pipeline or the
+  * query packs: Transform prunes raw files with a driver-side listing
+  * (`Pipeline.Transform.latestRawPerSymbol`), Predict and q10 take the last
+  * row per group with `max_by`, and q07 with a `row_number` window.
   */
 object LatestPerKey {
   def apply(df: DataFrame, key: Column, ord: Column*): DataFrame = {

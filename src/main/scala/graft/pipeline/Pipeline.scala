@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -14,29 +14,29 @@ import graft.operators.Ols
   */
 object Pipeline {
 
-  /** Raw-zone file format. The reference uploads ONE object per symbol
-    * holding ONE JSON array (`json.dumps(records)`,
-    * `scripts/stock_ingestor.py:41-42`); Spark's native JSON sink writes a
-    * JSONL directory. Semantics downstream are identical — [[Transform]]
-    * reads either — so [[RawFormat.JsonLines]] (distributed write) is the
-    * default and [[RawFormat.JsonArray]] is the byte-parity option. */
-  sealed trait RawFormat
-  object RawFormat {
-    /** Spark-native JSONL part-file directory (scales with partitions). */
-    case object JsonLines extends RawFormat
-    /** Reference byte parity: one file, one JSON array of row objects.
-      * Materializes the symbol's rows on the driver — exactly the
-      * reference's `df.to_dict(orient="records")`, and bounded by the
-      * same per-symbol-per-run contract. */
-    case object JsonArray extends RawFormat
+  /** The entries of `dir` matching the glob `pattern`, from one
+    * driver-side listing (the reference's `list_objects_v2`): metadata
+    * only, never data. An absent `dir` lists nothing. */
+  private def glob(spark: SparkSession, dir: String, pattern: String)
+      : Seq[FileStatus] = {
+    val fs = FileSystem.get(new java.net.URI(dir),
+      spark.sparkContext.hadoopConfiguration)
+    Option(fs.globStatus(new Path(s"$dir/$pattern")))
+      .fold(Seq.empty[FileStatus])(_.toSeq)
   }
 
   /** Stage 1 — ingest (`scripts/stock_ingestor.py`). The yFinance HTTP pull
     * is replaced by a source adapter: any DataFrame with the canonical bar
     * schema (symbol, Datetime, Open, High, Low, Close, Volume). Writes the
-    * raw zone exactly like the reference: per-symbol JSON records with
-    * flattened "Metric_SYMBOL" names, stringified timestamps (tz-suffixed,
+    * raw zone like the reference: per-symbol JSON records with flattened
+    * "Metric_SYMBOL" names, stringified timestamps (tz-suffixed,
     * `stock_ingestor.py:33-35`), empty frames skipped (`:25-27`).
+    *
+    * Each symbol's raw entry `<SYM>_stock_raw_<runTs>.json` is Spark's
+    * JSON sink (`df.write.json`, SURVEY row 2): a directory holding one
+    * JSONL part file, since the write is `coalesce(1)`. The reference
+    * uploads one plain file holding one JSON array instead; [[Transform]]
+    * reads both.
     *
     * SCALE CAVEAT: this is the parity path — it drives a driver-side loop
     * of O(symbols) Spark jobs (one filter+write per symbol, mirroring the
@@ -49,15 +49,14 @@ object Pipeline {
     * readers consume directly via partition pruning. */
   object Ingest {
     def run(spark: SparkSession, bars: DataFrame, rawDir: String,
-        runTs: String, format: RawFormat = RawFormat.JsonLines)
-        : Seq[String] = {
+        runTs: String): Seq[String] = {
       // symbols come from the frame itself, so no symbol's filter below is
       // empty (the reference's skip-on-empty guard, `:25-27`); a null
       // symbol, which would match no rows, is dropped here
       val symbols = bars.select("symbol").filter(col("symbol").isNotNull)
         .distinct().collect().map(_.getString(0)).sorted.toSeq
       symbols.map { sym =>
-        val projected = bars.filter(col("symbol") === sym).select(
+        bars.filter(col("symbol") === sym).select(
           date_format(col("Datetime"), "yyyy-MM-dd HH:mm:ssXXX")
             .as("Datetime_"),
           col("Open").as(s"Open_$sym"),
@@ -66,21 +65,8 @@ object Pipeline {
           col("Close").as(s"Close_$sym"),
           col("Volume").as(s"Volume_$sym"),
           col("symbol"))
-        val target = s"$rawDir/${sym}_stock_raw_$runTs.json"
-        format match {
-          case RawFormat.JsonLines =>
-            projected.coalesce(1)
-              .write.mode(SaveMode.Overwrite).json(target)
-          case RawFormat.JsonArray =>
-            // one object, one JSON array — the reference's exact shape
-            // (stock_ingestor.py:37-42); overwrite mirrors put_object
-            val body = projected.toJSON.collect().mkString("[", ",", "]")
-            val fs = FileSystem.get(new java.net.URI(rawDir),
-              spark.sparkContext.hadoopConfiguration)
-            val out = fs.create(new Path(target), true)
-            try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            finally out.close()
-        }
+          .coalesce(1).write.mode(SaveMode.Overwrite)
+          .json(s"$rawDir/${sym}_stock_raw_$runTs.json")
         sym
       }
     }
@@ -91,35 +77,24 @@ object Pipeline {
     * normalize → per-symbol parquet in the processed zone. */
   object Transform {
     /** Driver-side listing mirroring the reference's `list_objects_v2` +
-      * argmax(LastModified); file count is O(symbols × runs) — metadata
-      * only, never data. */
+      * argmax(LastModified); file count is O(symbols × runs). */
     def latestRawPerSymbol(spark: SparkSession, rawDir: String)
-        : Map[String, String] = {
-      val fs = FileSystem.get(new java.net.URI(rawDir),
-        spark.sparkContext.hadoopConfiguration)
-      val stats = Option(fs.globStatus(new Path(s"$rawDir/*_stock_raw_*")))
-        .getOrElse(Array.empty)
-      stats.toSeq
-        .map(st => (st.getPath.getName.split("_stock_raw_")(0),
-          (st.getModificationTime, st.getPath.toString)))
-        .groupBy(_._1)
-        .map { case (sym, files) => sym -> files.map(_._2).max._2 }
-    }
+        : Map[String, FileStatus] =
+      glob(spark, rawDir, "*_stock_raw_*")
+        .groupBy(_.getPath.getName.split("_stock_raw_")(0))
+        .map { case (sym, files) => sym -> files.maxBy(st =>
+          (st.getModificationTime, st.getPath.toString)) }
 
     def run(spark: SparkSession, rawDir: String, processedDir: String)
         : Seq[String] = {
       val latest = latestRawPerSymbol(spark, rawDir)
       require(latest.nonEmpty, s"no raw files found under $rawDir")
-      val fs = FileSystem.get(new java.net.URI(rawDir),
-        spark.sparkContext.hadoopConfiguration)
-      latest.toSeq.sortBy(_._1).map { case (sym, path) =>
-        // a plain FILE is the reference's single-JSON-array object
-        // (RawFormat.JsonArray) and needs multiLine parsing; a directory
-        // is Spark's own JSONL sink (RawFormat.JsonLines)
-        val raw =
-          if (fs.getFileStatus(new Path(path)).isFile)
-            spark.read.option("multiLine", "true").json(path)
-          else spark.read.json(path)
+      latest.toSeq.sortBy(_._1).map { case (sym, st) =>
+        // a plain file is the reference's raw object, one JSON array
+        // (stock_ingestor.py:37-42), and needs multiLine parsing; a
+        // directory is Ingest's JSONL sink
+        val raw = spark.read.option("multiLine", st.isFile)
+          .json(st.getPath.toString)
         Normalize(raw, Some(sym))
           .write.mode(SaveMode.Overwrite)
           .parquet(s"$processedDir/${sym}_processed")
@@ -140,10 +115,8 @@ object Pipeline {
       // explicit driver-side listing (mirrors the reference's
       // list_objects_v2 at combine_processed.py:13-19) — also avoids the
       // analyzer's noisy glob-path fallback logging
-      val fs = FileSystem.get(new java.net.URI(processedDir),
-        spark.sparkContext.hadoopConfiguration)
-      val dirs = Option(fs.globStatus(new Path(s"$processedDir/*_processed")))
-        .getOrElse(Array.empty).map(_.getPath.toString).sorted
+      val dirs = glob(spark, processedDir, "*_processed")
+        .map(_.getPath.toString).sorted
       require(dirs.nonEmpty, s"no processed outputs under $processedDir")
       val combined = spark.read.option("mergeSchema", "true")
         .parquet(dirs.toIndexedSeq: _*)
@@ -236,33 +209,33 @@ object Pipeline {
     *
     * Between Transform and Combine sits the data-quality gate
     * (DataQuality.enforce): each per-symbol processed output must satisfy
-    * the bar contract before Combine may union it — the reference installed
-    * great_expectations for exactly this seam and never wired it
-    * (`docker-compose.yml:32`). Pass `qualityChecks = Nil` to disable.
+    * the bar contract [[DataQuality.barChecks]] before Combine may union
+    * it — the reference installed great_expectations for exactly this seam
+    * and never wired it (`docker-compose.yml:32`).
     *
     * Each stage runs under the [[Retry]] policy (default mirrors the
     * reference DAG's `retries: 1, retry_delay: 5min`,
     * `dags/stock_pipeline_dag.py:14-18`) — every stage write is an
     * idempotent `SaveMode.Overwrite` into its own zone, so a re-attempt
-    * after a partial failure is safe. The quality gate deliberately does
-    * NOT retry: a contract violation is deterministic, not transient. */
+    * after a partial failure is safe. Only transient failures are
+    * re-attempted: a fatal error, an analysis error or a failed `require`
+    * guard (no raw files, no processed outputs, predict's missing key
+    * columns) fails the stage at once. The quality gate does not run
+    * under the policy at all: a contract violation is deterministic. */
   def run(spark: SparkSession, bars: DataFrame, workDir: String,
       runTs: String = "20260101T000000Z",
-      qualityChecks: Seq[DataQuality.Check] = DataQuality.barChecks,
-      retry: Retry.Policy = Retry.Policy(),
-      rawFormat: RawFormat = RawFormat.JsonLines)
-      : DataFrame = {
+      retry: Retry.Policy = Retry.Policy()): DataFrame = {
     import Retry.withRetry
     withRetry(retry, "ingest") {
-      Ingest.run(spark, bars, s"$workDir/raw", runTs, rawFormat)
+      Ingest.run(spark, bars, s"$workDir/raw", runTs)
     }
     val syms = withRetry(retry, "transform") {
       Transform.run(spark, s"$workDir/raw", s"$workDir/processed")
     }
-    if (qualityChecks.nonEmpty) syms.foreach { sym =>
+    syms.foreach { sym =>
       DataQuality.enforce(
         spark.read.parquet(s"$workDir/processed/${sym}_processed"),
-        qualityChecks, s"processed/$sym")
+        DataQuality.barChecks, s"processed/$sym")
     }
     val combined = withRetry(retry, "combine") {
       Combine.run(spark, s"$workDir/processed", s"$workDir/combined")

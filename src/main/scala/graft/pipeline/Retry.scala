@@ -1,5 +1,8 @@
 package graft.pipeline
 
+import org.apache.spark.sql.AnalysisException
+import scala.util.control.NonFatal
+
 /** Per-stage retry policy mirroring the reference DAG's failure handling
   * (`dags/stock_pipeline_dag.py:14-18`: `retries: 1, retry_delay:
   * timedelta(minutes=5)` applied to every task). The reference delegates
@@ -12,6 +15,12 @@ package graft.pipeline
   * FIRST failure is thrown (it is the root cause; later failures are
   * usually knock-on effects of the same condition) with subsequent
   * failures attached as suppressed exceptions.
+  *
+  * Only transient failures are re-attempted. A fatal error (not
+  * `NonFatal`: VM errors, linkage errors, interrupts) propagates at once.
+  * A deterministic failure — an `AnalysisException`, or an
+  * `IllegalArgumentException` from a stage's `require` guard — would fail
+  * the same way again, so it ends the attempts without a sleep.
   */
 object Retry {
 
@@ -36,12 +45,18 @@ object Retry {
       try {
         return body
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           if (first == null) first = e
           else if (e ne first) first.addSuppressed(e)
+          if (deterministic(e)) throw first
           attempt += 1
       }
     }
     throw first
+  }
+
+  private def deterministic(e: Throwable): Boolean = e match {
+    case _: AnalysisException | _: IllegalArgumentException => true
+    case _ => false
   }
 }

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** `graft.Bench`'s per-query summary rule on fixed vectors: pass 1 is the
   * cold sample, the warm passes give a median with numpy-linear quartiles,
   * and a failed run makes the query flaky, or failed when no warm run is
-  * left. */
+  * left. The JSON string escaper the artifact's `errors` map uses. */
 class BenchSpec extends AnyFunSuite {
   import Bench.{Summary, summarize, total}
 
@@ -43,5 +43,11 @@ class BenchSpec extends AnyFunSuite {
     assert(summarize(Seq(None, None, None, None)).failed)
     val clean = summarize(Seq(Some(9.0), Some(2.0), Some(1.0), Some(4.0)))
     assert(total(Seq(clean, lost)) == 2.0)
+  }
+
+  test("an error message lands in the errors map as one JSON string") {
+    // the escaper Bench's `errors` map and Verify's oracle_sql.json share
+    assert(Verify.jsonStr("a \"q\" C:\\x\n\tend\u0001") ==
+      "\"a \\\"q\\\" C:\\\\x\\u000a\\u0009end\\u0001\"")
   }
 }

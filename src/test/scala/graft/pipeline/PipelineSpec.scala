@@ -1,7 +1,10 @@
 package graft.pipeline
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
+import java.time.ZoneOffset
+import java.time.format.DateTimeFormatter
+import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
@@ -70,30 +73,42 @@ class PipelineSpec extends SparkSuite {
     assert(out(1).getDouble(3) > 0.0)
   }
 
-  test("JsonArray raw format: reference byte shape, identical predictions") {
-    val bars = toDf(
-      mkBars("AAPL", 10, _ => 0.0) ++
-        mkBars("GOOG", 9, t => if (t % 2 == 0) 0.3 else -0.3))
+  test("Transform reads the reference's raw object") {
+    val rows = mkBars("AAPL", 10, _ => 0.0) ++
+      mkBars("GOOG", 9, t => if (t % 2 == 0) 0.3 else -0.3)
     val dirL = Files.createTempDirectory("graft_jsonl").toString
     val dirA = Files.createTempDirectory("graft_jsona").toString
-    val outL = Pipeline.run(spark, bars, dirL).orderBy("symbol").collect()
-    val outA = Pipeline.run(spark, bars, dirA,
-      rawFormat = Pipeline.RawFormat.JsonArray).orderBy("symbol").collect()
-    // downstream results are format-independent
+    val outL = Pipeline.run(spark, toDf(rows), dirL).orderBy("symbol").collect()
+    // the reference's raw object (stock_ingestor.py:37-42): ONE plain file
+    // per symbol holding ONE JSON array of row objects, flattened names,
+    // tz-suffixed timestamps, no symbol field
+    val stamp = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ssxxx")
+    Files.createDirectories(Paths.get(s"$dirA/raw"))
+    rows.groupBy(_._1).foreach { case (sym, bars) =>
+      val body = bars.map { case (_, t, o, h, l, c, v) =>
+        val dt = t.toInstant.atOffset(ZoneOffset.UTC).format(stamp)
+        s"""{"Datetime_":"$dt","Open_$sym":$o,"High_$sym":$h,""" +
+          s""""Low_$sym":$l,"Close_$sym":$c,"Volume_$sym":$v}"""
+      }.mkString("[", ",", "]")
+      Files.writeString(
+        Paths.get(s"$dirA/raw/${sym}_stock_raw_20240101T000000Z.json"), body)
+    }
+    Pipeline.Transform.run(spark, s"$dirA/raw", s"$dirA/processed")
+    Pipeline.Combine.run(spark, s"$dirA/processed", s"$dirA/combined")
+    val outA = Pipeline.Predict.run(spark, s"$dirA/combined",
+      s"$dirA/predictions").orderBy("symbol").collect()
     assert(outA.toSeq == outL.toSeq)
-    // byte shape pins the reference contract (stock_ingestor.py:37-42):
-    // ONE plain file per symbol holding ONE JSON array of row objects
-    val raw = new java.io.File(s"$dirA/raw")
-      .listFiles().filter(_.getName.endsWith(".json"))
-    assert(raw.length == 2 && raw.forall(_.isFile))
-    val body = new String(Files.readAllBytes(
-      raw.find(_.getName.startsWith("AAPL")).get.toPath), "UTF-8")
-    assert(body.startsWith("[{") && body.endsWith("}]"))
-    assert(body.contains("\"Close_AAPL\":") && body.contains("\"symbol\":"))
-    // and the JSONL default remains a directory (Spark-native sink)
-    val rawL = new java.io.File(s"$dirL/raw")
-      .listFiles().filter(_.getName.endsWith(".json"))
-    assert(rawL.forall(_.isDirectory))
+  }
+
+  test("a stage's require guard fails Pipeline.run at once, no retry sleep") {
+    val dir = Files.createTempDirectory("graft_failfast").toString
+    val slept = ArrayBuffer.empty[Long]
+    val e = intercept[IllegalArgumentException] {
+      Pipeline.run(spark, toDf(Nil), dir,
+        retry = Retry.Policy(retries = 1, sleep = ms => { slept += ms; () }))
+    }
+    assert(e.getMessage.contains("no raw files found"))
+    assert(slept.isEmpty, s"slept ${slept.mkString(", ")} ms")
   }
 
   test("latest raw file per symbol wins (incremental overwrite model)") {

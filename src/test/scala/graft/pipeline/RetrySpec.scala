@@ -1,12 +1,14 @@
 package graft.pipeline
 
+import org.apache.spark.sql.AnalysisException
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the reference DAG's per-stage failure policy (`retries: 1,
   * retry_delay` — `dags/stock_pipeline_dag.py:14-18`) as implemented by
   * [[Retry.withRetry]]: one transient failure recovers, persistent
-  * failure surfaces the ORIGINAL error, and the delay runs before each
-  * re-attempt (injected sleeper — no real clock in tests). */
+  * failure surfaces the ORIGINAL error, the delay runs before each
+  * re-attempt (injected sleeper — no real clock in tests), and fatal or
+  * deterministic failures are not re-attempted. */
 class RetrySpec extends AnyFunSuite {
 
   private def policy(retries: Int, slept: StringBuilder) =
@@ -58,13 +60,52 @@ class RetrySpec extends AnyFunSuite {
     assert(out == 42 && calls == 1 && slept.isEmpty)
   }
 
-  test("non-Exception Throwables (e.g. NoClassDefFoundError) also retry") {
+  test("a fatal error (NoClassDefFoundError) fails after one call, no sleep") {
+    val slept = new StringBuilder
     var calls = 0
-    val out = Retry.withRetry(policy(1, new StringBuilder), "linkage") {
-      calls += 1
-      if (calls == 1) throw new NoClassDefFoundError("late-loaded codec")
-      "recovered"
+    intercept[NoClassDefFoundError] {
+      Retry.withRetry(policy(1, slept), "linkage") {
+        calls += 1
+        throw new NoClassDefFoundError("late-loaded codec")
+      }
     }
-    assert(out == "recovered" && calls == 2)
+    assert(calls == 1 && slept.isEmpty)
+  }
+
+  test("deterministic failures (require guard, AnalysisException) fail " +
+      "after one call, no sleep") {
+    for (cause <- Seq[Exception](
+        new IllegalArgumentException(
+          "requirement failed: no raw files found under /raw"),
+        new AnalysisException("PATH_NOT_FOUND",
+          Map("path" -> "file:/combined")))) {
+      val slept = new StringBuilder
+      var calls = 0
+      val e = intercept[Exception] {
+        Retry.withRetry(policy(3, slept), "deterministic") {
+          calls += 1
+          throw cause
+        }
+      }
+      assert((e eq cause) && calls == 1 && slept.isEmpty,
+        s"$e after $calls calls, slept $slept")
+    }
+  }
+
+  test("a deterministic failure on a re-attempt ends the attempts and " +
+      "surfaces the ORIGINAL error") {
+    val slept = new StringBuilder
+    var calls = 0
+    val e = intercept[RuntimeException] {
+      Retry.withRetry(policy(3, slept), "mixed") {
+        calls += 1
+        if (calls == 1) sys.error("transient object-store hiccup")
+        require(false, "no raw files found under /raw")
+      }
+    }
+    assert(calls == 2 && slept.toString == "sleep(123);")
+    assert(e.getMessage == "transient object-store hiccup")
+    assert(e.getSuppressed.map(_.getMessage).toSeq ==
+      Seq("requirement failed: no raw files found under /raw"))
   }
 }
