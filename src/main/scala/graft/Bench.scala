@@ -88,12 +88,10 @@ object Bench {
     val lshRows = intConf("spark.graft.lsh.rowsPerBand")
     val ivfNprobe = intConf("spark.graft.ivf.nprobe")
     val minhashBands = intConf("spark.graft.minhash.bands")
-    // SPARK_GRAFT_ONLY=q113_bfs_reach,q149_pq_codes — iterate on a subset
-    // without paying for the full suite; unset = all queries. Sorted
-    // execution order keeps the query that pays a shared one-time cost in
-    // pass 1 the same across runs.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    // SPARK_GRAFT_ONLY (Verify.only) iterates on a subset without paying
+    // for the full suite. Sorted execution order keeps the query that pays
+    // a shared one-time cost in pass 1 the same across runs.
+    val only = Verify.only
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     // per-query telemetry: task metrics accumulate through a listener

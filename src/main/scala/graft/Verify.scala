@@ -14,12 +14,14 @@ object Verify {
     case c => c.toString
   } + "\""
 
+  /** The query subset a full-suite main runs:
+    * `SPARK_GRAFT_ONLY=q113_bfs_reach,q149_pq_codes` names it; unset = all
+    * queries. Read the same way by [[Bench]]. */
+  def only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_ONLY")
+    .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+
   def main(args: Array[String]): Unit = {
-    // dev convenience: an optional 3rd arg restricts the dump to a
-    // comma-separated query-name list (the driver always passes two)
     val (sfDir, outDir) = (args(0), args(1))
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.ui.enabled", "false")

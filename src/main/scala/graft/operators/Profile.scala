@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.util.QuotingUtils
 import org.apache.spark.sql.functions._
 
 /** Table profiling — the census a pipeline runs before trusting a new
@@ -19,18 +20,18 @@ object Profile {
 
   def profile(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "profile at least one column")
-    val aggs = cols.flatMap { c =>
-      Seq(
-        sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"${c}__nulls"),
-        countDistinct(col(c)).as(s"${c}__distinct"))
+    val aggs = cols.zipWithIndex.flatMap { case (c, i) =>
+      val v = col(QuotingUtils.quoteIdentifier(c))
+      Seq(sum(when(v.isNull, 1L).otherwise(0L)).as(s"nulls$i"),
+        countDistinct(v).as(s"distinct$i"))
     }
-    val one = df.agg(count(lit(1)).as("__rows"), aggs: _*)
     // unpivot the single metrics row back to one row per column
-    val stackArgs = cols
-      .map(c => s"'$c', `${c}__nulls`, `${c}__distinct`")
-      .mkString(", ")
-    one.select(col("__rows").as("n_rows"),
-        expr(s"stack(${cols.size}, $stackArgs) AS (col_name, n_nulls, n_distinct)"))
+    val rows = cols.zipWithIndex.flatMap { case (c, i) =>
+      Seq(lit(c), col(s"nulls$i"), col(s"distinct$i"))
+    }
+    df.agg(count(lit(1)).as("n_rows"), aggs: _*)
+      .select(col("n_rows"), stack(lit(cols.size) +: rows: _*)
+        .as(Seq("col_name", "n_nulls", "n_distinct")))
       .select(col("col_name"), col("n_rows"), col("n_nulls"), col("n_distinct"))
   }
 }

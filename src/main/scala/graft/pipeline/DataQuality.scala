@@ -1,19 +1,22 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.QuotingUtils
 import org.apache.spark.sql.functions._
 
 /** Declarative data-quality gate (SURVEY §5: the reference installs
   * great_expectations and never calls it — this is the working equivalent,
   * reference `docker-compose.yml:32`).
   *
-  * Design for 100 TB: every row-level check compiles to ONE conditional
-  * count inside a SINGLE aggregation over the data — adding checks adds
-  * agg expressions, never extra scans or shuffles (the aggregate is global,
-  * so Spark computes partials map-side and merges 32-ish tiny rows).
-  * Schema checks are plan-time only (no scan at all). The report comes
-  * back as a DataFrame so it can be persisted next to the data it
-  * describes, and gates compose with `require`.
+  * Design for 100 TB: every check compiles to a (violations, total) pair
+  * of columns inside a SINGLE global aggregation over the data — adding
+  * checks adds agg expressions, never extra scans or jobs (Spark computes
+  * partials map-side and merges 32-ish tiny rows; `Unique` adds the
+  * distinct-key exchange of its `count_distinct`). Schema checks are
+  * decided from the column names and enter that aggregate as literals.
+  * The report is a lazy DataFrame: building it runs nothing, so it can be
+  * persisted next to the data it describes, and gates compose with
+  * `require`.
   */
 object DataQuality {
 
@@ -35,63 +38,40 @@ object DataQuality {
 
   /** Evaluate all checks; returns
     * (check, col, violations, total, passed) — one row per check, ordered
-    * by (check, col) for determinism. */
+    * by (check, col) for determinism. Lazy: building the report runs no
+    * job. Each check is a (violations, total) pair in ONE global `agg`,
+    * unpivoted by `stack`; schema checks, and checks on absent columns
+    * (which FAIL as missing rather than crash the agg), are literal pairs
+    * in that same aggregate. */
   def report(df: DataFrame, checks: Seq[Check]): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
+    require(checks.nonEmpty, "report at least one check")
     val present = df.columns.toSet
-
-    // plan-time results (schema checks, and row-level checks on columns
-    // that don't exist — those FAIL as missing rather than crash the agg)
-    val planRows = checks.collect {
-      case HasColumn(c) =>
-        ("has_column", c, if (present(c)) 0L else 1L, 1L, present(c))
+    val n = count(lit(1))
+    def ref(c: String) = col(QuotingUtils.quoteIdentifier(c))
+    val pairs: Seq[(Column, Column)] = checks.map {
+      case HasColumn(c) => (lit(if (present(c)) 0L else 1L), lit(1L))
       case ck if ck.column.nonEmpty && !present(ck.column) =>
-        (ck.name, ck.column, 1L, 1L, false)
+        (lit(1L), lit(1L))
+      case NotNull(c) => (n - count(ref(c)), n)
+      case InRange(c, lo, hi) =>
+        (count(when(ref(c) < lo || ref(c) > hi, lit(1))), n)
+      case RowCount(min, max) =>
+        (when(n.between(min, max), lit(0L)).otherwise(lit(1L)), n)
+      // Σ(n−1) over each key's rows, nulls grouping as one key
+      case Unique(c) =>
+        (n - count_distinct(ref(c)) -
+          when(n > count(ref(c)), lit(1L)).otherwise(lit(0L)), n)
     }
-
-    val live = checks.filter(c =>
-      !c.isInstanceOf[HasColumn] && (c.column.isEmpty || present(c.column)))
-
-    val aggRows: Seq[(String, String, Long, Long, Boolean)] =
-      if (live.isEmpty) Seq.empty
-      else {
-        def cnt(pred: Column): Column =
-          sum(when(pred, lit(1L)).otherwise(lit(0L)))
-        val total = count(lit(1)).as("__total")
-        // Unique needs per-key counts, so it runs as its own (keyed,
-        // map-side-combined) aggregation; everything else shares one pass.
-        val scalarChecks = live.filter(!_.isInstanceOf[Unique])
-        val aggs = scalarChecks.zipWithIndex.map {
-          case (NotNull(c), i) => cnt(col(c).isNull).as(s"__v$i")
-          case (InRange(c, lo, hi), i) =>
-            cnt(col(c).isNotNull && (col(c) < lo || col(c) > hi)).as(s"__v$i")
-          case (RowCount(_, _), i) => lit(0L).as(s"__v$i")
-          case (ck, _) => throw new IllegalArgumentException(s"unhandled $ck")
-        }
-        val row =
-          if (scalarChecks.isEmpty) df.agg(total).collect()(0)
-          else df.agg(total, aggs: _*).collect()(0)
-        val n = row.getLong(0)
-        val scalarRows = scalarChecks.zipWithIndex.map {
-          case (RowCount(min, max), _) =>
-            val bad = if (n >= min && n <= max) 0L else 1L
-            ("row_count", "", bad, n, bad == 0L)
-          case (ck, i) =>
-            val v = if (row.isNullAt(i + 1)) 0L else row.getLong(i + 1)
-            (ck.name, ck.column, v, n, v == 0L)
-        }
-        val uniqueRows = live.collect { case Unique(c) =>
-          val dups = df.groupBy(col(c)).agg(count(lit(1)).as("__n"))
-            .filter(col("__n") > 1)
-            .agg(coalesce(sum(col("__n") - 1), lit(0L))).collect()(0).getLong(0)
-          ("unique", c, dups, n, dups == 0L)
-        }
-        scalarRows ++ uniqueRows
-      }
-
-    (planRows ++ aggRows)
-      .toDF("check", "col", "violations", "total", "passed")
+    val aggs = pairs.zipWithIndex.flatMap { case ((v, t), i) =>
+      Seq(v.as(s"v$i"), t.as(s"t$i"))
+    }
+    val rows = checks.zipWithIndex.flatMap { case (ck, i) =>
+      Seq(lit(ck.name), lit(ck.column), col(s"v$i"), col(s"t$i"))
+    }
+    df.agg(aggs.head, aggs.tail: _*)
+      .select(stack(lit(checks.size) +: rows: _*)
+        .as(Seq("check", "col", "violations", "total")))
+      .withColumn("passed", col("violations") === 0L)
       .orderBy("check", "col")
   }
 

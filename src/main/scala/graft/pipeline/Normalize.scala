@@ -1,7 +1,9 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.QuotingUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.TimestampType
 
 /** Schema normalization — the reference's fuzzy, runtime-discovered schema
   * contract (`scripts/transform.py:44-64`, `scripts/stock_predictor.py:42-64`)
@@ -22,7 +24,7 @@ import org.apache.spark.sql.functions._
   *    (`transform.py:63-64`).
   *
   * All name logic runs driver-side over `df.columns` (names, not data — no
-  * shuffle, no action); the data path is a single codegen'd projection.
+  * shuffle, no action); the data path is one `select` over the input.
   */
 object Normalize {
 
@@ -44,16 +46,6 @@ object Normalize {
     }
   }
 
-  /** Columns that matched a metric but LOST the last-wins tie-break. They
-    * must be dropped before renaming: if a loser's name is already exactly
-    * canonical (e.g. "Close" losing to "Adj Close"), renaming the winner
-    * would otherwise create a duplicate column name. */
-  private def loserColumns(cols: Seq[String]): Seq[String] = {
-    val winners = renameMap(cols).keySet
-    cols.filter(c =>
-      metrics.exists(m => c.toLowerCase.contains(m)) && !winners.contains(c))
-  }
-
   /** Null-on-failure timestamp parse; accepts the reference's two observed
     * shapes: "yyyy-MM-dd HH:mm:ss±hh:mm" (defect-6 tz-suffixed) and plain
     * "yyyy-MM-dd HH:mm:ss". */
@@ -63,38 +55,23 @@ object Normalize {
       try_to_timestamp(c, lit("yyyy-MM-dd HH:mm:ss")))
 
   /** Full normalization to the canonical inter-stage schema:
-    * Datetime timestamp, Open/High/Low/Close double, Volume long, symbol. */
+    * Datetime timestamp, Open/High/Low/Close double, Volume long, symbol.
+    * One `select` derived from the input's column names: a metric's
+    * losing columns are simply not selected, so a loser already named
+    * canonically (e.g. "Close" losing to "Adj Close") cannot collide. */
   def apply(df: DataFrame, symbol: Option[String] = None): DataFrame = {
-    val dtCol = df.columns.find(_.toLowerCase.contains("datetime"))
-    val withDt = dtCol match {
-      case Some(c) if df.schema(c).dataType ==
-          org.apache.spark.sql.types.TimestampType =>
-        df.withColumn("__Datetime", col(c))
-      case Some(c) => df.withColumn("__Datetime", parseTimestamp(col(c)))
-      case None => df
+    def ref(c: String) = col(QuotingUtils.quoteIdentifier(c))
+    val datetime = df.columns.find(_.toLowerCase.contains("datetime")).map {
+      case c if df.schema(c).dataType == TimestampType => ref(c)
+      case c => parseTimestamp(ref(c))
     }
-    val renames = renameMap(df.columns.toSeq)
-    val deduped = loserColumns(df.columns.toSeq).foldLeft(withDt)(_.drop(_))
-    val renamed = renames.foldLeft(deduped) { case (d, (orig, canon)) =>
-      d.withColumnRenamed(orig, canon)
+    val typed = renameMap(df.columns.toSeq).map { case (orig, canon) =>
+      canon -> ref(orig).cast(if (canon == "Volume") "long" else "double")
     }
-    val typed = renamed.columns.foldLeft(renamed) { (d, c) =>
-      c match {
-        case "Open" | "High" | "Low" | "Close" =>
-          d.withColumn(c, col(c).cast("double"))
-        case "Volume" => d.withColumn(c, col(c).cast("long"))
-        case _ => d
-      }
-    }
-    val dtFinal =
-      if (typed.columns.contains("__Datetime"))
-        typed.drop("Datetime").withColumnRenamed("__Datetime", "Datetime")
-      else typed
-    val withSym = (symbol, dtFinal.columns.contains("symbol")) match {
-      case (Some(s), false) => dtFinal.withColumn("symbol", lit(s))
-      case _ => dtFinal
-    }
-    val keep = canonicalOrder.filter(withSym.columns.contains)
-    withSym.select(keep.map(col): _*)
+    val sym =
+      if (df.columns.contains("symbol")) Some(col("symbol"))
+      else symbol.map(lit)
+    val out = typed ++ datetime.map("Datetime" -> _) ++ sym.map("symbol" -> _)
+    df.select(canonicalOrder.flatMap(c => out.get(c).map(_.as(c))): _*)
   }
 }

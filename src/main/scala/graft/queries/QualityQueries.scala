@@ -40,15 +40,13 @@ object QualityQueries extends QueryPack {
         df.join(broadcast(parent.select(col(pk).as(s"__pk$i"))),
           df(ck) === col(s"__pk$i"), "left")
     }
-    val aggs = count(lit(1)).as("n_child") +:
-      edges.indices.map(i =>
-        sum(col(s"__pk$i").isNull.cast("long")).as(s"__o$i"))
-    val stackArgs = edges.zipWithIndex
-      .map { case ((name, _, _, _), i) => s"'$name', __o$i" }
-      .mkString(", ")
-    joined.agg(aggs.head, aggs.tail: _*)
-      .select(
-        expr(s"stack(${edges.size}, $stackArgs) AS (fk_edge, n_orphan)"),
+    val aggs = edges.indices.map(i =>
+      sum(col(s"__pk$i").isNull.cast("long")).as(s"__o$i"))
+    val rows = edges.zipWithIndex.flatMap { case ((name, _, _, _), i) =>
+      Seq(lit(name), col(s"__o$i"))
+    }
+    joined.agg(count(lit(1)).as("n_child"), aggs: _*)
+      .select(stack(lit(edges.size) +: rows: _*).as(Seq("fk_edge", "n_orphan")),
         col("n_child"))
       .select("fk_edge", "n_child", "n_orphan")
   }

@@ -592,6 +592,9 @@ class PlanSpec extends SparkSuite {
       // recurs un-reused under tot/bar/jk, hence 5 bounded sites
       "q392_jackknife_day" -> 5L,
       "q64_tfidf" -> 1L,
+      // q66: the report's one global aggregate (every check's pair in one
+      // map-side-combined row, unpivoted after) — the q94_profile shape
+      "q66_quality_report" -> 1L,
       "q83_heavy_hitters" -> 1L,
       "q87_skew_report" -> 1L,
       "q88_funnel" -> 1L,

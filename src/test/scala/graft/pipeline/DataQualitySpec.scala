@@ -13,11 +13,11 @@ class DataQualitySpec extends SparkSuite {
     val s = spark
     import s.implicits._
     Seq(
-      (1L, Some("a"), 10.0),
-      (2L, None, 5.0),
-      (2L, Some("c"), -1.0),
-      (3L, Some("d"), 7.5)
-    ).toDF("id", "name", "score")
+      (1L, Some("a"), 10.0, Some("x")),
+      (2L, None, 5.0, Option.empty[String]),
+      (2L, Some("c"), -1.0, Some("x")),
+      (3L, Some("d"), 7.5, None)
+    ).toDF("id", "name", "score", "tag")
   }
 
   test("clean data passes every check") {
@@ -31,7 +31,8 @@ class DataQualitySpec extends SparkSuite {
   test("violations are counted per check") {
     val rep = report(fixture,
       Seq(NotNull("name"), InRange("score", 0, 100), Unique("id"),
-        RowCount(min = 10), HasColumn("nope"), NotNull("nope")))
+        RowCount(min = 10), HasColumn("nope"), NotNull("nope"),
+        Unique("tag")))
       .collect().map(r => (r.getString(0), r.getString(1)) ->
         (r.getLong(2), r.getBoolean(4))).toMap
     assert(rep(("not_null", "name")) == (1L, false))
@@ -40,6 +41,21 @@ class DataQualitySpec extends SparkSuite {
     assert(rep(("row_count", "")) == (1L, false)) // 4 rows < min 10
     assert(rep(("has_column", "nope")) == (1L, false))
     assert(rep(("not_null", "nope")) == (1L, false)) // missing → fails, no crash
+    // one extra "x", and the two nulls group as one key: one extra null
+    assert(rep(("unique", "tag")) == (2L, false))
+  }
+
+  test("building the report runs no job; collecting it runs the one plan") {
+    val checks = Seq(HasColumn("id"), HasColumn("nope"), NotNull("name"),
+      InRange("score", 0, 100), Unique("id"), RowCount(min = 1))
+    val df = fixture
+    assert(jobsOf { report(df, checks); () } == 0)
+    val rep = report(df, checks)
+    assert(rep.count() == checks.size)
+    assert(rep.select("check", "col").collect().toSeq.map(r =>
+      (r.getString(0), r.getString(1))) == Seq(("has_column", "id"),
+      ("has_column", "nope"), ("in_range", "score"), ("not_null", "name"),
+      ("row_count", ""), ("unique", "id")))
   }
 
   test("one aggregation pass: row-level checks do not multiply scans") {
@@ -104,5 +120,28 @@ class DataQualitySpec extends SparkSuite {
       .orderBy("fk_edge").collect()
     assert(rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       .toSeq == Seq(("c.fa->pa", 3L, 1L), ("c.fb->pb", 3L, 1L)))
+  }
+
+  test("fkAudit: an edge name holding a quote and a backtick is a label") {
+    val s = spark
+    import s.implicits._
+    val name = "child's `fk`->parent"
+    val row = graft.queries.QualityQueries
+      .fkEdge(name, Seq(Some(1L), Some(9L)).toDF("fk"), "fk",
+        Seq(1L).toDF("pk"), "pk")
+      .collect()(0)
+    assert((row.getString(0), row.getLong(1), row.getLong(2)) ==
+      (name, 2L, 1L))
+  }
+
+  test("Profile.profile: column names holding a quote or a backtick") {
+    val s = spark
+    import s.implicits._
+    val df = Seq((Some(1L), "a"), (None, "a"), (Some(2L), "b"))
+      .toDF("it's", "a`b")
+    val rows = graft.operators.Profile.profile(df, Seq("it's", "a`b"))
+      .collect().map(r =>
+        (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    assert(rows == Seq(("it's", 3L, 1L, 2L), ("a`b", 3L, 0L, 2L)))
   }
 }

@@ -24,6 +24,15 @@ class NormalizeSpec extends SparkSuite {
     val out = Normalize(df, Some("AAPL"))
     assert(out.columns.contains("Close"))
     assert(out.select("Close").head().getDouble(0) == 99.0)
+    // the datetime column also matches "close" and loses that tie-break:
+    // it still feeds Datetime, and Close comes from the winner
+    val dt = Seq(("2024-01-02 10:00:00", 99.0))
+      .toDF("close_datetime", "Close_AAPL")
+    val dtOut = Normalize(dt, Some("AAPL"))
+    assert(dtOut.columns.toSeq == Seq("Datetime", "Close", "symbol"))
+    val r = dtOut.head()
+    assert(r.getTimestamp(0).toInstant.toString == "2024-01-02T10:00:00Z")
+    assert(r.getDouble(1) == 99.0)
   }
 
   test("losing column already named canonically: no duplicate-column crash") {
@@ -44,6 +53,12 @@ class NormalizeSpec extends SparkSuite {
     assert(ts(0).contains("2024-01-02T15:00:00Z")) // offset honored → UTC
     assert(ts(1).contains("2024-01-02T10:00:00Z"))
     assert(ts(2).isEmpty) // strict=False → null, not error
+    // an already-parsed timestamp passes through as is
+    val stamped = Seq(Tuple1(java.sql.Timestamp.valueOf("2024-01-02 10:00:00")))
+      .toDF("Datetime")
+    val kept = Normalize(stamped, Some("X"))
+    assert(kept.schema("Datetime") == stamped.schema("Datetime"))
+    assert(kept.head().getTimestamp(0) == stamped.head().getTimestamp(0))
   }
 
   test("symbol literal added only when missing") {
